@@ -682,14 +682,15 @@ def pdf_encrypted_rc4(r: int = 2):
     return _finish_encrypted(b, enc, o, u, id0, text)
 
 
-def pdf_encrypted_aes():
+def pdf_encrypted_aes(font_extra: bytes = b""):
     """Genuinely AES-128-CBC-encrypted PDF (V4 /R 4 /StdCF CFM
     /AESV2, the post-Acrobat-7 default) with an EMPTY user password:
     stream and string payloads are IV || CBC ciphertext with PKCS#7
     padding, per-object keys carry the 'sAlT' marker (§7.6.2).
     Forward-encrypted here with the module's own FIPS-197-pinned
     primitive; deterministic per-object IVs keep the fixture bytes
-    stable."""
+    stable. ``font_extra`` is appended to the font dict verbatim
+    (not encrypted)."""
     import hashlib
 
     from pdf_parser_spark.kernel.crypt import PAD, aes128_cbc_encrypt, rc4
@@ -715,7 +716,7 @@ def pdf_encrypted_aes():
         return aes128_cbc_encrypt(objkey, iv, data)
 
     b = PdfBuilder()
-    _scaffold(b)
+    _scaffold(b, font_extra=font_extra)
     text = "aes secret text"
     content = b"BT /F1 12 Tf 72 720 Td " + lit(text) + b" Tj ET"
     b.add_stream(4, b"", enc_obj(4, content))

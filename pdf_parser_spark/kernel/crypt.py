@@ -272,12 +272,13 @@ class StandardDecryptor:
             raise UnsupportedEncryption("user password is not empty")
 
     def _init_v4(self, enc: PdfDict) -> None:
-        """V4 crypt filters, RC4 only (§7.6.5): /StmF and /StrF each
-        name /StdCF (decrypt that class) or /Identity — the DEFAULT
-        when absent — meaning that class is NOT encrypted. /StdCF
-        must be CFM /V2 (RC4) when referenced; AESV2 and custom
-        filter names are rejected. Returns the crypt-filter /Length
-        override in BITS (0 = not stated)."""
+        """V4 crypt filters (§7.6.5): /StmF and /StrF each name
+        /StdCF (decrypt that class) or /Identity — the DEFAULT when
+        absent — meaning that class is NOT encrypted. /StdCF must be
+        CFM /V2 (RC4) or /AESV2 (sets ``self.aes``) when referenced;
+        other methods and custom filter names are rejected. Stores
+        the crypt-filter /Length override in BITS in
+        ``self._v4_len_bits`` (0 = not stated)."""
         def class_flag(which: str) -> bool:
             name = enc.get(which)
             if name is None:
@@ -358,6 +359,10 @@ class StandardDecryptor:
     # -------------------------------------------------------- surface
 
     def decrypt_bytes(self, data: bytes, num: int, gen: int) -> bytes:
+        # writers store empty strings and streams as zero bytes, not
+        # as an IV plus one padding block
+        if not data:
+            return b""
         if self.aes:
             return aes128_cbc_decrypt(self.object_key(num, gen), data)
         return rc4(self.object_key(num, gen), data)

@@ -11,10 +11,15 @@ north_rule requirements implemented here:
   producing no duplicates (SURVEY.md §4.2)
 - df.observe() metrics: one-pass counts without a second scan
 
-At cluster scale the same code runs unchanged: the bucket column is the
-Iceberg partition key; output appends are per-bucket atomic (task
-retries within a bucket are idempotent because the whole bucket either
-commits to lineage or is reprocessed).
+Output is partitioned by run_id only; bucket is a stored data column.
+Atomicity comes from the lineage row, not the directory layout: a
+bucket's rows count only once a lineage row carries their
+(bucket, run_id) pair, so a retried or killed attempt either commits
+the whole bucket or leaves it to be reprocessed. At cluster scale the
+same code runs unchanged with an Iceberg partition spec of (run_id).
+An output directory written with the older (run_id, bucket) layout
+cannot be read together with new runs (Spark raises
+CONFLICTING_PARTITION_COLUMN_NAMES); point the job at a fresh one.
 """
 
 from __future__ import annotations
@@ -100,11 +105,14 @@ class ExtractionJob:
                       .otherwise(0)), F.lit(0)).alias("failures"),
         )
 
-        # run_id is the LEADING partition column: each run lands in its
+        # run_id is the ONLY partition column: each run lands in its
         # own directory, so the lineage read-back below partition-prunes
         # to this run's files instead of rescanning every historical
-        # run's output (at 10^12 turns that rescan is the whole corpus)
-        (observed.write.mode("append").partitionBy("run_id", "bucket")
+        # run's output (at 10^12 turns that rescan is the whole corpus).
+        # bucket stays a data column: no reader prunes on it, and
+        # partitioning on it would write one file per (task, bucket)
+        # pair instead of one per task.
+        (observed.write.mode("append").partitionBy("run_id")
          .parquet(self.output_dir))
         metrics = dict(obs.get)
 

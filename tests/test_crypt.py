@@ -95,6 +95,18 @@ def test_empty_password_aesv2_decrypts_to_golden():
     assert s.value == b"plain string"
 
 
+def test_aesv2_empty_string_decrypts_to_empty():
+    """A zero-length string in an AESV2 document is stored as ``()``,
+    with no IV and no padding block; it decrypts to b"" instead of
+    failing the whole document."""
+    from pdf_parser_spark.fixtures import pdf_encrypted_aes
+
+    pdf, golden = pdf_encrypted_aes(font_extra=b" /Name ()")
+    res = extract_text(pdf)
+    assert res["parse_error"] is None
+    assert res["text"] == golden["text"]
+
+
 def test_aes128_fips197_vector():
     """FIPS-197 Appendix C.1 — the AES primitive is pinned to the
     published vector independently of the fixtures (which

@@ -74,7 +74,7 @@ def test_line_dedup_matches_duckdb_oracle(spark):
 
     con = duckdb.connect()
     con.register("docs", pdf)
-    want = con.sql("""
+    want = con.sql(r"""
 WITH sp AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM docs),
 l AS (SELECT doc_id, i AS pos, ls[i + 1] AS line
       FROM sp, LATERAL (SELECT unnest(range(len(ls))) AS i) r),

@@ -3,6 +3,9 @@ salted mapInPandas extraction, join to goldens on (conv_id, turn_idx)
 and assert 100% per-turn text equality; then prove idempotent resume
 (partial run -> rerun -> complete output, no duplicates)."""
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -99,9 +102,10 @@ def test_job_resume_idempotent(spark, tmp_path):
 
 
 def test_lineage_readback_prunes_to_run(spark, tmp_path):
-    """run_id is a leading partition column: the lineage read-back for
+    """run_id is the only partition column: the lineage read-back for
     one run must partition-prune to that run's directory, not rescan
-    every historical run's output."""
+    every historical run's output, and each run writes at most one
+    file per write task (bucket is a stored column, not a directory)."""
     out_dir = str(tmp_path / "out")
     lin_dir = str(tmp_path / "lineage")
     turns = synthetic_turns(spark, N_CONVS)
@@ -112,10 +116,26 @@ def test_lineage_readback_prunes_to_run(spark, tmp_path):
     job.run(half, run_id="r1")
     job.run(turns, run_id="r2")
 
-    # on-disk layout: one subdirectory per run
-    import os
+    # on-disk layout: one subdirectory per run, no bucket= below it,
+    # at most one parquet file per write task
     subdirs = {d for d in os.listdir(out_dir) if d.startswith("run_id=")}
     assert subdirs == {"run_id=r1", "run_id=r2"}
+    for d in subdirs:
+        entries = os.listdir(os.path.join(out_dir, d))
+        assert not [e for e in entries if e.startswith("bucket=")], d
+        n_files = sum(e.endswith(".parquet") for e in entries)
+        assert 0 < n_files <= job.partitions, (d, n_files)
+
+    # bucket reads back as long, the type lineage and
+    # completed_buckets() carry
+    def bucket_type(df):
+        return df.schema["bucket"].dataType.simpleString()
+    assert bucket_type(job.read_output()) == "bigint"
+    assert bucket_type(spark.read.parquet(lin_dir)) == "bigint"
+    assert bucket_type(job.completed_buckets()) == "bigint"
+    assert bucket_type(ExtractionJob(
+        spark, str(tmp_path / "none"), str(tmp_path / "none_lin"))
+        .completed_buckets()) == "bigint"
 
     # the exact read-back frame job.run builds: filter must appear as a
     # PartitionFilter (file pruning), never a post-scan data filter
@@ -125,6 +145,35 @@ def test_lineage_readback_prunes_to_run(spark, tmp_path):
     assert "PartitionFilters" in plan
     start = plan.index("PartitionFilters")
     assert "run_id" in plan[start:start + 200]
+
+
+def test_killed_attempt_rows_stay_invisible(spark, tmp_path):
+    """A kill between the durable write and the lineage commit leaves
+    orphaned rows on disk; with no lineage row carrying their
+    (bucket, run_id) pair they never surface, and the next run
+    reprocesses their buckets exactly once."""
+    out_dir = str(tmp_path / "out")
+    lin_dir = str(tmp_path / "lineage")
+    turns = synthetic_turns(spark, N_CONVS).cache()
+    job = ExtractionJob(spark, out_dir, lin_dir, n_buckets=16, salt=2,
+                        partitions=8)
+    half = turns.withColumn(
+        "b", F.pmod(F.xxhash64("conv_id"), F.lit(16))).filter("b < 8").drop("b")
+    assert job.run(half, run_id="dead")["turns"] > 0
+    shutil.rmtree(lin_dir)      # the lineage commit never happened
+    assert job.completed_buckets().count() == 0
+
+    job.run(turns, run_id="live")
+    final = job.read_output()
+    assert final.filter(F.col("run_id") == "dead").count() == 0
+    keys = final.groupBy("conv_id", "turn_idx").count()
+    assert keys.filter("count != 1").count() == 0
+    assert keys.count() == turns.count()
+    assert (turns.select("conv_id", "turn_idx")
+            .exceptAll(final.select("conv_id", "turn_idx")).count() == 0)
+    # the orphans are still on disk: invisibility comes from lineage
+    assert os.path.isdir(os.path.join(out_dir, "run_id=dead"))
+    turns.unpersist()
 
 
 def test_extract_dedup_equals_direct(spark):
