@@ -184,14 +184,15 @@ _REGULAR_RUN_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
 _REGULAR_RUN1_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
 _HEX_RUN_RE = re.compile(rb"[0-9a-fA-F]*")
 _STR_SPECIAL_RE = re.compile(rb"[()\\]")
-# Content-mode master scanner: one alternation covering every common
-# content-stream token — ONE regex dispatch per token instead of an
-# if-chain plus per-branch regex (measured ~2x on the text-heavy
-# fixtures). The first alternative (whitespace/EOL/comment skip) has no
-# capture group, so m.lastindex is None for skips; rare/complex cases
-# (strings with escapes or nesting, malformed hex, stray delimiters)
-# don't match and fall back to branch code with byte-identical
-# semantics and error offsets.
+# Content-mode master scanner of the fused interpreter
+# (textops.ContentInterpreter.run): one alternation covering every
+# common content-stream token — ONE regex dispatch per token instead of
+# an if-chain plus per-branch regex. The first alternative
+# (whitespace/EOL/comment skip) has no capture group, so m.lastindex is
+# None for skips; rare/complex cases (strings with escapes or nesting,
+# malformed hex, stray delimiters) don't match and fall back to
+# _scan_literal_string / _fallback_error_kind, which keep
+# Lexer.tokenize's semantics and error offsets.
 _CM_RE = re.compile(
     rb"(?:[\x00\t\x0c ]|\r\n?|\n|%[^\r\n]*)*"         # leading skip
     rb"(?:([0-9+\-.]+)"                               # 1 number
@@ -205,12 +206,12 @@ _CM_RE = re.compile(
     rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"            # 9 operator run
     rb")?"                                            # always matches
 )
-# Object-mode master scanner: same shape, with the object-level
-# keywords as ordered alternatives (R fires on the single byte and obj
-# on the 3-byte prefix exactly like the general loop's byte checks;
-# keyword-end validation for endobj/null/true/false happens in the
-# handler). No operator-run fallback: anything else is an error, as in
-# the general loop.
+# Object-mode master scanner of the fused object parser
+# (_fused_parse_indirect): same shape, with the object-level keywords as
+# ordered alternatives (R fires on the single byte and obj on the 3-byte
+# prefix exactly like Lexer.tokenize's byte checks; keyword-end
+# validation for endobj/null/true/false happens in the handler). No
+# operator-run alternative: anything else bails to Lexer+Parser.
 _OM_RE = re.compile(
     rb"(?:[\x00\t\x0c ]|\r\n?|\n|%[^\r\n]*)*"         # leading skip
     rb"(?:([0-9+\-.]+)"                               # 1 number
@@ -241,10 +242,11 @@ class _FallbackErr(Exception):
 
 
 def _scan_literal_string(buf: bytes, i: int, n: int) -> tuple[bytes, int]:
-    """Shared fallback for all master-regex scanners: scan a literal
-    string WITH escapes or nesting starting at the '(' at ``i``;
-    returns (parsed value, index after ')'). Raises _FallbackErr on
-    truncation. One implementation — the content/object lexers and the
+    """Scan a literal string starting at the '(' at ``i``, jumping
+    between delimiters with a regex; escaped bytes are skipped in pairs
+    (the reference's prev_backslash toggle). Returns (parsed value,
+    index after ')'). Raises _FallbackErr on truncation. One
+    implementation — Lexer.tokenize, the fused object parser and the
     fused interpreter all call this (a diverged copy already caused a
     real bug once)."""
     j = i + 1
@@ -270,8 +272,9 @@ def _scan_literal_string(buf: bytes, i: int, n: int) -> tuple[bytes, int]:
 
 
 def _fallback_error_kind(buf: bytes, i: int, n: int) -> tuple[str, int]:
-    """Classify a non-string fallback byte exactly like the general
-    loop: returns (error kind, cursor position after any probing)."""
+    """Classify a non-string fallback byte exactly like
+    Lexer.tokenize: returns (error kind, cursor position after any
+    probing)."""
     b = buf[i]
     if b == 0x3C:                   # bad hex / truncation
         p = i + 1
@@ -318,348 +321,16 @@ class Lexer:
         self.has_ind_obj_start = False
         self.has_ind_obj_end = False
 
-    # -- cursor helpers (ref src/lexer.rs:246-286) ---------------------
-
-    def _confirm(self, kind: str, value: object = None) -> None:
-        self.tokens.append(
-            Token(kind, value, self.start_offset + self.token_head_i))
-        self.token_head_i = self.i
-
-    def _cancel(self) -> Token | None:
-        if self.tokens:
-            tok = self.tokens.pop()
-            self.token_head_i = tok.offset - self.start_offset
-            return tok
-        self.token_head_i = 0
-        return None
-
-    def _skip(self) -> None:
-        self.token_head_i = self.i
-
-    def _err(self, kind: str) -> LexerError:
-        return LexerError(kind, self.start_offset + self.token_head_i)
-
-    def _starts_with(self, kw: bytes) -> bool:
-        return self.buffer.startswith(kw, self.i)
-
-    def _expect_keyword_end(self, kw_len: int) -> None:
-        """After a keyword, the next byte must be absent or irregular
-        (ref src/lexer.rs:335-341)."""
-        j = self.i + kw_len
-        if j < len(self.buffer) and self.buffer[j] not in _IRREGULAR:
-            raise self._err("UndefinedKeyword")
-
     def has_unbalanced_indirectobj(self) -> bool:
         return self.has_ind_obj_start != self.has_ind_obj_end
 
     # -- main loop (ref src/lexer.rs:353-688) ---------------------------
 
     def tokenize(self) -> list[Token]:
-        if self.content_mode:
-            return self._tokenize_content()
-        return self._tokenize_object()
-
-    def _tokenize_object(self) -> list[Token]:
-        """Object-mode fast path: master-regex scan (_OM_RE). Token
-        streams, early-return semantics (endobj/stream), R/obj
-        backtracking, and error kinds/offsets are identical to
-        ``_tokenize_general`` — enforced by the hypothesis test
-        test_object_lexer_fast_equals_general on arbitrary bytes."""
-        buf = self.buffer
-        n = len(buf)
-        so = self.start_offset
-        tokens = self.tokens
-        append = tokens.append
-        master = _OM_RE.match
-        new = tuple.__new__
-        i = self.i
-        head = self.token_head_i
-        base = i
-
-        def err(kind: str) -> LexerError:
-            self.i, self.token_head_i = i, head
-            return LexerError(kind, so + head)
-
-        while i < n:
-            m = master(buf, i)
-            g = m.lastindex
-            if g is None:
-                e = m.end()
-                if e > i:              # whitespace / comment
-                    i = e
-                    head = i
-                    continue
-                head = i
-                if buf[i] == 0x28:     # string with escapes or nesting
-                    try:
-                        val, i = _scan_literal_string(buf, i, n)
-                    except _FallbackErr as fe:
-                        raise err(fe.kind) from None
-                    append(new(Token, (TK_STR, val, so + head)))
-                    head = i
-                    continue
-                kind, i = _fallback_error_kind(buf, i, n)
-                raise err(kind)
-
-            head = m.start(g)
-            i = m.end()
-            if g == 1:                 # number
-                s = m.group(1)
-                try:
-                    append(new(Token, (TK_INT, int(s), so + head)))
-                except ValueError:
-                    try:
-                        append(new(Token, (TK_REAL, float(s), so + head)))
-                    except ValueError:
-                        raise err("ParseNumber") from None
-            elif g == 2:               # name (group includes '/')
-                try:
-                    name = parse_name(m.group(2)[1:])
-                except ValueError:
-                    raise err("ParseName") from None
-                append(new(Token, (TK_NAME, name, so + head)))
-            elif g == 8:               # simple literal string
-                append(new(Token, (TK_STR, m.group(8)[1:-1], so + head)))
-            elif g == 5:               # hex string
-                try:
-                    val = parse_hex_string(m.group(5)[1:-1])
-                except ValueError:
-                    raise err("ParseHexString") from None
-                append(new(Token, (TK_HEXSTR, val, so + head)))
-            elif g == 3:
-                append(new(Token, (TK_DICT_START, None, so + head)))
-            elif g == 4:
-                append(new(Token, (TK_DICT_END, None, so + head)))
-            elif g == 6:
-                append(new(Token, (TK_ARR_START, None, so + head)))
-            elif g == 7:
-                append(new(Token, (TK_ARR_END, None, so + head)))
-            elif g == 9:               # 'R' indirect reference
-                if (len(tokens) >= 2 and tokens[-1].kind == TK_INT
-                        and tokens[-2].kind == TK_INT
-                        and tokens[-2].value > 0
-                        and tokens[-1].value >= 0):
-                    gen_tok = tokens.pop()
-                    obj_tok = tokens.pop()
-                    head = obj_tok.offset - so
-                    append(new(Token, (TK_IND_REF,
-                                       (obj_tok.value, gen_tok.value),
-                                       so + head)))
-                    head = i
-                else:
-                    if tokens:
-                        tokens.pop()
-                        if tokens:
-                            head = tokens.pop().offset - so
-                        else:
-                            head = base
-                    else:
-                        head = base
-                    raise err("InvalidIndirectRef")
-            elif g == 10:              # 'obj'
-                if (len(tokens) >= 2 and tokens[-1].kind == TK_INT
-                        and tokens[-2].kind == TK_INT
-                        and tokens[-2].value > 0
-                        and tokens[-1].value >= 0):
-                    gen_tok = tokens.pop()
-                    obj_tok = tokens.pop()
-                    head = obj_tok.offset - so
-                    append(new(Token, (TK_IND_OBJ_START,
-                                       (obj_tok.value, gen_tok.value),
-                                       so + head)))
-                    head = i
-                    self.has_ind_obj_start = True
-                else:
-                    if tokens:
-                        tokens.pop()
-                        if tokens:
-                            head = tokens.pop().offset - so
-                        else:
-                            head = base
-                    else:
-                        head = base
-                    raise err("InvalidIndirectObj")
-            elif g == 11:              # 'endobj' stops the lexer
-                if i < n and buf[i] not in _IRREGULAR:
-                    raise err("UndefinedKeyword")
-                append(new(Token, (TK_IND_OBJ_END, None, so + head)))
-                head = i
-                self.has_ind_obj_end = True
-                self.i, self.token_head_i = i, head
-                return tokens
-            elif g == 12:              # 'stream' records data offset
-                st = head
-                if n - (st + 5) < 3:
-                    raise err("ConfirmStream")
-                j = st + 6
-                if buf.startswith(b"\n", j):
-                    data_off = j + 1
-                elif buf.startswith(b"\r\n", j):
-                    data_off = j + 2
-                else:
-                    raise err("UnexpectedByte")
-                append(new(Token, (TK_IND_OBJ_END, None, so + head)))
-                self.has_ind_obj_end = True
-                i = data_off
-                # token offset = final EOL byte (data_off - 1), value =
-                # first data byte; pinned against the compiled reference
-                # in tests/test_reference_differential.py
-                append(new(Token, (TK_STREAM_START, so + data_off,
-                                   so + data_off - 1)))
-                self.i, self.token_head_i = i, i
-                return tokens
-            elif g == 13:              # null
-                if i < n and buf[i] not in _IRREGULAR:
-                    raise err("UndefinedKeyword")
-                append(new(Token, (TK_NULL, None, so + head)))
-            elif g == 14:              # true
-                if i < n and buf[i] not in _IRREGULAR:
-                    raise err("UndefinedKeyword")
-                append(new(Token, (TK_BOOL, True, so + head)))
-            else:                      # g == 15: false
-                if i < n and buf[i] not in _IRREGULAR:
-                    raise err("UndefinedKeyword")
-                append(new(Token, (TK_BOOL, False, so + head)))
-            head = i
-
-        self.i, self.token_head_i = i, head
-        return tokens
-
-    def _tokenize_content(self) -> list[Token]:
-        """Content-mode fast path: master-regex scan (see _CM_RE).
-        Token streams, offsets, and error kinds/offsets are identical
-        to the general loop's content_mode behaviour — asserted by the
-        lexer golden tests and tests/test_property.py equivalence."""
-        buf = self.buffer
-        n = len(buf)
-        so = self.start_offset
-        tokens = self.tokens
-        append = tokens.append
-        master = _CM_RE.match
-        new = tuple.__new__
-        i = self.i
-        head = self.token_head_i
-        # decoded-op memo: operator byte-runs repeat heavily (Tj/Td/TJ
-        # ...), so decode+keyword-classify once per distinct run
-        op_memo: dict[bytes, str] = {}
-
-        def err(kind: str) -> LexerError:
-            self.i, self.token_head_i = i, head
-            return LexerError(kind, so + head)
-
-        while i < n:
-            m = master(buf, i)
-            g = m.lastindex
-            if g is not None:
-                head = m.start(g)
-                i = m.end()
-                if g == 9:             # operator / keyword run
-                    raw = m.group(9)
-                    op = op_memo.get(raw)
-                    if op is None:
-                        op = raw.decode("latin-1")
-                        if op in ("true", "false", "null") or \
-                                op.startswith(("true", "false", "null")) \
-                                or op == "ID":
-                            op = None  # rare: classify out of line
-                        else:
-                            op_memo[raw] = op
-                    if op is not None:
-                        append(new(Token, (TK_OP, op, so + head)))
-                    else:
-                        op = raw.decode("latin-1")
-                        if op == "true":
-                            append(new(Token, (TK_BOOL, True, so + head)))
-                        elif op == "false":
-                            append(new(Token, (TK_BOOL, False, so + head)))
-                        elif op == "null":
-                            append(new(Token, (TK_NULL, None, so + head)))
-                        elif op == "ID":
-                            # inline image data until delimited 'EI'
-                            # (PDF 32000-1 §8.9.7); emit the data span
-                            # so image extraction can decode it
-                            k = buf.find(b"EI", i)
-                            while k != -1:
-                                before_ws = k == 0 or \
-                                    buf[k - 1] in _IRREGULAR
-                                after_ws = (k + 2 >= n) or \
-                                    (buf[k + 2] in _IRREGULAR)
-                                if before_ws and after_ws:
-                                    break
-                                k = buf.find(b"EI", k + 1)
-                            if k == -1:
-                                raise err("UnterminatedInlineImage")
-                            d0, d1 = _inline_span(buf, i, k)
-                            append(new(Token, (TK_INLINE_DATA,
-                                               (so + d0, so + d1),
-                                               so + head)))
-                            i = k + 2
-                        else:
-                            # keyword followed by regular bytes
-                            # (general loop's _expect_keyword_end)
-                            raise err("UndefinedKeyword")
-                elif g == 1:           # number
-                    s = m.group(1)
-                    try:
-                        append(new(Token, (TK_INT, int(s), so + head)))
-                    except ValueError:
-                        try:
-                            append(new(Token,
-                                       (TK_REAL, float(s), so + head)))
-                        except ValueError:
-                            raise err("ParseNumber") from None
-                elif g == 2:           # name (group includes the '/')
-                    try:
-                        name = parse_name(m.group(2)[1:])
-                    except ValueError:
-                        raise err("ParseName") from None
-                    append(new(Token, (TK_NAME, name, so + head)))
-                elif g == 8:           # simple literal string
-                    append(new(Token,
-                               (TK_STR, m.group(8)[1:-1], so + head)))
-                elif g == 5:           # hex string
-                    try:
-                        val = parse_hex_string(m.group(5)[1:-1])
-                    except ValueError:
-                        raise err("ParseHexString") from None
-                    append(new(Token, (TK_HEXSTR, val, so + head)))
-                elif g == 3:
-                    append(new(Token, (TK_DICT_START, None, so + head)))
-                elif g == 4:
-                    append(new(Token, (TK_DICT_END, None, so + head)))
-                elif g == 6:
-                    append(new(Token, (TK_ARR_START, None, so + head)))
-                else:  # g == 7
-                    append(new(Token, (TK_ARR_END, None, so + head)))
-                head = i
-                continue
-            if m.end() > i:            # pure whitespace/comment match
-                i = m.end()
-                head = i
-                continue
-
-            # fallback: escaped/nested strings and malformed input —
-            # shared scanner, byte-identical to the general loop
-            if buf[i] == 0x28:  # '(' with escapes or nesting
-                try:
-                    val, i = _scan_literal_string(buf, i, n)
-                except _FallbackErr as fe:
-                    raise err(fe.kind) from None
-                append(Token(TK_STR, val, so + head))
-                head = i
-                continue
-            kind, i = _fallback_error_kind(buf, i, n)
-            raise err(kind)
-
-        self.i, self.token_head_i = i, head
-        return tokens
-
-    def _tokenize_general(self) -> list[Token]:
-        # Hot loop: locals hoisted (attribute lookups dominate at this
-        # call volume); `i` is the cursor, `head` the current token
-        # start. self.i / self.token_head_i sync back on every exit so
-        # error offsets and the legacy helper API stay byte-identical
-        # to the original per-byte loop.
+        # Locals hoisted (attribute lookups dominate per byte); `i` is
+        # the cursor, `head` the current token start. self.i /
+        # self.token_head_i sync back on every exit so error offsets
+        # stay byte-identical to the reference's per-byte loop.
         buf = self.buffer
         n = len(buf)
         so = self.start_offset
@@ -748,34 +419,13 @@ class Lexer:
                 head = i
                 continue
 
-            # Literal string (ref :505-547): jump between delimiters
-            # with a regex instead of per-byte; escaped bytes are
-            # skipped in pairs, which is exactly the prev_backslash
-            # toggle of the original loop
+            # Literal string (ref :505-547): the shared scanner jumps
+            # between delimiters with a regex instead of per-byte
             if b == 0x28:  # '('
-                j = i + 1
-                depth = 0
-                while True:
-                    m = _STR_SPECIAL_RE.search(buf, j)
-                    if m is None:
-                        raise err("FinishInObject")
-                    k = m.start()
-                    c = buf[k]
-                    if c == 0x5C:           # backslash: skip escaped byte
-                        j = k + 2
-                        if j > n:
-                            raise err("FinishInObject")
-                    elif c == 0x28:
-                        depth += 1
-                        j = k + 1
-                    elif depth == 0:        # closing ')'
-                        i = k
-                        break
-                    else:
-                        depth -= 1
-                        j = k + 1
-                val = parse_string(buf[head + 1:i])
-                i += 1
+                try:
+                    val, i = _scan_literal_string(buf, i, n)
+                except _FallbackErr as fe:
+                    raise err(fe.kind) from None
                 append(Token(TK_STR, val, so + head))
                 head = i
                 continue

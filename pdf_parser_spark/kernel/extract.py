@@ -87,6 +87,6 @@ def extract_text(pdf_bytes: bytes, with_images: bool = False,
         result["parse_error"] = "encrypted"
     except (PdfStructureError, ParserError, LexerError, ImageError,
             AssertionError, ValueError, KeyError, IndexError,
-            TypeError, AttributeError, RecursionError) as e:
+            TypeError, AttributeError, RecursionError, OverflowError) as e:
         result["parse_error"] = f"{type(e).__name__}: {e}"
     return result

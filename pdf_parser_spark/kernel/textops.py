@@ -13,9 +13,11 @@ matrix and per-font encodings:
 - Reading order: spans sorted by (page, -y, x) with line grouping
   (SURVEY.md §2.8 convention)
 
-Content streams are tokenized by the same COS lexer the reference built
-for objects (ref src/lexer.rs:215-688) in ``content_mode`` — identical
-string/hex/number/name semantics, bare keywords become operators.
+Content streams are scanned by a fused interpreter (``ContentInterpreter.run``)
+that drives the operator dispatch straight from the content-mode master
+regex, without materialising tokens; its string/hex/number/name semantics
+and error kinds/offsets are those of ``cos.Lexer`` in ``content_mode``
+(ref src/lexer.rs:215-688), where bare keywords become operators.
 """
 
 from __future__ import annotations
@@ -255,7 +257,7 @@ def build_font(doc, name: str, font_dict) -> FontInfo:
                 info.to_unicode = mapping
                 if code_lens:
                     info.code_bytes = max(code_lens)
-            except (LexerError, Exception):
+            except Exception:
                 pass
 
     enc = fd.get("Encoding")
@@ -313,7 +315,11 @@ _EMPTY_FONT = FontInfo(name="")
 # the string must be the escape-free simple form (master group 8), the
 # operator must end at a delimiter (same regular-run rule as master
 # group 9), and inter-token skips reuse the master's exact
-# whitespace/EOL/comment element. Anything else falls back to the
+# whitespace/EOL/comment element, except that a comment must run to
+# the end of its line: the master regex never backtracks into a
+# comment, but the peephole must still match Td/Tj after it, so a bare
+# `%[^\r\n]*` would let `% (old) Tj` match as `%` + `(old) Tj` and
+# run a commented-out operator. Anything else falls back to the
 # per-token path byte-identically — a peephole miss costs one failed
 # match only at op boundaries (`boundary` flag in run()); a peephole
 # hit cannot change semantics because it appends-then-consumes exactly
@@ -321,7 +327,7 @@ _EMPTY_FONT = FontInfo(name="")
 # operand buffer exactly like the ladder's finally-clause.
 # Differentially pinned by test_property.py's fused-vs-token-loop
 # oracle (peep-adversarial shapes included in the sampled alphabet).
-_PEEP_WS = rb"(?:[\x00\t\x0c ]|\r\n?|\n|%[^\r\n]*)"
+_PEEP_WS = rb"(?:[\x00\t\x0c ]|\r\n?|\n|%[^\r\n]*(?![^\r\n]))"
 _PEEP_NUM = rb"[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)"
 _PEEP_RE = re.compile(
     _PEEP_WS + rb"*"
@@ -390,9 +396,6 @@ class ContentInterpreter:
         # out-of-line keyword/ID handling
         op_memo: dict[bytes, object] = {}
 
-        def lex_err(kind: str, off: int) -> LexerError:
-            return LexerError(kind, off)
-
         # peephole attempts only at op boundaries (start of stream or
         # just after an operator was dispatched) — mid-operand-run
         # attempts would fail anyway, this just skips their cost. A
@@ -437,11 +440,11 @@ class ContentInterpreter:
                     try:
                         val, i = _scan_literal_string(buf, i, n)
                     except _FallbackErr as fe:
-                        raise lex_err(fe.kind, start) from None
+                        raise LexerError(fe.kind, start) from None
                     operands_append((TK_STR, val))
                     continue
                 kind, i = _fallback_error_kind(buf, i, n)
-                raise lex_err(kind, start)
+                raise LexerError(kind, start)
             i = m.end()
             if g != 9:                 # operand token
                 boundary = False
@@ -453,7 +456,8 @@ class ContentInterpreter:
                         try:
                             operands_append((TK_REAL, float(s)))
                         except ValueError:
-                            raise lex_err("ParseNumber", m.start(1)) from None
+                            raise LexerError("ParseNumber",
+                                             m.start(1)) from None
                 elif g == 8:           # simple literal string
                     operands_append((TK_STR, m.group(8)[1:-1]))
                 elif g == 2:           # name
@@ -461,13 +465,14 @@ class ContentInterpreter:
                         operands_append((TK_NAME,
                                          parse_name(m.group(2)[1:])))
                     except ValueError:
-                        raise lex_err("ParseName", m.start(2)) from None
+                        raise LexerError("ParseName", m.start(2)) from None
                 elif g == 5:           # hex string
                     try:
                         operands_append(
                             (TK_HEXSTR, parse_hex_string(m.group(5)[1:-1])))
                     except ValueError:
-                        raise lex_err("ParseHexString", m.start(5)) from None
+                        raise LexerError("ParseHexString",
+                                         m.start(5)) from None
                 elif g == 3:
                     operands_append((TK_DICT_START, None))
                 elif g == 4:
@@ -517,12 +522,12 @@ class ContentInterpreter:
                             break
                         k = buf.find(b"EI", k + 1)
                     if k == -1:
-                        raise lex_err("UnterminatedInlineImage", m.start(9))
+                        raise LexerError("UnterminatedInlineImage", m.start(9))
                     i = k + 2
                     boundary = True
                     continue
                 # keyword (true/false/null) followed by regular bytes
-                raise lex_err("UndefinedKeyword", m.start(9))
+                raise LexerError("UndefinedKeyword", m.start(9))
 
             # ladder ordered by measured op frequency: text-heavy
             # content is ~98% Tj/Td (fixture corpus count 498/510 vs

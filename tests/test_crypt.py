@@ -133,6 +133,72 @@ def test_aes128_fips197_vector():
         aes128_cbc_decrypt(key, bytes(33))     # not block-aligned
 
 
+def test_aes128_cbc_matches_cryptography_library():
+    """Seeded differential of the from-scratch AES-128 against the
+    ``cryptography`` package: block encrypt/decrypt, PKCS#7-padded CBC
+    encryption (iv || ciphertext, the AESV2 layout) byte for byte,
+    and decryption of arbitrary block-aligned payloads, where a
+    bad-padding ValueError must coincide with the library's unpadder
+    rejecting the same plaintext."""
+    import random
+
+    from cryptography.hazmat.primitives import padding
+    from cryptography.hazmat.primitives.ciphers import (
+        Cipher, algorithms, modes,
+    )
+
+    from pdf_parser_spark.kernel.crypt import (
+        aes128_cbc_decrypt, aes128_cbc_encrypt,
+        aes128_decrypt_block, aes128_encrypt_block,
+    )
+
+    rng = random.Random(0xAE5)
+    for trial in range(48):
+        key = rng.randbytes(16)
+        iv = rng.randbytes(16)
+        block = rng.randbytes(16)
+        ecb = Cipher(algorithms.AES(key), modes.ECB())
+        lib_block = ecb.encryptor().update(block)
+        assert aes128_encrypt_block(key, block) == lib_block, trial
+        assert aes128_decrypt_block(key, block) == \
+            ecb.decryptor().update(block), trial
+
+        data = rng.randbytes(rng.choice([0, 1, 15, 16, 17, 31, 32,
+                                         rng.randrange(200)]))
+        padder = padding.PKCS7(128).padder()
+        padded = padder.update(data) + padder.finalize()
+        cbc = Cipher(algorithms.AES(key), modes.CBC(iv))
+        lib_ct = iv + cbc.encryptor().update(padded)
+        assert aes128_cbc_encrypt(key, iv, data) == lib_ct, trial
+        assert aes128_cbc_decrypt(key, lib_ct) == data, trial
+
+        # arbitrary iv || ciphertext; on even trials the byte before
+        # the last block is steered (CBC XORs it into the last
+        # plaintext byte) so the padding reads as a valid 0x01
+        payload = rng.randbytes(16 * rng.randrange(2, 6))
+
+        def lib_raw(p: bytes) -> bytes:
+            return Cipher(algorithms.AES(key), modes.CBC(p[:16])) \
+                .decryptor().update(p[16:])
+
+        if trial % 2 == 0:
+            k = len(payload) - 17
+            steer = payload[k] ^ lib_raw(payload)[-1] ^ 1
+            payload = payload[:k] + bytes([steer]) + payload[k + 1:]
+        unpadder = padding.PKCS7(128).unpadder()
+        try:
+            want = unpadder.update(lib_raw(payload)) + unpadder.finalize()
+        except ValueError:
+            want = None
+        try:
+            got = aes128_cbc_decrypt(key, payload)
+        except ValueError:
+            got = None
+        assert got == want, trial
+        if trial % 2 == 0:
+            assert want is not None, trial
+
+
 def test_aes_corrupted_payload_is_parse_error_not_mojibake():
     """Flipping ciphertext bytes must surface a parse_error row (bad
     CBC padding), never silently emit garbled text."""

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -140,3 +141,38 @@ def test_objstm_lying_offset_table_retries_unbounded():
     assert out[1].get("A").value == 1
     assert out[1].get("B").value == 2
     assert isinstance(out[2], PdfInteger) and out[2].value == 1
+
+_HUGE = b"9" * 400   # int() parses it; float(int) overflows
+
+
+@pytest.mark.parametrize("ops", [
+    b"BT [(a) -" + _HUGE + b" (b)] TJ ET",
+    _HUGE + b" 0 0 1 0 0 cm BT (a) Tj ET",
+    b"BT " + _HUGE + b" TL T* (a) Tj ET",
+    b"BT " + _HUGE + b" 0 0 1 0 0 Tm (a) Tj ET",
+    b"BT 0 -" + _HUGE + b" TD (a) Tj ET",
+    b"BT 0 0 " + _HUGE + b" Td (a) Tj ET",
+    b"BT /F1 " + _HUGE + b" Tf (a) Tj ET",
+], ids=["TJ", "cm", "TL", "Tm", "TD", "Td", "Tf"])
+def test_hostile_number_operand_yields_error_row(ops):
+    """A numeric operand too large for a float must not escape the
+    kernel: the Arrow batch kernel still emits exactly one row, with
+    the overflow recorded in parse_error."""
+    import pyarrow as pa
+
+    from pdf_parser_spark.fixtures import PdfBuilder, _scaffold
+    from pdf_parser_spark.operators.extraction import _extract_batches
+
+    b = PdfBuilder()
+    _scaffold(b)
+    b.add_stream(4, b"", ops)
+    pdf = b.build()
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["c"]), pa.array([0], pa.int64()),
+         pa.array([pdf.decode("latin-1")])],
+        names=["conv_id", "turn_idx", "text"])
+    out = list(_extract_batches(iter([batch])))
+    rows = [r for ob in out for r in ob.to_pylist()]
+    assert len(rows) == 1
+    assert rows[0]["parse_error"] is not None
+    assert rows[0]["parse_error"].startswith("OverflowError")
