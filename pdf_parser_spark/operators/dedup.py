@@ -7,17 +7,19 @@ path), so the plans whole-stage-codegen and scale by partitioning:
 - exact dedup:        hash-groupBy on a content digest (one shuffle on
                       the digest; map-side partial agg applies)
 - minhash + LSH:      shingle -> 64 hash perms -> band buckets ->
-                      self-join on (band, bucket). The only shuffle is
-                      the bucket join; bands make it sub-quadratic.
+                      groupBy (band, bucket) + in-bucket pair
+                      expansion; bands keep the buckets tiny.
 - simhash:            64-bit sign-sum of token hashes, computed with
-                      aggregate/transform (codegen), bucketed by the
-                      top-k bits for candidate pairing
+                      aggregate/transform (codegen), grouped by
+                      Manku permuted band-table keys for candidates
 - n-gram jaccard:     exact pairwise similarity on LSH candidates only
 - embedding cosine:   near-dup by cosine >= threshold on LSH-candidate
                       or block-joined pairs
 
-All functions return DataFrames and are deterministic (xxhash64-based,
-no RNG), so DuckDB oracles can replicate the SQL-expressible ones.
+All functions return DataFrames and are deterministic (no RNG). The
+MinHash and SimHash pipelines take their hashes from a ``LaneHash``
+family: ``XXHASH64`` for scale, ``MD5`` so DuckDB oracles can replicate
+the same pipelines cell-for-cell.
 
 Literature: MinHash resemblance sketches (Broder, "On the resemblance
 and containment of documents", SEQUENCES 1997); LSH banding (Indyk &
@@ -28,6 +30,9 @@ near-duplicates for web crawling", WWW 2007).
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -77,6 +82,49 @@ def shingles(text: Column, k: int = 5) -> Column:
         .otherwise(F.array(F.concat_ws(" ", words))))
 
 
+# ------------------------------------------------------------ hash family
+
+@dataclass(frozen=True)
+class LaneHash:
+    """Every hash the MinHash and SimHash pipelines compute, so one
+    pipeline runs both the xxhash64 scale family and the md5 family
+    DuckDB can replicate. ``lane(s, i)`` is MinHash lane i of shingle
+    s, and ``top`` a literal above every lane value (the fold's start);
+    ``band_key`` hashes a band's joined lane values; ``token(w)`` is
+    the SimHash token hash and ``votes(h, masks)`` its +1/-1 vote per
+    fingerprint bit (masks[i] = 1 << i), for at most ``bits`` bits."""
+    lane: Callable[[Column, Column], Column]
+    top: int | str
+    band_key: Callable[[Column], Column]
+    token: Callable[[Column], Column]
+    votes: Callable[[Column, Column], Column]
+    bits: int
+
+
+# The scale family; no DuckDB analogue.
+XXHASH64 = LaneHash(
+    lane=lambda s, i: F.xxhash64(s, i),
+    top=0x7FFFFFFFFFFFFFFF,
+    band_key=F.xxhash64,
+    token=lambda w: F.xxhash64(w),
+    votes=lambda h, masks: F.transform(masks, lambda m: F.when(
+        h.bitwiseAND(m) != 0, 1).otherwise(-1)),
+    bits=64)
+
+# md5(i || ':' || s) hex lanes, minimised lexicographically ('g' sorts
+# above every hex digit); token bit i = (hex digit i of md5(w) >= '8').
+# Slower than xxhash64; it lets dd07/dd09 check the scale pipelines
+# cell-for-cell against DuckDB.
+MD5 = LaneHash(
+    lane=lambda s, i: F.md5(F.concat(i.cast("string"), F.lit(":"), s)),
+    top="g",
+    band_key=F.md5,
+    token=lambda w: F.md5(w),
+    votes=lambda h, masks: F.transform(masks, lambda m, i: F.when(
+        F.substr(h, i + 1, F.lit(1)) >= "8", 1).otherwise(-1)),
+    bits=32)
+
+
 # ------------------------------------------------------------ minhash/LSH
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
@@ -90,24 +138,24 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
 
 
 def signatures_from_shingles(sh: DataFrame, id_col: str = "doc_id",
-                             num_perm: int = 64) -> DataFrame:
+                             num_perm: int = 64,
+                             family: LaneHash = XXHASH64) -> DataFrame:
     """Signatures from a pre-shingled (id, sh array<string>) frame.
 
     ONE aggregate pass: fold over shingles, keeping the element-wise
     minimum of each shingle's num_perm hash lanes
-    (xxhash64(shingle, lane)). A num_perm-column projection of
+    (``family.lane(shingle, lane)``). A num_perm-column projection of
     array_min(transform(...)) lanes blows Spark's codegen method-size
     limit into interpreted evaluation (~10x slower measured); this
     compact single expression stays codegen'd. Same work, same values
     (lane seeds hash identically as literals or sequence elements).
     """
-    max_long = F.lit(0x7FFFFFFFFFFFFFFF).cast("long")
     lanes_of = lambda s: F.transform(  # noqa: E731
         F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda i: F.xxhash64(s, i))
+        lambda i: family.lane(s, i))
     sig = F.aggregate(
         F.col("sh"),
-        F.array_repeat(max_long, num_perm),
+        F.array_repeat(F.lit(family.top), num_perm),
         lambda acc, s: F.zip_with(acc, lanes_of(s),
                                   lambda a, h: F.least(a, h)),
     )
@@ -125,10 +173,32 @@ def signatures_from_shingles(sh: DataFrame, id_col: str = "doc_id",
 MAX_BUCKET_DEFAULT = 256
 
 
+def _bucket_pairs(keyed: DataFrame, keys: list[str], member: Column,
+                  max_bucket: int | None) -> DataFrame:
+    """Group ``keyed`` by ``keys`` and expand every bucket into its
+    member pairs: one row per pair, ``p`` = struct(a, b) with a < b in
+    the sorted member order. Buckets over ``max_bucket`` members are
+    dropped before the quadratic expansion (``None`` keeps all)."""
+    n = F.size(F.col("ms"))
+    pairs = F.flatten(F.transform(
+        F.sequence(F.lit(0), n - 2),
+        lambda i: F.transform(
+            F.slice(F.col("ms"), i + 2, n),
+            lambda x: F.struct(
+                F.element_at(F.col("ms"), (i + 1).cast("int")).alias("a"),
+                x.alias("b")))))
+    grouped = (keyed.groupBy(*keys)
+               .agg(F.array_sort(F.collect_list(member)).alias("ms"))
+               .filter(F.size("ms") > 1))
+    if max_bucket is not None:
+        grouped = grouped.filter(F.size("ms") <= max_bucket)
+    return grouped.select(F.explode(pairs).alias("p"))
+
+
 def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
                         bands: int = 16, rows_per_band: int = 4,
-                        max_bucket: int | None = MAX_BUCKET_DEFAULT
-                        ) -> DataFrame:
+                        max_bucket: int | None = MAX_BUCKET_DEFAULT,
+                        family: LaneHash = XXHASH64) -> DataFrame:
     """Band the signature, bucket the ids, expand in-bucket pairs.
     Returns distinct candidate (a, b) pairs with a < b.
 
@@ -159,32 +229,19 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     a count+join pre-pass (an extra shuffle) on every healthy run;
     the linear buffer is the cheaper risk.
     """
-    banded = _banded(signatures, id_col, bands, rows_per_band)
-    ids = F.array_sort(F.collect_list(id_col))
-    n = F.size(F.col("ids"))
-    pairs = F.flatten(F.transform(
-        F.sequence(F.lit(0), n - 2),
-        lambda i: F.transform(
-            F.slice(F.col("ids"), i + 2, n),
-            lambda x: F.struct(
-                F.element_at(F.col("ids"), (i + 1).cast("int")).alias("a"),
-                x.alias("b")))))
-    grouped = (banded.groupBy("band", "bucket").agg(ids.alias("ids"))
-               .filter(F.size("ids") > 1))
-    if max_bucket is not None:
-        grouped = grouped.filter(F.size("ids") <= max_bucket)
-    return (grouped
-            .select(F.explode(pairs).alias("p"))
+    banded = _banded(signatures, id_col, bands, rows_per_band, family)
+    return (_bucket_pairs(banded, ["band", "bucket"], F.col(id_col),
+                          max_bucket)
             .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
             .distinct())
 
 
 def _banded(signatures: DataFrame, id_col: str, bands: int,
-            rows_per_band: int) -> DataFrame:
+            rows_per_band: int, family: LaneHash) -> DataFrame:
     return signatures.select(
         id_col,
         F.posexplode(F.array(*[
-            F.xxhash64(F.concat_ws(
+            family.band_key(F.concat_ws(
                 ",", *[F.element_at("signature", b * rows_per_band + r + 1)
                        .cast("string") for r in range(rows_per_band)]))
             for b in range(bands)
@@ -193,11 +250,12 @@ def _banded(signatures: DataFrame, id_col: str, bands: int,
 
 def oversized_buckets(signatures: DataFrame, id_col: str = "doc_id",
                       bands: int = 16, rows_per_band: int = 4,
-                      max_bucket: int = MAX_BUCKET_DEFAULT) -> DataFrame:
+                      max_bucket: int = MAX_BUCKET_DEFAULT,
+                      family: LaneHash = XXHASH64) -> DataFrame:
     """Accounting face of the giant-bucket guard: the (band, bucket,
     n) groups ``lsh_candidate_pairs`` drops at the same parameters.
     Count/aggregate is a cheap slim-row groupBy (no collect_list)."""
-    return (_banded(signatures, id_col, bands, rows_per_band)
+    return (_banded(signatures, id_col, bands, rows_per_band, family)
             .groupBy("band", "bucket")
             .agg(F.count(F.lit(1)).alias("n"))
             .filter(F.col("n") > max_bucket))
@@ -207,23 +265,23 @@ def minhash_dedup_pairs(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", num_perm: int = 64,
                         k: int = 5, bands: int = 16,
                         threshold: float = 0.7,
-                        max_bucket: int | None = MAX_BUCKET_DEFAULT
-                        ) -> DataFrame:
+                        max_bucket: int | None = MAX_BUCKET_DEFAULT,
+                        family: LaneHash = XXHASH64) -> DataFrame:
     """Full near-dup pipeline: signatures -> LSH candidates -> exact
     jaccard verification on candidates only.
 
-    The shingle frame is shared by signatures (64 hash lanes over the
-    materialized array) and the verification join. Deliberately NOT
-    cached: repeated invocations would each leak a cached copy, and
-    with the two-phase projection re-shingling costs a fraction of a
-    second — cheaper than cache-memory churn.
+    The shingle frame is shared by signatures (num_perm hash lanes
+    over the materialized array) and the verification join.
+    Deliberately NOT cached: repeated invocations would each leak a
+    cached copy, and with the two-phase projection re-shingling costs a
+    fraction of a second — cheaper than cache-memory churn.
     """
     rows_per_band = num_perm // bands
     sh = docs.select(F.col(id_col),
                      shingles(F.col(text_col), k).alias("sh"))
-    sigs = signatures_from_shingles(sh, id_col, num_perm)
+    sigs = signatures_from_shingles(sh, id_col, num_perm, family)
     cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band,
-                                max_bucket=max_bucket)
+                                max_bucket, family)
     # verify join does ONE pass over sh (melt the pair to two keyed
     # rows, join, fold back) — joining sh once per side would scan and
     # re-shingle the whole corpus twice
@@ -247,34 +305,33 @@ def minhash_dedup_pairs(docs: DataFrame, text_col: str = "text",
 # ----------------------------------------------------------------- simhash
 
 def simhash(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash over word tokens: per bit, sign of the sum of
-    token-hash bits. Pure aggregate/transform expressions (codegen)."""
-    # Compact two-aggregate formulation: 64 parallel bit-sums in one
+            id_col: str = "doc_id", bits: int = 64,
+            family: LaneHash = XXHASH64) -> DataFrame:
+    """``bits``-bit SimHash over word tokens, as a long: per bit, sign
+    of the sum of the tokens' ``family.votes``. Pure aggregate/transform
+    expressions (codegen)."""
+    if bits > family.bits:
+        raise ValueError(f"this family gives at most {family.bits} bits")
+    # Compact two-aggregate formulation: the parallel bit-sums in one
     # counters array (a 64-column projection of separate aggregates
     # blows the codegen method-size limit into interpreted eval), then
-    # sign bits OR'd by a fold over the lane indices. shiftleft handles
-    # bit 63 (1<<63 overflows a Java long literal).
+    # sign bits OR'd by a fold over the lane indices. Literal mask
+    # array: bit i = 1<<i; bit 63 is the sign bit, -(2^63) as a long.
     zero = F.lit(0).cast("long")
-    # literal mask array: bit i = 1<<i; bit 63 is the sign bit, i.e.
-    # -(2^63) as a two's-complement long
     masks = F.array(*[
         F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long")
-        for i in range(64)
+        for i in range(bits)
     ])
     hashed = docs.select(
         F.col(id_col),
         F.transform(F.split(F.trim(_normalize(F.col(text_col))), " "),
-                    lambda w: F.xxhash64(w)).alias("hashes"),
+                    family.token).alias("hashes"),
         masks.alias("masks"))
     counters = F.aggregate(
         F.col("hashes"),
-        F.array_repeat(F.lit(0), 64),
+        F.array_repeat(F.lit(0), bits),
         lambda acc, h: F.zip_with(
-            acc,
-            F.transform(F.col("masks"), lambda m: F.when(
-                h.bitwiseAND(m) != 0, F.lit(1)).otherwise(F.lit(-1))),
-            lambda a, b: a + b),
+            acc, family.votes(h, F.col("masks")), lambda a, b: a + b),
     )
     counted = hashed.select(F.col(id_col), F.col("masks"),
                             counters.alias("counters"))
@@ -286,7 +343,7 @@ def simhash(docs: DataFrame, text_col: str = "text",
 
 
 def _simhash_tabbed(sim: DataFrame, id_col: str, bands: int,
-                    max_hamming: int) -> DataFrame:
+                    max_hamming: int, bits: int) -> DataFrame:
     """(id, simhash, tbl, key) rows of the Manku permuted band tables —
     shared by candidate generation and the oversized-bucket accounting
     so both see EXACTLY the same keys."""
@@ -295,9 +352,9 @@ def _simhash_tabbed(sim: DataFrame, id_col: str, bands: int,
     if not 1 <= max_hamming <= bands - 1:
         raise ValueError("need 1 <= max_hamming <= bands - 1 "
                          "(recall guarantee is pigeonhole over bands)")
-    if 64 % bands != 0:
-        raise ValueError("bands must divide 64")
-    width = 64 // bands
+    if bits % bands != 0:
+        raise ValueError("bands must divide bits")
+    width = bits // bands
     t = bands - max_hamming
     combos = list(combinations(range(bands), t))
     if len(combos) > 64:
@@ -305,10 +362,9 @@ def _simhash_tabbed(sim: DataFrame, id_col: str, bands: int,
             f"C({bands},{t})={len(combos)} tables — raise bands only "
             "with a smaller max_hamming (row inflation = table count)")
 
-    def band_val(i: int) -> Column:
+    def band_val(i: int) -> Column:  # width <= bits / 2: no overflow
         return (F.shiftrightunsigned("simhash", i * width)
-                .bitwiseAND(F.lit((1 << width) - 1) if width < 64
-                            else F.lit(-1).cast("long")))
+                .bitwiseAND(F.lit((1 << width) - 1)))
 
     keys = [F.xxhash64(F.lit(ci), *[band_val(i) for i in combo])
             for ci, combo in enumerate(combos)]
@@ -319,15 +375,15 @@ def _simhash_tabbed(sim: DataFrame, id_col: str, bands: int,
 
 def simhash_oversized_buckets(sim: DataFrame, id_col: str = "doc_id",
                               bands: int = 4, max_hamming: int = 3,
-                              max_bucket: int = MAX_BUCKET_DEFAULT
-                              ) -> DataFrame:
+                              max_bucket: int = MAX_BUCKET_DEFAULT,
+                              bits: int = 64) -> DataFrame:
     """Accounting face of ``simhash_candidates``' giant-bucket guard
     (the ``oversized_buckets`` analogue for the Manku permuted tables):
     the (tbl, key, n) groups dropped at the same parameters, so dropped
     fingerprint masses are observable/alertable in production instead
     of silently weakening the exact-recall guarantee. Cheap slim-row
     groupBy count — no collect_list."""
-    return (_simhash_tabbed(sim, id_col, bands, max_hamming)
+    return (_simhash_tabbed(sim, id_col, bands, max_hamming, bits)
             .groupBy("tbl", "key")
             .agg(F.count(F.lit(1)).alias("n"))
             .filter(F.col("n") > max_bucket))
@@ -335,26 +391,26 @@ def simhash_oversized_buckets(sim: DataFrame, id_col: str = "doc_id",
 
 def simhash_candidates(sim: DataFrame, id_col: str = "doc_id",
                        bands: int = 4, max_hamming: int = 3,
-                       max_bucket: int | None = MAX_BUCKET_DEFAULT
-                       ) -> DataFrame:
+                       max_bucket: int | None = MAX_BUCKET_DEFAULT,
+                       bits: int = 64) -> DataFrame:
     """Hamming-neighbour pairs via Manku-style permuted band tables
     (Manku/Jain/Das Sarma, WWW 2007) with EXACT results: every pair at
     Hamming distance <= max_hamming is returned, no false positives.
 
-    The 64-bit fingerprint is split into ``bands`` equal bit-bands.
-    A pair at distance h <= max_hamming has at most h dirty bands, so
-    at least ``bands - max_hamming`` bands are identical — every
-    combination of t = bands - max_hamming bands becomes one table's
-    key, and some table's key is guaranteed clean for the pair
+    The ``bits``-bit fingerprint is split into ``bands`` equal
+    bit-bands. A pair at distance h <= max_hamming has at most h dirty
+    bands, so at least ``bands - max_hamming`` bands are identical —
+    every combination of t = bands - max_hamming bands becomes one
+    table's key, and some table's key is guaranteed clean for the pair
     (pigeonhole). Candidates are verified with bit_count(xor), making
     the blocked result IDENTICAL to the quadratic all-pairs join.
 
     Scale: C(bands, t) tables x one row each = bounded row inflation
-    of small (id, key) rows; the self-join shuffles on (table, key)
-    whose values are xxhash64-uniform — no hot blocks, never
-    quadratic (vs the old single 8-bit prefix block: 256 blocks over
-    10^12 docs is ~4e9 docs per block AND misses any pair with a
-    prefix-bit flip).
+    of slim (tbl, key, id, simhash) rows; the groupBy shuffles on
+    (table, key), whose values are xxhash64-uniform — no hot blocks,
+    never quadratic in the corpus. A self-join would evaluate the
+    fingerprint pipeline once PER SIDE; here the (id, simhash) structs
+    ride into the bucket, so the Hamming verify needs no join back.
 
     ``max_bucket`` is the same giant-bucket guard as
     ``lsh_candidate_pairs``: a table key shared by more than
@@ -367,36 +423,15 @@ def simhash_candidates(sim: DataFrame, id_col: str = "doc_id",
     ``simhash_oversized_buckets`` (same table keys by construction)
     to observe/alert on whatever the guard drops.
     """
-    tabbed = _simhash_tabbed(sim, id_col, bands, max_hamming)
-    # groupBy + in-bucket pair expansion, not a self-join: a self-join
-    # evaluates the fingerprint pipeline once PER SIDE (the dd03
-    # lesson); here only slim (tbl, key, id, simhash) rows shuffle,
-    # and the (id, simhash) structs ride into the bucket so the
-    # Hamming verify needs no join back
-    members = F.array_sort(
-        F.collect_list(F.struct(F.col(id_col).alias("i"),
-                                F.col("simhash").alias("s"))))
-    n = F.size(F.col("ms"))
-    pairs = F.flatten(F.transform(
-        F.sequence(F.lit(0), n - 2),
-        lambda i: F.transform(
-            F.slice(F.col("ms"), i + 2, n),
-            lambda x: F.struct(
-                F.element_at(F.col("ms"), (i + 1).cast("int"))
-                .alias("a"), x.alias("b")))))
-    grouped = (tabbed.groupBy("tbl", "key").agg(members.alias("ms"))
-               .filter(F.size("ms") > 1))
-    if max_bucket is not None:
-        grouped = grouped.filter(F.size("ms") <= max_bucket)
-    expanded = grouped.select(F.explode(pairs).alias("p"))
+    tabbed = _simhash_tabbed(sim, id_col, bands, max_hamming, bits)
+    member = F.struct(F.col(id_col).alias("i"), F.col("simhash").alias("s"))
     xor = F.col("p.a.s").bitwiseXOR(F.col("p.b.s"))
-    return (expanded
+    return (_bucket_pairs(tabbed, ["tbl", "key"], member, max_bucket)
             .withColumn("hamming", F.bit_count(xor))
             .filter(F.col("hamming") <= max_hamming)
             .select(F.col("p.a.i").alias("a"),
                     F.col("p.b.i").alias("b"), "hamming")
             .distinct())
-
 
 # --------------------------------------------------- embedding near-dup
 
@@ -501,143 +536,6 @@ def embedding_srp_pairs(emb: DataFrame, id_col: str = "vec_id",
             .filter(F.col("cosine") >= threshold)
             .select(F.col(f"a.{id_col}").alias("a"),
                     F.col(f"b.{id_col}").alias("b"), "cosine")
-            .distinct())
-
-
-# ------------------------------------------- md5 MinHash (oracle twin)
-
-def minhash_md5_pairs(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", num_perm: int = 16,
-                      k: int = 5, bands: int = 4,
-                      threshold: float = 0.5) -> DataFrame:
-    """MinHash+LSH with md5-string lanes — the cross-engine-verifiable
-    twin of ``minhash_dedup_pairs``.
-
-    xxhash64 (the fast path's permutation family) has no DuckDB
-    analogue, so dd03 is rows-only checked. This variant keeps the
-    EXACT pipeline shape (shingles -> per-lane min -> banded buckets ->
-    candidate join -> exact-jaccard verify) but derives lane values as
-    md5(lane || ':' || shingle) hex strings, minimised
-    lexicographically — a valid permutation family available in both
-    engines, so the whole LSH pipeline is cell-exact oracle-checked
-    (dd07). Slower than xxhash64 (md5 per lane per shingle); it exists
-    to pin dd03's semantics, not to replace it at scale.
-    """
-    rows_per_band = num_perm // bands
-    sh = docs.select(F.col(id_col),
-                     shingles(F.col(text_col), k).alias("sh"))
-    # one fold, element-wise lexicographic min of the lane vector;
-    # 'g' > any md5 hex char, so it is a safe +infinity sentinel
-    lanes_of = lambda s: F.transform(  # noqa: E731
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda i: F.md5(F.concat(i.cast("string"), F.lit(":"), s)))
-    sig = F.aggregate(
-        F.col("sh"),
-        F.array_repeat(F.lit("g"), num_perm),
-        lambda acc, s: F.zip_with(acc, lanes_of(s),
-                                  lambda a, h: F.least(a, h)))
-    sigs = sh.select(F.col(id_col), sig.alias("signature"))
-    banded = sigs.select(
-        id_col,
-        F.posexplode(F.array(*[
-            F.md5(F.concat_ws(",", *[
-                F.element_at("signature", b * rows_per_band + r + 1)
-                for r in range(rows_per_band)]))
-            for b in range(bands)
-        ])).alias("band", "bucket"))
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("a"),
-                     F.col(f"b.{id_col}").alias("b"))
-             .distinct())
-    j = (cands
-         .join(sh.withColumnRenamed(id_col, "a")
-                 .withColumnRenamed("sh", "sh_a"), "a")
-         .join(sh.withColumnRenamed(id_col, "b")
-                 .withColumnRenamed("sh", "sh_b"), "b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (j.withColumn("jaccard",
-                         F.when(union > 0,
-                                inter.cast("double") / union)
-                         .otherwise(F.lit(0.0)))
-             .filter(F.col("jaccard") >= threshold)
-             .select("a", "b", "jaccard"))
-
-
-def simhash_md5_pairs(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", bits: int = 32,
-                      bands: int = 4, max_hamming: int = 3) -> DataFrame:
-    """SimHash near-dup pairs with md5-derived bits — the
-    cross-engine-verifiable twin of ``simhash``/``simhash_candidates``
-    (the dd07 role for SimHash: dd04's xxhash64 token hashes have no
-    DuckDB analogue, so its driver row is rows-only).
-
-    Token bit i = (hex digit i of md5(token) >= '8'); fingerprint bit
-    i = sign of the per-bit vote sum — a ``bits``-char '0'/'1' string,
-    so neither engine needs 64-bit unsigned arithmetic. Candidate
-    generation is the same Manku-style banding as the fast path
-    (bands=4, max_hamming=3 -> one table per band, pigeonhole recall
-    guarantee) with NO giant-bucket guard, so the blocked result is
-    EXACTLY the quadratic all-pairs join — which is what the DuckDB
-    oracle computes, independently verifying the banding's exactness
-    end-to-end. md5-per-token makes it slower than ``simhash``; it
-    exists to pin dd04's semantics cell-for-cell, not to replace it.
-    """
-    from itertools import combinations
-
-    if not 1 <= max_hamming <= bands - 1:
-        raise ValueError("need 1 <= max_hamming <= bands - 1")
-    if bits % bands != 0 or bits > 32:
-        raise ValueError("bands must divide bits; bits <= 32 (md5 hex)")
-    width = bits // bands
-    combos = list(combinations(range(bands), bands - max_hamming))
-
-    votes = lambda w: F.transform(  # noqa: E731
-        F.slice(F.split(F.md5(w), ""), 1, bits),
-        lambda c: F.when(c >= F.lit("8"), F.lit(1)).otherwise(F.lit(-1)))
-    counters = F.aggregate(
-        F.split(F.trim(_normalize(F.col(text_col))), " "),
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, w: F.zip_with(acc, votes(w), lambda a, b: a + b))
-    fingerprint = F.array_join(
-        F.transform(counters, lambda c: F.when(c > 0, F.lit("1"))
-                    .otherwise(F.lit("0"))), "")
-    fp = docs.select(F.col(id_col), fingerprint.alias("f"))
-
-    keys = [F.concat_ws("|", *[F.substring("f", i * width + 1, width)
-                               for i in combo])
-            for combo in combos]
-    tabbed = fp.select(
-        F.col(id_col), F.col("f"),
-        F.posexplode(F.array(*keys)).alias("tbl", "key"))
-    members = F.array_sort(
-        F.collect_list(F.struct(F.col(id_col).alias("i"),
-                                F.col("f").alias("s"))))
-    n = F.size(F.col("ms"))
-    pairs = F.flatten(F.transform(
-        F.sequence(F.lit(0), n - 2),
-        lambda i: F.transform(
-            F.slice(F.col("ms"), i + 2, n),
-            lambda x: F.struct(
-                F.element_at(F.col("ms"), (i + 1).cast("int"))
-                .alias("a"), x.alias("b")))))
-    grouped = (tabbed.groupBy("tbl", "key").agg(members.alias("ms"))
-               .filter(F.size("ms") > 1))
-    expanded = grouped.select(F.explode(pairs).alias("p"))
-    ham = F.aggregate(
-        F.zip_with(F.split(F.col("p.a.s"), ""),
-                   F.split(F.col("p.b.s"), ""),
-                   lambda x, y: F.when(x != y, F.lit(1))
-                   .otherwise(F.lit(0))),
-        F.lit(0), lambda acc, x: acc + x)
-    return (expanded
-            .withColumn("hamming", ham.cast("long"))
-            .filter(F.col("hamming") <= max_hamming)
-            .select(F.col("p.a.i").alias("a"),
-                    F.col("p.b.i").alias("b"), "hamming")
             .distinct())
 
 

@@ -826,15 +826,16 @@ SELECT id AS doc_id, LEAST(id, MIN(x)) AS component FROM r GROUP BY id
 
 
 def dd07_minhash_md5(spark, sf_dir):
-    """MinHash+LSH with md5-string lanes — same pipeline shape as dd03
-    (shingles → per-lane min → banded buckets → candidate join → exact
-    jaccard verify) but with a permutation family both engines share,
-    so the WHOLE LSH pipeline is cell-exact oracle-checked (dd03's
-    xxhash64 lanes have no DuckDB analogue → rows-only there)."""
+    """dd03's MinHash+LSH pipeline (the same ``minhash_dedup_pairs``
+    code, giant-bucket guard included) run on the md5 hash family, so
+    the WHOLE LSH pipeline is cell-exact oracle-checked (xxhash64 lanes
+    have no DuckDB analogue). The guard drops nothing here: the largest
+    bucket on the oracle data is far below MAX_BUCKET_DEFAULT
+    (pytest-pinned)."""
     d = _spread(_t(spark, sf_dir, "documents"))
-    return (dedup.minhash_md5_pairs(
+    return (dedup.minhash_dedup_pairs(
         d, num_perm=16, k=NGRAM_K, bands=4,
-        threshold=MINHASH_THRESHOLD)
+        threshold=MINHASH_THRESHOLD, family=dedup.MD5)
         .withColumn("jaccard", F.round("jaccard", 6)))
 
 
@@ -866,15 +867,18 @@ FROM verified WHERE j >= {MINHASH_THRESHOLD}
 
 
 def dd09_simhash_md5(spark, sf_dir):
-    """SimHash with md5-derived bits — dd04's cross-engine-verifiable
-    twin (the dd07 role for SimHash). Spark runs the BANDED Manku
-    pipeline (pigeonhole-exact, no bucket guard); the oracle is the
-    QUADRATIC all-pairs Hamming join — so the driver row verifies the
-    banding's exactness guarantee end-to-end, cell-for-cell. dd04
-    itself (xxhash64 fingerprints, the scale path) stays bench'd and
-    pytest-pinned (test_simhash_banding_equals_exact)."""
+    """dd04's SimHash pipeline (the same ``simhash`` and
+    ``simhash_candidates`` code) on 32 md5-derived bits. The oracle is
+    the QUADRATIC all-pairs Hamming join, so the driver row verifies
+    the banding's exactness guarantee end-to-end, cell-for-cell. The
+    giant-bucket guard is off: the oracle data has table keys above
+    MAX_BUCKET_DEFAULT (pytest-pinned), and the guard would drop their
+    pairs."""
     d = _spread(_t(spark, sf_dir, "documents"))
-    return dedup.simhash_md5_pairs(d, bits=32, bands=4, max_hamming=3)
+    sim = dedup.simhash(d, bits=32, family=dedup.MD5)
+    return (dedup.simhash_candidates(sim, bands=4, max_hamming=3,
+                                     max_bucket=None, bits=32)
+            .withColumn("hamming", F.col("hamming").cast("long")))
 
 
 ORACLE_DD09 = r"""
@@ -1807,12 +1811,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ex09_html_per_turn_golden": ex09_html_per_turn_golden,
     "dd01_exact_dedup": dd01_exact_dedup,
     "dd02_ngram_jaccard": dd02_ngram_jaccard,
-    # dd03/dd04 (xxhash64 lanes, the scale paths) were deregistered in
-    # round 4: the driver records oracle-free entries as err rows, and
-    # every registry row should be cell-exact checkable. Their
-    # semantics stay driver-visible through the md5-lane twins (dd07
-    # pins dd03's pipeline, dd09 pins dd04's against a quadratic
-    # oracle); the functions themselves stay bench'd + pytest-pinned.
+    # dd03/dd04 (xxhash64 family) are not registered: the driver
+    # records oracle-free entries as err rows. dd07/dd09 run the same
+    # pipelines on the md5 family, cell-exact against DuckDB.
     "dd09_simhash_md5": dd09_simhash_md5,
     "cu02_deterministic_sample": cu02_deterministic_sample,
     "dd06_embedding_srp": dd06_embedding_srp,
@@ -1887,7 +1888,6 @@ ORACLES: dict[str, str] = {
     "mm02_frame_sample": _mm02_oracle_sql(),
     "pi01_redact": _pi01_oracle_sql(),
     "pk01_packing": ORACLE_PK01,
-    # Since round 4 every registry entry is oracled: dd03/dd04
-    # (xxhash64 LSH lanes, no DuckDB analogue) moved to bench+pytest
-    # with their md5-lane twins dd07/dd09 holding the registry slots.
+    # Every registry entry is oracled: dd07/dd09 hold the LSH slots,
+    # running dd03/dd04's pipelines on the md5 hash family.
 }

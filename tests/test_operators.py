@@ -132,22 +132,28 @@ def test_simhash_banding_equals_exact(spark):
     assert len(exact) > 0
 
 
-def test_simhash_md5_pairs_equals_quadratic(spark):
-    """dd09's banded md5-lane twin must EQUAL the quadratic all-pairs
-    Hamming join over the same bitstring fingerprints (no bucket
-    guard -> the pigeonhole guarantee is unconditional). The DuckDB
-    oracle (ORACLE_DD09) re-checks the same identity cross-engine in
-    the driver; this pins it Spark-side on a corpus with real
-    duplicate masses."""
+def test_simhash_md5_banding_equals_quadratic(spark):
+    """dd09's banded pipeline (``simhash`` + ``simhash_candidates`` on
+    the md5 family, 32 bits, no bucket guard) must EQUAL the quadratic
+    all-pairs Hamming join over '0'/'1' string fingerprints built here
+    independently of the core. The DuckDB oracle (ORACLE_DD09)
+    re-checks the same identity cross-engine; this pins it Spark-side
+    on a corpus with real duplicate masses."""
     from pyspark.sql import functions as F
 
-    from pdf_parser_spark.operators.dedup import simhash_md5_pairs
+    from pdf_parser_spark.operators.dedup import (
+        MD5, simhash, simhash_candidates,
+    )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    with pytest.raises(ValueError):   # 32 hex digits -> at most 32 bits
+        simhash(docs, family=MD5)
+    sim = simhash(docs, bits=32, family=MD5)
     banded = {(r["a"], r["b"], r["hamming"])
-              for r in simhash_md5_pairs(docs).collect()}
+              for r in simhash_candidates(sim, max_bucket=None,
+                                          bits=32).collect()}
 
-    # quadratic reference: same fingerprint expression, all-pairs join
+    # quadratic reference: '0'/'1' string fingerprints, all-pairs join
     from pdf_parser_spark.operators.dedup import _normalize
     votes = lambda w: F.transform(  # noqa: E731
         F.slice(F.split(F.md5(w), ""), 1, 32),
@@ -359,10 +365,9 @@ def test_registry_consistency():
     # entry (including the extraction parity gates) lands in
     # CORRECTNESS_r{N}.json
     assert len(qs) == 50
-    # since round 4 EVERY registry entry is oracled (no driver row may
-    # read err:no_oracle): dd03/dd04's xxhash64 lanes live on in
-    # bench.py + pytest, pinned by their oracled md5-lane twins
-    # dd07/dd09
+    # EVERY registry entry is oracled (no driver row may read
+    # err:no_oracle): dd03/dd04 (xxhash64 family) live on in bench.py
+    # + pytest, and dd07/dd09 run their pipelines on the md5 family
     assert set(qs) == set(oracles)
 
 
@@ -454,28 +459,59 @@ def test_duplicate_components_string_ids(spark):
 
 
 def test_dd05_matches_duckdb_oracle(spark):
-    """dd05 left the 50-entry driver registry in round 3 (dd06 is the
-    oracled scale path), but it remains the exact quadratic twin that
-    pins embedding-cosine semantics — keep it cell-exact vs its DuckDB
-    oracle here instead."""
+    """Cell-exact DuckDB oracle checks at sf0.001, every column, doubles
+    rounded to 6 places: dd05 left the 50-entry driver registry in
+    round 3 (dd06 is the oracled scale path) but remains the exact
+    quadratic twin that pins embedding-cosine semantics; dd07/dd09 run
+    the MinHash/SimHash scale pipelines on the md5 family, so this
+    makes their oracle checks tier-1 too."""
     import duckdb
 
-    from pdf_parser_spark.queries import ORACLE_DD05, dd05_embedding_cosine
+    from pdf_parser_spark import queries as Q
 
     sf = "/root/testdata/sf0.001"
-    got = dd05_embedding_cosine(spark, sf).toPandas()
     con = duckdb.connect()
-    con.sql(f"CREATE VIEW embeddings AS SELECT * "
-            f"FROM '{sf}/embeddings.parquet'")
-    want = con.sql(ORACLE_DD05).df()
-    key = ["a", "b"]
-    got = got.sort_values(key).reset_index(drop=True)
-    want = want.sort_values(key).reset_index(drop=True)
-    assert len(got) == len(want) > 0
-    assert (got["a"].values == want["a"].values).all()
-    assert (got["b"].values == want["b"].values).all()
-    assert (got["cosine"].round(6).values
-            == want["cosine"].round(6).values).all()
+    for t in ("embeddings", "documents"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    mismatched = []
+    for name, oracle in [("dd05_embedding_cosine", Q.ORACLE_DD05),
+                         ("dd07_minhash_md5", Q.ORACLE_DD07),
+                         ("dd09_simhash_md5", Q.ORACLE_DD09)]:
+        got = getattr(Q, name)(spark, sf).toPandas()
+        want = con.sql(oracle).df()
+        assert sorted(got.columns) == sorted(want.columns), name
+        cols = sorted(got.columns)
+        got = got[cols].round(6).sort_values(cols).reset_index(drop=True)
+        want = want[cols].round(6).sort_values(cols).reset_index(drop=True)
+        assert len(got) > 0, name
+        if not (len(got) == len(want)
+                and (got.values == want.values).all()):
+            mismatched.append(name)
+    assert mismatched == []
+
+
+def test_md5_oracle_guard_pins(spark):
+    """On the oracle data the giant-bucket guard cannot change dd07
+    (no MinHash bucket reaches the default cap), while dd09 needs its
+    max_bucket=None (a SimHash table key exceeds the cap)."""
+    from pyspark.sql import functions as F
+
+    from pdf_parser_spark.operators.dedup import (
+        MD5, oversized_buckets, shingles, signatures_from_shingles,
+        simhash, simhash_oversized_buckets,
+    )
+    from pdf_parser_spark.queries import NGRAM_K
+
+    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+        docs = spark.read.parquet(f"{sf}/documents.parquet")
+        sh = docs.select("doc_id",
+                         shingles(F.col("text"), NGRAM_K).alias("sh"))
+        sigs = signatures_from_shingles(sh, num_perm=16, family=MD5)
+        assert oversized_buckets(sigs, bands=4, rows_per_band=4,
+                                 family=MD5).count() == 0, sf
+        sim = simhash(docs, bits=32, family=MD5)
+        assert simhash_oversized_buckets(sim, bands=4, max_hamming=3,
+                                         bits=32).count() > 0, sf
 
 
 def test_lsh_giant_bucket_guard(spark):

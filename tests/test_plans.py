@@ -97,6 +97,21 @@ def test_dd03_signature_pipeline_not_duplicated(spark):
     assert plan.count("documents.parquet") == 1
 
 
+def test_dd07_runs_the_dd03_pipeline(spark, qreg):
+    """dd07 (md5 family, cell-exact oracled) must run the same LSH
+    pipeline as dd03 (xxhash64 family, the scale path): groupBy
+    banding, giant-bucket guard, melted verify. Equal operator counts
+    in the executed plans; a separate self-join pipeline shows up as
+    more Exchanges and BroadcastHashJoins."""
+    from pdf_parser_spark.queries import dd03_minhash_lsh
+
+    md5 = _plan(qreg["dd07_minhash_md5"](spark, SF))
+    xx = _plan(dd03_minhash_lsh(spark, SF))
+    for op in ("Exchange", "HashAggregate", "ObjectHashAggregate",
+               "BroadcastHashJoin"):
+        assert md5.count(op) == xx.count(op), op
+
+
 def test_contamination_broadcasts_benchmark_side(spark):
     """ngram_contamination must BROADCAST the (tiny) benchmark n-gram
     set — the corpus side must not shuffle before its per-doc
