@@ -15,8 +15,6 @@ A from-scratch reimplementation of the capabilities of the reference
   conversations, per-partition lineage rows, idempotent resume.
 - ``sources/``   table abstraction (parquet dirs; Iceberg when jars are
   present) + deterministic synthetic ``turns``/HTML corpora + goldens.
-- ``streaming/`` incremental extraction (exactly-once checkpointed) and
-  watermarked windowed rollups.
 - ``queries``    the driver-contract catalog (Spark + DuckDB oracles).
 """
 

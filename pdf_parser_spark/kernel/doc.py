@@ -193,10 +193,14 @@ class PdfDocument:
 
     def stream_raw(self, stm: PdfStreamObj) -> bytes:
         """Exactly Length bytes at the recorded data offset
-        (ref src/object.rs:527-543). [EXTENSION] RC4-decrypted under
-        the stream's own object key when the document is encrypted
-        (BEFORE /Filter decode — §7.6.2 layering); XRef streams are
-        never encrypted (§7.5.8.2)."""
+        (ref src/object.rs:527-543). [EXTENSION] Decrypted (RC4 or
+        AESV2, per the document's crypt filter) under the stream's own
+        object key when the document is encrypted (BEFORE /Filter
+        decode — §7.6.2 layering); XRef streams are never encrypted
+        (§7.5.8.2). Known limit: under ``/EncryptMetadata false`` a
+        ``/Type /Metadata`` stream is stored in plaintext (§7.6.3.3)
+        but is still decrypted here, yielding garbage. Latent, because
+        extraction never reads ``/Metadata``."""
         n = self._stream_length(stm)
         data = self.buf[stm.data_offset:stm.data_offset + n]
         if len(data) != n:

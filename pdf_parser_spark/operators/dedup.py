@@ -52,17 +52,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text",
             .drop("_digest"))
 
 
-def exact_dup_groups(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Digest groups with >1 member (the duplicates themselves)."""
-    return (docs
-            .withColumn("digest", F.md5(F.col(text_col)))
-            .groupBy("digest")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.min(id_col).alias("keep_id"))
-            .filter(F.col("n_docs") > 1))
-
-
 # --------------------------------------------------------------- shingles
 
 def _normalize(text: Column) -> Column:

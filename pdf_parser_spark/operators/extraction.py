@@ -15,8 +15,10 @@ encode at C speed.
 
 Scale design (100 TB / 10^12 turns):
 - the operator is embarrassingly parallel per turn; no shuffle is
-  *required* — ``extract_turns`` adds one only when ``salt`` is set, to
-  split skewed long conversations across tasks (safe: turns independent)
+  *required* — ``extract_turns`` runs on whatever partitioning it is
+  handed. Skew salting is ``ExtractionJob.run``'s (bucket, salt)
+  repartition, which splits long conversations across tasks (safe:
+  turns are independent)
 - column pruning: only (conv_id, turn_idx, text) cross the Arrow
   boundary; everything else stays JVM-side and is re-joined by the
   caller if needed
@@ -57,6 +59,17 @@ _SPAN_ARROW = pa.list_(pa.struct([
     ("font", pa.string()), ("s", pa.string())]))
 
 
+def _payloads(batch: pa.RecordBatch) -> Iterator[bytes]:
+    """Each row's PDF bytes. The ``text`` column carries them as a
+    latin-1 string; NULL or non-latin-1 text yields ``b""``."""
+    for raw in batch.column("text").to_pylist():
+        try:
+            data = raw.encode("latin-1") if raw is not None else b""
+        except UnicodeEncodeError:
+            data = b""
+        yield data
+
+
 def _extract_batches(batches: Iterator[pa.RecordBatch]
                      ) -> Iterator[pa.RecordBatch]:
     """mapInArrow kernel: one Python call per Arrow batch; nested spans
@@ -67,11 +80,7 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]
         texts, n_pages, n_objects, nbytes, errors = [], [], [], [], []
         sp_page, sp_x, sp_y, sp_font, sp_s = [], [], [], [], []
         offsets = [0]
-        for raw in batch.column("text").to_pylist():
-            try:
-                data = raw.encode("latin-1") if raw is not None else b""
-            except UnicodeEncodeError:
-                data = b""
+        for data in _payloads(batch):
             if not data:
                 res = {"text": "", "spans": [], "n_pages": 0,
                        "n_objects": 0, "bytes": 0,
@@ -134,13 +143,9 @@ def _extract_image_batches(batches: Iterator[pa.RecordBatch]
         conv, tix = [], []
         pages, names, widths, heights, spaces, fmts, datas = \
             [], [], [], [], [], [], []
-        for cid, t, raw in zip(batch.column("conv_id").to_pylist(),
-                               batch.column("turn_idx").to_pylist(),
-                               batch.column("text").to_pylist()):
-            try:
-                data = raw.encode("latin-1") if raw is not None else b""
-            except UnicodeEncodeError:
-                data = b""
+        for cid, t, data in zip(batch.column("conv_id").to_pylist(),
+                                batch.column("turn_idx").to_pylist(),
+                                _payloads(batch)):
             res = extract_text(data, with_images=True) if data else \
                 {"images": []}
             for img in res.get("images", []):
@@ -174,24 +179,12 @@ def extract_images(turns: DataFrame) -> DataFrame:
     return slim.mapInArrow(_extract_image_batches, schema=IMAGE_SCHEMA)
 
 
-def extract_turns(turns: DataFrame, salt: int | None = None,
-                  partitions: int | None = None) -> DataFrame:
-    """Run the extraction kernel over a turns DataFrame.
-
-    ``salt``/``partitions``: optional skew-safe repartition — hash on
-    (conv_id, salt) where salt = pmod(xxhash64(conv_id, turn_idx), salt)
-    so one multi-thousand-turn conversation spreads over ``salt`` tasks
-    (north_rule: explicit salting for skewed long conversations).
-    Projection to (conv_id, turn_idx, text) happens FIRST so only those
-    columns shuffle and cross the Arrow boundary.
-    """
+def extract_turns(turns: DataFrame) -> DataFrame:
+    """Run the extraction kernel over a batch or streaming turns
+    DataFrame, keeping its partitioning. Projection to (conv_id,
+    turn_idx, text) happens FIRST so only those columns cross the
+    Arrow boundary."""
     slim = turns.select("conv_id", "turn_idx", "text")
-    if salt is not None and partitions is not None:
-        slim = slim.repartition(
-            partitions,
-            F.xxhash64("conv_id"),
-            F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt)),
-        )
     return slim.mapInArrow(_extract_batches, schema=EXTRACT_SCHEMA)
 
 
@@ -294,7 +287,7 @@ def extract_turns_dedup(turns: DataFrame) -> DataFrame:
             .repartition(n_kernel)
             .select(F.col("_digest").alias("conv_id"),
                     F.lit(0).cast("int").alias("turn_idx"), "text"))
-    ext = (docs.mapInArrow(_extract_batches, schema=EXTRACT_SCHEMA)
+    ext = (extract_turns(docs)
            .select(F.col("conv_id").alias("_digest"),
                    F.col("text").alias("_etext"), "spans", "n_pages",
                    "n_objects", "bytes", "parse_error"))

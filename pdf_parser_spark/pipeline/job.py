@@ -88,8 +88,7 @@ class ExtractionJob:
             F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(self.salt)))
 
         extracted = (
-            extract_turns(salted.select("bucket", "conv_id", "turn_idx",
-                                        "text"))
+            extract_turns(salted)
             .withColumn("bucket",
                         F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)))
             .withColumn("run_id", F.lit(run_id))

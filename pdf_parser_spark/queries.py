@@ -457,24 +457,6 @@ GROUP BY src, nationkey
 """
 
 
-def q19_asof_last_order(spark, sf_dir):
-    """As-of join (custom operator — union + window forward-fill, one
-    shuffle): each event matched to its user's most recent order at or
-    before the event time. Right side pre-aggregated to one row per
-    (custkey, orderdate) with a deterministic tie-break so both engines
-    resolve identically; DuckDB's native ASOF JOIN is the oracle."""
-    from pdf_parser_spark.operators.asof import asof_join
-    e = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    o = (_t(spark, sf_dir, "orders")
-         .groupBy(F.col("o_custkey").alias("user_id"),
-                  F.col("o_orderdate").alias("ots"))
-         .agg(F.max("o_orderkey").alias("last_orderkey"),
-              F.round(F.max_by("o_totalprice", "o_orderkey") * 100)
-              .cast("long").alias("last_order_c")))
-    return asof_join(e, o, key="user_id", left_ts="ts", right_ts="ots",
-                     right_payload=["last_orderkey", "last_order_c"])
-
-
 ORACLE_Q19 = """
 WITH o AS (
   SELECT o_custkey AS user_id, o_orderdate AS ots,
@@ -491,9 +473,9 @@ FROM events e ASOF LEFT JOIN o
 def q21_asof_sliced(spark, sf_dir):
     """Skew-safe as-of join (slices=8): the hot-key timeline splits
     across 8 time-range tasks with a boundary-carry pass. Result is
-    IDENTICAL to q19 by construction, so DuckDB's native ASOF JOIN
-    oracles the sliced execution cell-for-cell — the skew machinery is
-    driver-verified, not just pytest-verified."""
+    IDENTICAL to the unsliced join by construction, so DuckDB's native
+    ASOF JOIN (ORACLE_Q19) oracles the sliced execution cell-for-cell —
+    the skew machinery is driver-verified, not just pytest-verified."""
     from pdf_parser_spark.operators.asof import asof_join
     e = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     o = (_t(spark, sf_dir, "orders")
@@ -568,10 +550,9 @@ GROUP BY e.event_id, e.user_id
 
 def q23_session_window(spark, sf_dir):
     """Sessionization via Spark's NATIVE session_window (dynamic-gap
-    session windows, Spark 3.2+): same gap semantics as q12's
+    session windows, Spark 3.2+): same gap semantics as ORACLE_Q12's
     lag+cumsum formulation (an event within ``gap`` of the previous
-    one extends the session), so the SAME DuckDB oracle pins both —
-    two independent Spark plans and one SQL definition agreeing
+    one extends the session), so one SQL definition pins it
     cell-for-cell. The native form is also the streaming-friendly one
     (session_window works under watermarks with state merging)."""
     e = _t(spark, sf_dir, "events")
@@ -646,16 +627,6 @@ LATERAL (VALUES ('rev_1', w.rev_1), ('rev_2', w.rev_2),
                 ('rev_3', w.rev_3), ('rev_4', w.rev_4),
                 ('rev_5', w.rev_5)) AS p(priority, rev_c)
 """
-
-
-def q12_sessionize(spark, sf_dir):
-    """Gap-based sessionization of the events stream (batch face of the
-    applyInPandasWithState operator in streaming/sessionize.py — the
-    stream==batch equivalence is asserted in tests/test_sessionize.py).
-    Window lag + running sum of gap breaks; tie-order-invariant."""
-    from pdf_parser_spark.streaming.sessionize import sessionize_batch
-    e = _t(spark, sf_dir, "events")
-    return sessionize_batch(e, gap_s=3600)
 
 
 ORACLE_Q12 = """
@@ -1775,29 +1746,28 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q05_top_orders_per_customer": q05_top_orders_per_customer,
     # q06 (global sort+limit) was deregistered in round 4: its
     # TakeOrdered coverage duplicates q05/cp01, and the slot funds a
-    # driver-visible curation operator. The function stays (bench +
-    # tests exercise it).
+    # driver-visible curation operator. The function stays (tests
+    # exercise it).
     "cu01_contamination": cu01_contamination,
     "q07_supplier_only_nations": q07_supplier_only_nations,
     "q08_part_brand_stats": q08_part_brand_stats,
     "q09_orders_by_month": q09_orders_by_month,
     "q10_events_json": q10_events_json,
     "q11_events_hourly": q11_events_hourly,
-    # q12 (gap sessionize) was deregistered in round 5: q23 holds the
-    # identical oracle (same session semantics, the streaming-ready
-    # native session_window plan is the distinct artifact), and the
-    # slot funds a driver-visible PII row. The function stays (tests
-    # exercise it; q23's ORACLE_Q12 is generated from it).
+    # q12 (gap sessionize) was deregistered in round 5 and its function
+    # deleted: q23 holds the identical oracle (same session semantics,
+    # the streaming-ready native session_window plan is the distinct
+    # artifact), and the slot funds a driver-visible PII row.
     "q13_rollup_revenue": q13_rollup_revenue,
     "q14_value_percentiles": q14_value_percentiles,
     "q15_orders_above_cust_avg": q15_orders_above_cust_avg,
     "q16_customer_order_counts": q16_customer_order_counts,
     "q17_distinct_stats": q17_distinct_stats,
     "q18_account_union": q18_account_union,
-    # q19 (as-of join, unsliced) was deregistered in round 5: q21
-    # shares ORACLE_Q19 verbatim (identical result by construction;
-    # the skew-sliced plan is the distinct artifact), and the slot
-    # funds a driver-visible sequence-packing row.
+    # q19 (as-of join, unsliced) was deregistered in round 5 and its
+    # function deleted: q21 keeps ORACLE_Q19 verbatim (identical result
+    # by construction; the skew-sliced plan is the distinct artifact),
+    # and the slot funds a driver-visible sequence-packing row.
     "q20_range_join": q20_range_join,
     "q21_asof_sliced": q21_asof_sliced,
     "q22_first_per_digest": q22_first_per_digest,

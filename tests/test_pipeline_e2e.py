@@ -35,7 +35,7 @@ def test_extraction_matches_goldens(spark):
     """north_rule correctness gate: per-turn text equality vs the
     fixture goldens under stable (conv_id, turn_idx) ordering."""
     turns = synthetic_turns(spark, N_CONVS)
-    out = extract_turns(turns, salt=4, partitions=8)
+    out = extract_turns(turns)
     gold = golden_turns(spark, N_CONVS)
     joined = (out.alias("o")
               .join(gold.alias("g"), ["conv_id", "turn_idx"], "full_outer")

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pdf_parser_spark.operators.joins import SALT_COL, salted_join
+from tests.joins import SALT_COL, salted_join
 
 
 def _skewed(spark):

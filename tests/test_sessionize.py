@@ -11,8 +11,8 @@ import pytest
 
 
 def test_stream_sessions_match_batch(spark, tmp_path):
-    from pdf_parser_spark.streaming.events_stream import events_stream
-    from pdf_parser_spark.streaming.sessionize import (
+    from tests.streaming.events_stream import events_stream
+    from tests.streaming.sessionize import (
         sessionize_batch, sessionize_stream,
     )
 
@@ -80,7 +80,7 @@ def test_multichunk_arrow_batches_pair_ts_with_value():
     labels — 4 timestamps yielded 8 values."""
     import pandas as pd
 
-    from pdf_parser_spark.streaming.sessionize import _sessionize_fn
+    from tests.streaming.sessionize import _sessionize_fn
 
     # two chunks, overlapping RangeIndex labels 0..1, out of order
     c1 = pd.DataFrame({
@@ -111,7 +111,7 @@ def test_stream_rounding_matches_spark_half_up():
     F.round in the batch oracle (0.0625 -> 62.5 -> 63, not 62)."""
     import pandas as pd
 
-    from pdf_parser_spark.streaming.sessionize import _sessionize_fn
+    from tests.streaming.sessionize import _sessionize_fn
 
     c = pd.DataFrame({
         "user_id": [1],

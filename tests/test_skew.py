@@ -1,6 +1,6 @@
 """Skew handling evidence (north_rule: explicit salting for skewed
 long conversations): a corpus with one giant conversation must spread
-across many tasks when salted, and collapse to few without."""
+across several of the extraction job's write tasks."""
 
 from __future__ import annotations
 
@@ -26,32 +26,28 @@ def _skewed_turns(spark, big=2000, small=50):
         schema=schema)
 
 
-def test_salting_spreads_giant_conversation(spark):
-    from pdf_parser_spark.operators.extraction import extract_turns
+def test_salting_spreads_giant_conversation(spark, tmp_path):
+    """ExtractionJob.run's (bucket, salt) repartition must spread the
+    giant conversation over several write tasks. Each task writes its
+    own parquet file, so the files holding conv-big count its tasks;
+    without the salt all its turns share one key and one task."""
+    from pdf_parser_spark.pipeline.job import ExtractionJob
 
     turns = _skewed_turns(spark)
+    job = ExtractionJob(spark, str(tmp_path / "out"),
+                        str(tmp_path / "lineage"), n_buckets=16, salt=8,
+                        partitions=16)
+    job.run(turns)
 
-    # without salt: hash(conv_id) repartition puts the giant conv in 1
-    # partition
-    unsalted = turns.repartition(8, F.xxhash64("conv_id"))
-    parts_unsalted = (unsalted
-                      .filter(F.col("conv_id") == "conv-big")
-                      .select(F.spark_partition_id().alias("p"))
-                      .distinct().count())
-    assert parts_unsalted == 1
+    # read the output directory itself: input_file_name() is not
+    # defined over read_output()'s semi-join
+    files = (spark.read.parquet(job.output_dir)
+             .filter(F.col("conv_id") == "conv-big")
+             .select(F.input_file_name()).distinct().count())
+    assert files >= 3  # 8 salt values land in >=3 of 16 tasks
 
-    # with salt: the same repartition extract_turns(salt=4) performs
-    # spreads the conversation over ~salt partitions
-    slim = turns.select("conv_id", "turn_idx", "text").repartition(
-        8, F.xxhash64("conv_id"),
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(4)))
-    parts_salted = (slim.filter(F.col("conv_id") == "conv-big")
-                    .select(F.spark_partition_id().alias("p"))
-                    .distinct().count())
-    assert parts_salted >= 3  # 4 salt values land in >=3 of 8 partitions
-
-    # correctness unaffected: every turn extracted exactly once
-    out = extract_turns(turns, salt=4, partitions=8)
+    # correctness unaffected: every turn committed exactly once
+    out = job.read_output()
     assert out.count() == turns.count()
     assert out.filter(F.col("parse_error").isNotNull()).count() == 0
     assert (out.select("conv_id", "turn_idx").distinct().count()

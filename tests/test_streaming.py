@@ -1,5 +1,5 @@
-"""Structured Streaming surface: incremental extraction with
-exactly-once checkpointing, and watermarked windowed aggregation."""
+"""Structured Streaming surface: the extraction kernel over a streaming
+source, and the watermarked operators in tests/streaming/."""
 
 from __future__ import annotations
 
@@ -9,46 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_stream_extract_incremental(spark, tmp_path):
-    from pdf_parser_spark.sources.turns import golden_turns, synthetic_turns
-    from pdf_parser_spark.streaming import run_stream_once
-
-    input_dir = str(tmp_path / "turns")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    # batch 1: conversations 0..19
-    synthetic_turns(spark, 20).write.mode("append").parquet(input_dir)
-    run_stream_once(spark, input_dir, out_dir, ckpt)
-    n1 = spark.read.parquet(out_dir).count()
-    expected1 = golden_turns(spark, 20).count()
-    assert n1 == expected1
-
-    # drain again with no new data: checkpoint prevents reprocessing
-    run_stream_once(spark, input_dir, out_dir, ckpt)
-    assert spark.read.parquet(out_dir).count() == n1
-
-    # batch 2: a NEW file lands; only its rows are processed
-    synthetic_turns(spark, 50).filter(
-        F.col("conv_id") >= "conv-000020").write.mode("append") \
-        .parquet(input_dir)
-    run_stream_once(spark, input_dir, out_dir, ckpt)
-    total = spark.read.parquet(out_dir).count()
-    expected_total = golden_turns(spark, 50).count()
-    assert total == expected_total
-
-    # golden parity holds through the streaming path too
-    out = spark.read.parquet(out_dir)
-    g = golden_turns(spark, 50).withColumnRenamed("text", "golden")
-    ok = (out.join(g, ["conv_id", "turn_idx"])
-          .filter(F.col("parse_error").isNull()))
-    assert ok.filter(F.col("text") != F.col("golden")).count() == 0
-    # no duplicate (conv_id, turn_idx) despite three drains
-    assert out.select("conv_id", "turn_idx").distinct().count() == total
-
-
 def test_windowed_event_counts_stream_equals_batch(spark, tmp_path):
-    from pdf_parser_spark.streaming.events_stream import (
+    from tests.streaming.events_stream import (
         events_stream, windowed_event_counts,
     )
 
@@ -82,8 +44,10 @@ def test_windowed_event_counts_stream_equals_batch(spark, tmp_path):
 def test_stream_static_join(spark, tmp_path):
     """Stream-static join: the extraction stream enriched against a
     static golden dimension — per-turn parity checked in-flight."""
-    from pdf_parser_spark.sources.turns import golden_turns, synthetic_turns
-    from pdf_parser_spark.streaming import extract_stream
+    from pdf_parser_spark.operators.extraction import extract_turns
+    from pdf_parser_spark.sources.turns import (
+        TURNS_SCHEMA, golden_turns, synthetic_turns,
+    )
 
     input_dir = str(tmp_path / "turns")
     synthetic_turns(spark, 15).write.mode("append").parquet(input_dir)
@@ -91,7 +55,8 @@ def test_stream_static_join(spark, tmp_path):
                      .withColumnRenamed("text", "golden_text")
                      .select("conv_id", "turn_idx", "golden_text"))
 
-    joined = (extract_stream(spark, input_dir)
+    stream = spark.readStream.schema(TURNS_SCHEMA).parquet(input_dir)
+    joined = (extract_turns(stream)
               .join(static_golden, ["conv_id", "turn_idx"])
               .withColumn("matched",
                           F.col("text") == F.col("golden_text")))
@@ -112,7 +77,7 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     are suppressed; state is watermark-bounded (the 10^12-turn scale
     requirement). Emitted set == batch first-per-digest oracle."""
     from pdf_parser_spark.sources.turns import synthetic_turns
-    from pdf_parser_spark.streaming.dedup_stream import (
+    from tests.streaming.dedup_stream import (
         dedup_batch, dedup_stream,
     )
 
@@ -148,7 +113,7 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     batch, and its per-error counts == the q20 batch range join for
     errors with >=1 preceding click."""
     from pdf_parser_spark.queries import q20_range_join
-    from pdf_parser_spark.streaming.interval_join_stream import (
+    from tests.streaming.interval_join_stream import (
         clicks_before_errors,
     )
 
