@@ -6,17 +6,23 @@ north_rule requirements implemented here:
   pmod(xxhash64(conv_id, turn_idx), salt))
 - per-partition lineage rows: (run_id, snapshot_id, bucket, turn_count,
   bytes, parse_failures, completed_at)
-- idempotent resume: input buckets anti-joined against completed lineage
-  buckets — a rerun processes only missing buckets, by construction
-  producing no duplicates (SURVEY.md §4.2)
+- idempotent resume: the completed lineage buckets are collected to
+  the driver (at most n_buckets values) and filtered out of the input
+  — a rerun processes only missing buckets, by construction producing
+  no duplicates (SURVEY.md §4.2)
 - df.observe() metrics: one-pass counts without a second scan
 
 Output is partitioned by run_id only; bucket is a stored data column.
 Atomicity comes from the lineage row, not the directory layout: a
 bucket's rows count only once a lineage row carries their
 (bucket, run_id) pair, so a retried or killed attempt either commits
-the whole bucket or leaves it to be reprocessed. At cluster scale the
-same code runs unchanged with an Iceberg partition spec of (run_id).
+the whole bucket or leaves it to be reprocessed. The commit is ONE
+lineage parquet file per attempt, written by the driver under a
+hidden name (Spark and pyarrow skip names starting with ".") and
+renamed into lineage_dir after the data files land: the rename is
+the commit, as a Delta Lake log record is. At cluster scale the same
+protocol maps to an Iceberg partition spec of (run_id) and a
+snapshot commit (SCALE.md "Iceberg").
 An output directory written with the older (run_id, bucket) layout
 cannot be read together with new runs (Spark raises
 CONFLICTING_PARTITION_COLUMN_NAMES); point the job at a fresh one.
@@ -26,14 +32,37 @@ from __future__ import annotations
 
 import os
 import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..operators.extraction import extract_turns
+from ..operators.extraction import EXTRACT_SCHEMA, extract_turns
 
-LINEAGE_COLS = ["run_id", "snapshot_id", "bucket", "turn_count", "bytes",
-                "parse_failures", "completed_at"]
+LINEAGE_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType()),
+    T.StructField("snapshot_id", T.StringType()),
+    T.StructField("bucket", T.LongType()),
+    T.StructField("turn_count", T.LongType()),
+    T.StructField("bytes", T.LongType()),
+    T.StructField("parse_failures", T.LongType()),
+    T.StructField("completed_at", T.TimestampType()),
+])
+# completed_at -> timestamp[us, tz=UTC], which Spark reads back as a
+# timestamp next to the INT96 files older Spark-written commits hold
+_LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
+
+# what the output directory reads back as: the extraction columns, the
+# stored bucket column and the run_id partition column. Explicit
+# schemas spare each read a schema-inference job.
+OUTPUT_SCHEMA = T.StructType(EXTRACT_SCHEMA.fields + [
+    T.StructField("bucket", T.LongType()),
+    T.StructField("run_id", T.StringType()),
+])
 
 
 class ExtractionJob:
@@ -52,20 +81,26 @@ class ExtractionJob:
 
     def completed_buckets(self) -> DataFrame:
         """Buckets already durably extracted (lineage present)."""
-        spark = self.spark
         if not os.path.isdir(self.lineage_dir):
-            return spark.createDataFrame([], "bucket long")
-        try:
-            return (spark.read.parquet(self.lineage_dir)
-                    .select("bucket").distinct())
-        except Exception:
-            return spark.createDataFrame([], "bucket long")
+            # optimizes to an empty LocalRelation: collecting it runs no
+            # job (range(0) and createDataFrame([]) each run one)
+            return (self.spark.range(1).select(F.col("id").alias("bucket"))
+                    .limit(0))
+        return self._lineage().select("bucket").distinct()
+
+    def _lineage(self) -> DataFrame:
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(
+            self.lineage_dir)
 
     # -------------------------------------------------------------- run
 
     def run(self, turns: DataFrame, run_id: str | None = None,
             snapshot_id: str = "static") -> dict:
         """Extract all not-yet-completed buckets; returns metrics.
+
+        The commit is one lineage file per attempt, renamed into
+        lineage_dir once the data files have landed; an attempt that
+        commits no bucket writes none.
 
         ``run_id`` must be unique PER ATTEMPT (leave it None for a
         uuid). The crash-safety contract hangs on it: a killed
@@ -75,11 +110,11 @@ class ExtractionJob:
         read_output() and fold them into this run's read-back lineage
         counts (measured in scripts/scale_rehearsal.py's kill test)."""
         run_id = run_id or uuid.uuid4().hex[:12]
-        bucketed = turns.withColumn(
+        todo = turns.withColumn(
             "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)))
-
-        done = self.completed_buckets()
-        todo = bucketed.join(F.broadcast(done), "bucket", "left_anti")
+        done = [r.bucket for r in self.completed_buckets().collect()]
+        if done:
+            todo = todo.filter(~F.col("bucket").isin(done))
 
         # skew-safe spread: bucket + per-turn salt; turns are independent
         # so splitting a conversation across tasks is safe
@@ -121,30 +156,45 @@ class ExtractionJob:
         # orphaned output rows stay invisible because read_output()
         # semi-joins on lineage-committed (bucket, run_id) pairs.
         # run_id == partition column -> the filter is a PartitionFilter
-        # (file pruning), not a data filter.
-        written = (self.spark.read.parquet(self.output_dir)
-                   .filter(F.col("run_id") == run_id))
-        lineage = (written.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("turn_count"),
-            F.sum("bytes").alias("bytes"),
-            F.sum(F.when(F.col("parse_error").isNotNull(), 1).otherwise(0))
-             .alias("parse_failures"))
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("snapshot_id", F.lit(snapshot_id))
-            .withColumn("completed_at", F.current_timestamp())
-            .select(*LINEAGE_COLS))
-        lineage.write.mode("append").parquet(self.lineage_dir)
+        # (file pruning), not a data filter. At most n_buckets rows
+        # come back to the driver. A run that wrote no rows commits
+        # nothing and skips the read-back.
+        if metrics["turns"]:
+            written = self._output().filter(F.col("run_id") == run_id)
+            buckets = written.groupBy("bucket").agg(
+                F.count(F.lit(1)).alias("turn_count"),
+                F.sum("bytes").alias("bytes"),
+                F.sum(F.when(F.col("parse_error").isNotNull(), 1)
+                      .otherwise(0)).alias("parse_failures")).collect()
+            self._commit(buckets, run_id, snapshot_id)
 
         metrics["run_id"] = run_id
         return metrics
 
+    def _commit(self, buckets: list, run_id: str, snapshot_id: str) -> None:
+        """Write this attempt's lineage rows as one parquet file under a
+        hidden name, then rename it into lineage_dir: readers see all of
+        the attempt's buckets or none of them."""
+        now = datetime.now(timezone.utc)
+        table = pa.Table.from_pylist(
+            [{**r.asDict(), "run_id": run_id, "snapshot_id": snapshot_id,
+              "completed_at": now} for r in buckets],
+            schema=_LINEAGE_ARROW)
+        os.makedirs(self.lineage_dir, exist_ok=True)
+        name = f"lineage-{run_id}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.lineage_dir, "." + name)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.lineage_dir, name))
+
+    def _output(self) -> DataFrame:
+        return self.spark.read.schema(OUTPUT_SCHEMA).parquet(self.output_dir)
+
     def read_output(self) -> DataFrame:
         """Committed rows only: semi-join against lineage (bucket,
         run_id) — orphaned writes from crashed runs are invisible."""
-        out = self.spark.read.parquet(self.output_dir)
+        out = self._output()
         if not os.path.isdir(self.lineage_dir):
             return out.limit(0)
-        committed = (self.spark.read.parquet(self.lineage_dir)
-                     .select("bucket", "run_id").distinct())
+        committed = self._lineage().select("bucket", "run_id").distinct()
         return out.join(F.broadcast(committed), ["bucket", "run_id"],
                         "left_semi")

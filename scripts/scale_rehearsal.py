@@ -135,8 +135,12 @@ def child_extract(out_dir: str, lineage_dir: str, corpus_dir: str,
 
 # ---------------------------------------------------------- the phases
 
-def _stage(df, name: str, results: dict):
-    """Execute a stage once; record wall, rows, actual partitions."""
+def _stage(df, name: str, results: dict, extends: str | None = None):
+    """Execute a stage once; record wall, rows, actual partitions.
+
+    ``sec`` includes recomputing the upstream stages the plan is built
+    on; ``exclusive_sec`` subtracts the ``sec`` of the stage it
+    ``extends``, leaving this stage's own share."""
     from pyspark.sql import functions as F
 
     t0 = time.perf_counter()
@@ -145,10 +149,13 @@ def _stage(df, name: str, results: dict):
                   F.coalesce(F.sum("count"), F.lit(0)).alias("n_rows"))
              .first())
     sec = round(time.perf_counter() - t0, 2)
-    results["stages"][name] = {"sec": sec, "rows": int(parts["n_rows"]),
+    exclusive = round(sec - results["stages"][extends]["sec"], 2) \
+        if extends else sec
+    results["stages"][name] = {"sec": sec, "exclusive_sec": exclusive,
+                               "rows": int(parts["n_rows"]),
                                "partitions": int(parts["n_parts"])}
-    print(f"STAGE {name}: {sec}s rows={parts['n_rows']} "
-          f"parts={parts['n_parts']}", flush=True)
+    print(f"STAGE {name}: {sec}s ({exclusive}s own) "
+          f"rows={parts['n_rows']} parts={parts['n_parts']}", flush=True)
 
 
 def _output_hash(spark, out_dir: str, lineage_dir: str):
@@ -337,10 +344,10 @@ def main() -> None:
 
     red = redact_pii(ld).drop("text") \
         .withColumnRenamed("text_redacted", "text")
-    _stage(red, "pii_redact", results)
+    _stage(red, "pii_redact", results, extends="line_dedup")
 
     q = with_lang_id(with_quality(red))
-    _stage(q, "quality_langid", results)
+    _stage(q, "quality_langid", results, extends="pii_redact")
 
     # benchmark = the unique content lines of a deterministic ~1/199
     # doc slice (stands in for a real eval set; broadcast side, as in
@@ -349,17 +356,17 @@ def main() -> None:
              .select(F.split("text", "\\n").getItem(0).alias("text")))
     contam = ngram_contamination(q, bench)
     clean = q.join(contam, "doc_id", "left_anti")
-    _stage(clean, "decontaminate", results)
+    _stage(clean, "decontaminate", results, extends="quality_langid")
     assert 0 < results["stages"]["decontaminate"]["rows"] \
         < results["stages"]["quality_langid"]["rows"]
 
     sampled = deterministic_sample(
         clean.withColumn("source", F.lit("main")), {"main": 0.5})
-    _stage(sampled, "deterministic_sample", results)
+    _stage(sampled, "deterministic_sample", results, extends="decontaminate")
 
     packed = pack_chunks(sampled, budget=2048, order_col="doc_id",
                          part_col="bucket", tokens_col="n_tokens")
-    _stage(packed, "pack_chunks", results)
+    _stage(packed, "pack_chunks", results, extends="deterministic_sample")
 
     results["phases"]["curation_total_sec"] = round(
         time.perf_counter() - t_all, 1)

@@ -95,6 +95,64 @@ def test_empty_password_aesv2_decrypts_to_golden():
     assert s.value == b"plain string"
 
 
+def test_aesv2_fixture_matches_independent_encryptor():
+    """The AESV2 fixture rebuilt with the ``cryptography`` package's
+    AES-128-CBC and PKCS#7 padder instead of the module's own
+    encryptor, with the same per-object keys and IVs: the document
+    bytes must be identical and extract to the golden text, so the
+    decryptor is not only checked against the encryptor it ships
+    with."""
+    import hashlib
+
+    from cryptography.hazmat.primitives import padding
+    from cryptography.hazmat.primitives.ciphers import (
+        Cipher, algorithms, modes,
+    )
+
+    from pdf_parser_spark.fixtures import (
+        _finish_encrypted, pdf_encrypted_aes,
+    )
+    from pdf_parser_spark.kernel.crypt import PAD, rc4
+
+    o = bytes(range(32))
+    id0 = bytes.fromhex("102132435465768798a9bacbdcedfe0f")
+    key = hashlib.md5(PAD + o + (-44 & 0xFFFFFFFF).to_bytes(4, "little")
+                      + id0).digest()
+    for _ in range(50):
+        key = hashlib.md5(key[:16]).digest()
+    key = key[:16]
+    u = hashlib.md5(PAD + id0).digest()
+    for i in range(20):
+        u = rc4(bytes(bb ^ i for bb in key), u)
+
+    def enc_obj(num: int, data: bytes) -> bytes:
+        objkey = hashlib.md5(key + num.to_bytes(3, "little")
+                             + bytes(2) + b"sAlT").digest()[:16]
+        iv = hashlib.md5(b"fixture-iv" + num.to_bytes(3, "little")
+                         ).digest()
+        padder = padding.PKCS7(128).padder()
+        padded = padder.update(data) + padder.finalize()
+        enc = Cipher(algorithms.AES(objkey), modes.CBC(iv)).encryptor()
+        return iv + enc.update(padded) + enc.finalize()
+
+    b = PdfBuilder()
+    _scaffold(b)
+    content = b"BT /F1 12 Tf 72 720 Td " + lit("aes secret text") \
+        + b" Tj ET"
+    b.add_stream(4, b"", enc_obj(4, content))
+    b.add(8, b"<" + enc_obj(8, b"plain string").hex().encode() + b">")
+    enc = (b"<</Filter /Standard /V 4 /R 4 /Length 128"
+           b" /CF <</StdCF <</CFM /AESV2 /AuthEvent /DocOpen>>>>"
+           b" /StmF /StdCF /StrF /StdCF")
+    pdf, _ = _finish_encrypted(b, enc, o, u + bytes(16), id0,
+                               "aes secret text")
+
+    assert pdf == pdf_encrypted_aes()[0]
+    res = extract_text(pdf)
+    assert res["parse_error"] is None
+    assert res["text"] == "aes secret text"
+
+
 def test_aesv2_empty_string_decrypts_to_empty():
     """A zero-length string in an AESV2 document is stored as ``()``,
     with no IV and no padding block; it decrypts to b"" instead of

@@ -176,6 +176,132 @@ def test_killed_attempt_rows_stay_invisible(spark, tmp_path):
     turns.unpersist()
 
 
+def _half(turns, n_buckets=16):
+    """The conversations that hash into the lower half of the buckets."""
+    b = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
+    return turns.filter(b < n_buckets // 2)
+
+
+def _spark_jobs(spark, group, fn):
+    """Number of Spark jobs ``fn()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_spark_job_count(spark, tmp_path):
+    """The fixed cost of a run is its Spark jobs: the write (shuffle and
+    write), the read-back aggregate (shuffle and collect) and, on a
+    resume, the done-set collect (shuffle and collect). No schema
+    inference, no broadcast of the done set, no Spark write of
+    lineage."""
+    turns = synthetic_turns(spark, N_CONVS).cache()
+    turns.count()
+    job = ExtractionJob(spark, str(tmp_path / "out"),
+                        str(tmp_path / "lineage"), n_buckets=16, salt=2,
+                        partitions=8)
+    fresh = _spark_jobs(spark, "fresh",
+                        lambda: job.run(_half(turns), run_id="r1"))
+    resume = _spark_jobs(spark, "resume",
+                         lambda: job.run(turns, run_id="r2"))
+    noop = _spark_jobs(spark, "noop", lambda: job.run(turns, run_id="r3"))
+    assert fresh <= 4 and resume <= 6 and noop <= 4, (fresh, resume, noop)
+    assert job.read_output().count() == turns.count()
+    turns.unpersist()
+
+
+def _lineage_files(lin_dir):
+    return sorted(f for f in os.listdir(lin_dir) if f.endswith(".parquet")
+                  and not f.startswith((".", "_")))
+
+
+def test_kill_before_lineage_rename_stays_invisible(spark, tmp_path):
+    """A kill between the data write and the lineage rename leaves the
+    attempt's rows on disk and its lineage only as a hidden temp file:
+    readers skip that file, so nothing is committed, none of the rows
+    surface, and the next run commits every key exactly once."""
+    out_dir = str(tmp_path / "out")
+    lin_dir = str(tmp_path / "lineage")
+    turns = synthetic_turns(spark, N_CONVS).cache()
+    job = ExtractionJob(spark, out_dir, lin_dir, n_buckets=16, salt=2,
+                        partitions=8)
+    assert job.run(_half(turns), run_id="dead")["turns"] > 0
+    [committed] = _lineage_files(lin_dir)
+    os.replace(os.path.join(lin_dir, committed),
+               os.path.join(lin_dir, "." + committed))
+
+    assert job.completed_buckets().count() == 0
+    assert job.read_output().count() == 0
+    assert os.path.isdir(os.path.join(out_dir, "run_id=dead"))
+
+    job.run(turns, run_id="live")
+    final = job.read_output()
+    assert final.filter(F.col("run_id") == "dead").count() == 0
+    keys = final.groupBy("conv_id", "turn_idx").count()
+    assert keys.filter("count != 1").count() == 0
+    assert keys.count() == turns.count()
+    turns.unpersist()
+
+
+def test_spark_and_pyarrow_lineage_files_read_together(spark, tmp_path):
+    """A lineage directory may hold commits of both formats: files the
+    Spark writer appended (INT96 completed_at, a _SUCCESS marker) and
+    the driver's pyarrow files (INT64 microsecond timestamps). Every
+    reader sees both, with bucket as bigint."""
+    import pyarrow.parquet as pq
+
+    from pdf_parser_spark.pipeline.job import LINEAGE_SCHEMA
+
+    out_dir = str(tmp_path / "out")
+    lin_dir = str(tmp_path / "lineage")
+    turns = synthetic_turns(spark, N_CONVS).cache()
+    job = ExtractionJob(spark, out_dir, lin_dir, n_buckets=16, salt=2,
+                        partitions=8)
+    job.run(_half(turns), run_id="r1")
+
+    # rewrite the first commit as the Spark writer stores it
+    [first] = _lineage_files(lin_dir)
+    rows = pq.read_table(os.path.join(lin_dir, first)).to_pylist()
+    os.remove(os.path.join(lin_dir, first))
+    spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1) \
+        .write.mode("append").parquet(lin_dir)
+    [spark_file] = _lineage_files(lin_dir)
+    meta = pq.ParquetFile(os.path.join(lin_dir, spark_file)).schema
+    assert meta.column(LINEAGE_SCHEMA.fieldNames().index(
+        "completed_at")).physical_type == "INT96"
+
+    job.run(turns, run_id="r2")
+    assert len(_lineage_files(lin_dir)) == 2
+
+    def bucket_type(df):
+        return df.schema["bucket"].dataType.simpleString()
+    want = {r.b for r in turns.select(
+        F.pmod(F.xxhash64("conv_id"), F.lit(16)).alias("b")).collect()}
+    done = job.completed_buckets()
+    assert bucket_type(done) == "bigint"
+    assert {r.bucket for r in done.collect()} == want
+
+    final = job.read_output()
+    assert bucket_type(final) == "bigint"
+    keys = final.groupBy("conv_id", "turn_idx").count()
+    assert keys.filter("count != 1").count() == 0
+    assert keys.count() == turns.count()
+
+    lineage = spark.read.parquet(lin_dir)
+    assert bucket_type(lineage) == "bigint"
+    assert lineage.count() == len(want)
+    assert lineage.filter(F.col("completed_at").isNull()).count() == 0
+    assert {r.run_id for r in lineage.select("run_id").collect()} == \
+        {"r1", "r2"}
+    turns.unpersist()
+
+
 def test_extract_dedup_equals_direct(spark):
     """Distinct-document extraction (hash -> extract once -> join back)
     must produce exactly the rows of direct per-turn extraction; the
