@@ -666,9 +666,6 @@ class PdfDict:
     entries: tuple  # tuple of (key, value) pairs, last-wins already applied
     offset: int = 0
 
-    def as_dict(self) -> dict:
-        return dict(self.entries)
-
     def get(self, key: str, default=None):
         for k, v in self.entries:
             if k == key:

@@ -1,6 +1,6 @@
-"""[EXTENSION] Standard security handler: empty-user-password RC4
-decryption (PDF 32000-1 §7.6.3: V1/V2 and V4 RC4 crypt filters,
-R2/R3/R4).
+"""[EXTENSION] Standard security handler: empty-user-password RC4 and
+AESV2 decryption (PDF 32000-1 §7.6.3: V1/V2, and V4 RC4 or AESV2 crypt
+filters, R2/R3/R4).
 
 The reference has no /Encrypt handling at all (nothing in
 /root/reference/src/ touches it) and would extract RC4 ciphertext as
@@ -226,8 +226,9 @@ def aes128_cbc_decrypt(key: bytes, iv_ct: bytes) -> bytes:
 
 
 class UnsupportedEncryption(Exception):
-    """Shape outside the V1/V2+R2/R3+Standard+empty-password envelope;
-    the caller surfaces parse_error='encrypted'."""
+    """Shape outside the Standard-handler, empty-user-password envelope
+    (V1/V2 RC4, V4 with RC4 or AESV2 crypt filters; R2/R3/R4); the
+    caller surfaces parse_error='encrypted'."""
 
 
 class StandardDecryptor:

@@ -61,6 +61,32 @@ def _to_plain(obj):
     return obj
 
 
+def _defilter(data: bytes, sdict: PdfDict, resolve) -> bytes:
+    """Apply a stream dict's /Filter chain with its /DecodeParms (a
+    dict for the first filter, or an array with one entry per filter);
+    ``resolve`` dereferences indirect values."""
+    filt = resolve(sdict.get("Filter"))
+    if filt is None or isinstance(filt, PdfNull):
+        return data
+    if isinstance(filt, PdfName):
+        names = [filt.value]
+    elif isinstance(filt, PdfArray):
+        names = [resolve(f).value for f in filt]
+    else:
+        raise PdfStructureError("bad /Filter")
+    parms = resolve(sdict.get("DecodeParms") or sdict.get("DP"))
+    if parms is None or isinstance(parms, PdfNull):
+        parms_list = [None] * len(names)
+    elif isinstance(parms, PdfDict):
+        parms_list = [_to_plain(parms)] + [None] * (len(names) - 1)
+    elif isinstance(parms, PdfArray):
+        parms_list = [_to_plain(resolve(p)) for p in parms]
+        parms_list += [None] * (len(names) - len(parms_list))
+    else:
+        raise PdfStructureError("bad /DecodeParms")
+    return decode_stream(data, names, parms_list)
+
+
 @dataclass
 class PageInfo:
     """ref src/page.rs:28-32 (page_number, thumbnail, external_objects)
@@ -95,9 +121,9 @@ class PdfDocument:
         # PdfEncryptedError docstring; reference is equally blind).
         # [EXTENSION] Standard-handler documents with an EMPTY user
         # password (owner-password-only, the common crawl case) are
-        # transparently decrypted for V1/V2 and V4 RC4 crypt filters,
-        # R2/R3/R4 (kernel/crypt.py); every other shape — AES, V5+,
-        # non-Standard, real user passwords — surfaces
+        # transparently decrypted for V1/V2 RC4 and V4 RC4 or AESV2
+        # crypt filters, R2/R3/R4 (kernel/crypt.py); every other shape
+        # — AESV3/V5+, non-Standard, real user passwords — surfaces
         # parse_error='encrypted'.
         self._crypt = None
         enc = trailer.get("Encrypt")
@@ -215,48 +241,18 @@ class PdfDocument:
     def stream_data(self, stm: PdfStreamObj) -> bytes:
         """Defiltered stream body: full /Filter chain + /DecodeParms
         (the reference honors only filters[0] — src/image.rs:116-123)."""
-        data = self.stream_raw(stm)
-        filt = self.resolve(stm.dict.get("Filter"))
-        if filt is None or isinstance(filt, PdfNull):
-            return data
-        if isinstance(filt, PdfName):
-            names = [filt.value]
-        elif isinstance(filt, PdfArray):
-            names = [self.resolve(f).value for f in filt]
-        else:
-            raise PdfStructureError("bad /Filter")
-        parms = self.resolve(stm.dict.get("DecodeParms") or
-                             stm.dict.get("DP"))
-        if parms is None or isinstance(parms, PdfNull):
-            parms_list = [None] * len(names)
-        elif isinstance(parms, PdfDict):
-            parms_list = [_to_plain(parms)] + [None] * (len(names) - 1)
-        elif isinstance(parms, PdfArray):
-            parms_list = [_to_plain(self.resolve(p)) for p in parms]
-            parms_list += [None] * (len(names) - len(parms_list))
-        else:
-            raise PdfStructureError("bad /DecodeParms")
-        return decode_stream(data, names, parms_list)
+        return _defilter(self.stream_raw(stm), stm.dict, self.resolve)
 
     def _stream_data_raw(self, stm: PdfStreamObj) -> bytes:
         """Stream decode callback for xref-stream loading (runs before
         self is fully constructed — no xref lookups allowed, so /Length
-        must be direct, which spec §7.5.8.2 requires for XRef streams)."""
+        must be direct, which spec §7.5.8.2 requires for XRef streams;
+        XRef streams are never encrypted, so nothing is decrypted)."""
         length = stm.dict.get("Length")
         if not isinstance(length, PdfInteger):
             raise PdfStructureError("xref stream /Length must be direct")
         data = self.buf[stm.data_offset:stm.data_offset + length.value]
-        filt = stm.dict.get("Filter")
-        if filt is None or isinstance(filt, PdfNull):
-            names = []
-        elif isinstance(filt, PdfName):
-            names = [filt.value]
-        else:
-            names = [f.value for f in filt]
-        parms = stm.dict.get("DecodeParms")
-        parms_list = ([_to_plain(parms)] + [None] * (len(names) - 1)
-                      if isinstance(parms, PdfDict) else [None] * len(names))
-        return decode_stream(data, names, parms_list)
+        return _defilter(data, stm.dict, lambda obj: obj)
 
     # -------------------------------------------------------- page tree
 

@@ -41,14 +41,15 @@ class PdfStructureError(ValueError):
 
 class PdfEncryptedError(PdfStructureError):
     """[EXTENSION] the trailer carries /Encrypt in a shape this engine
-    cannot recover (PDF 32000-1 §7.6). Empty-user-password RC4
-    documents (Standard handler, V1/V2/V4-RC4, R2/R3/R4) are decrypted
-    transparently by kernel/crypt.py and never raise this; everything
-    else — AES, V5+, non-Standard handlers, real user passwords —
-    does. Without the probe such a document parses its STRUCTURE fine
-    and then silently extracts ciphertext mojibake, poisoning a corpus
-    with no lineage signal (the reference has no Encrypt handling
-    anywhere in /root/reference/src/ and does exactly that).
+    cannot recover (PDF 32000-1 §7.6). Empty-user-password documents
+    under the Standard handler (V1/V2 RC4, V4 with RC4 or AESV2 crypt
+    filters, R2/R3/R4) are decrypted transparently by kernel/crypt.py
+    and never raise this; everything else — AESV3/V5+, non-Standard
+    handlers, real user passwords — does. Without the probe such a
+    document parses its STRUCTURE fine and then silently extracts
+    ciphertext mojibake, poisoning a corpus with no lineage signal (the
+    reference has no Encrypt handling anywhere in its src/ and does
+    exactly that).
     extract_text maps this to parse_error='encrypted'."""
 
 

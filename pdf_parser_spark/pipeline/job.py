@@ -13,7 +13,8 @@ north_rule requirements implemented here:
 - df.observe() metrics: one-pass counts without a second scan
 
 Output is partitioned by run_id only; bucket is a stored data column.
-Atomicity comes from the lineage row, not the directory layout: a
+Each attempt mints its own run_id (a uuid4), so no two attempts share
+one. Atomicity comes from the lineage row, not the directory layout: a
 bucket's rows count only once a lineage row carries their
 (bucket, run_id) pair, so a retried or killed attempt either commits
 the whole bucket or leaves it to be reprocessed. The commit is ONE
@@ -94,22 +95,14 @@ class ExtractionJob:
 
     # -------------------------------------------------------------- run
 
-    def run(self, turns: DataFrame, run_id: str | None = None,
-            snapshot_id: str = "static") -> dict:
-        """Extract all not-yet-completed buckets; returns metrics.
+    def run(self, turns: DataFrame, snapshot_id: str = "static") -> dict:
+        """Extract all not-yet-completed buckets; returns metrics,
+        including the attempt's ``run_id``.
 
         The commit is one lineage file per attempt, renamed into
         lineage_dir once the data files have landed; an attempt that
-        commits no bucket writes none.
-
-        ``run_id`` must be unique PER ATTEMPT (leave it None for a
-        uuid). The crash-safety contract hangs on it: a killed
-        attempt's orphaned parquet rows stay invisible only because
-        no lineage row ever carries their (bucket, run_id) pair —
-        reusing an id across attempts would both resurrect orphans in
-        read_output() and fold them into this run's read-back lineage
-        counts (measured in scripts/scale_rehearsal.py's kill test)."""
-        run_id = run_id or uuid.uuid4().hex[:12]
+        commits no bucket writes none."""
+        run_id = uuid.uuid4().hex
         todo = turns.withColumn(
             "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)))
         done = [r.bucket for r in self.completed_buckets().collect()]
@@ -181,7 +174,7 @@ class ExtractionJob:
               "completed_at": now} for r in buckets],
             schema=_LINEAGE_ARROW)
         os.makedirs(self.lineage_dir, exist_ok=True)
-        name = f"lineage-{run_id}-{uuid.uuid4().hex}.parquet"
+        name = f"lineage-{run_id}.parquet"
         tmp = os.path.join(self.lineage_dir, "." + name)
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(self.lineage_dir, name))

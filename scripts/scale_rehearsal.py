@@ -121,12 +121,6 @@ def child_extract(out_dir: str, lineage_dir: str, corpus_dir: str,
         wave = turns.withColumn(
             "_b", F.pmod(F.xxhash64("conv_id"), F.lit(N_BUCKETS))) \
             .filter((F.col("_b") >= lo) & (F.col("_b") < hi)).drop("_b")
-        # run_id stays the uuid default: it must be unique PER
-        # ATTEMPT — a killed attempt's orphaned parquet rows share the
-        # bucket, and only a fresh run_id keeps them invisible to
-        # read_output()'s (bucket, run_id) semi-join (measured: a
-        # fixed per-wave run_id resurrected 333 orphan rows in this
-        # exact rehearsal).
         m = job.run(wave)
         print(f"WAVE {w} DONE {m}", flush=True)
     print("RSS_CHILD " + json.dumps(sampler.stop()), flush=True)
@@ -135,12 +129,12 @@ def child_extract(out_dir: str, lineage_dir: str, corpus_dir: str,
 
 # ---------------------------------------------------------- the phases
 
-def _stage(df, name: str, results: dict, extends: str | None = None):
+def _stage(df, name: str, results: dict):
     """Execute a stage once; record wall, rows, actual partitions.
 
     ``sec`` includes recomputing the upstream stages the plan is built
-    on; ``exclusive_sec`` subtracts the ``sec`` of the stage it
-    ``extends``, leaving this stage's own share."""
+    on (no stage's input is cached), so it is not the stage's own
+    time."""
     from pyspark.sql import functions as F
 
     t0 = time.perf_counter()
@@ -149,13 +143,10 @@ def _stage(df, name: str, results: dict, extends: str | None = None):
                   F.coalesce(F.sum("count"), F.lit(0)).alias("n_rows"))
              .first())
     sec = round(time.perf_counter() - t0, 2)
-    exclusive = round(sec - results["stages"][extends]["sec"], 2) \
-        if extends else sec
-    results["stages"][name] = {"sec": sec, "exclusive_sec": exclusive,
-                               "rows": int(parts["n_rows"]),
+    results["stages"][name] = {"sec": sec, "rows": int(parts["n_rows"]),
                                "partitions": int(parts["n_parts"])}
-    print(f"STAGE {name}: {sec}s ({exclusive}s own) "
-          f"rows={parts['n_rows']} parts={parts['n_parts']}", flush=True)
+    print(f"STAGE {name}: {sec}s rows={parts['n_rows']} "
+          f"parts={parts['n_parts']}", flush=True)
 
 
 def _output_hash(spark, out_dir: str, lineage_dir: str):
@@ -344,10 +335,10 @@ def main() -> None:
 
     red = redact_pii(ld).drop("text") \
         .withColumnRenamed("text_redacted", "text")
-    _stage(red, "pii_redact", results, extends="line_dedup")
+    _stage(red, "pii_redact", results)
 
     q = with_lang_id(with_quality(red))
-    _stage(q, "quality_langid", results, extends="pii_redact")
+    _stage(q, "quality_langid", results)
 
     # benchmark = the unique content lines of a deterministic ~1/199
     # doc slice (stands in for a real eval set; broadcast side, as in
@@ -356,17 +347,17 @@ def main() -> None:
              .select(F.split("text", "\\n").getItem(0).alias("text")))
     contam = ngram_contamination(q, bench)
     clean = q.join(contam, "doc_id", "left_anti")
-    _stage(clean, "decontaminate", results, extends="quality_langid")
+    _stage(clean, "decontaminate", results)
     assert 0 < results["stages"]["decontaminate"]["rows"] \
         < results["stages"]["quality_langid"]["rows"]
 
     sampled = deterministic_sample(
         clean.withColumn("source", F.lit("main")), {"main": 0.5})
-    _stage(sampled, "deterministic_sample", results, extends="decontaminate")
+    _stage(sampled, "deterministic_sample", results)
 
     packed = pack_chunks(sampled, budget=2048, order_col="doc_id",
                          part_col="bucket", tokens_col="n_tokens")
-    _stage(packed, "pack_chunks", results, extends="deterministic_sample")
+    _stage(packed, "pack_chunks", results)
 
     results["phases"]["curation_total_sec"] = round(
         time.perf_counter() - t_all, 1)

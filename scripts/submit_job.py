@@ -26,7 +26,6 @@ def main() -> None:
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--salt", type=int, default=4)
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--run-id", default=None)
     ap.add_argument("--snapshot-id", default="static")
     args = ap.parse_args()
 
@@ -53,7 +52,7 @@ def main() -> None:
     job = ExtractionJob(spark, args.output, args.lineage,
                         n_buckets=args.n_buckets, salt=args.salt,
                         partitions=args.partitions)
-    metrics = job.run(turns, run_id=args.run_id, snapshot_id=snapshot)
+    metrics = job.run(turns, snapshot_id=snapshot)
     print(json.dumps(metrics))
 
 

@@ -298,6 +298,21 @@ def test_undefined_keyword_is_lexer_error_not_typeerror():
     assert "TypeError" not in res["parse_error"]
 
 
+def test_xref_stream_array_decode_parms():
+    """An XRef stream whose /Filter and /DecodeParms are the
+    spec-legal one-element arrays (§7.3.8.2) decodes like the dict
+    form: the predictor parameters reach the Flate decoder."""
+    pdf, golden = get_fixture("pdf-xrefstream")
+    dict_form = (b"/Filter /FlateDecode "
+                 b"/DecodeParms <</Predictor 12 /Columns 4>>")
+    array_form = (b"/Filter [/FlateDecode] "
+                  b"/DecodeParms [<</Predictor 12 /Columns 4>>]")
+    assert pdf.count(dict_form) == 1
+    res = extract_text(pdf.replace(dict_form, array_form))
+    assert res["parse_error"] is None, res["parse_error"]
+    assert res["text"] == golden["text"] == "XRef stream works"
+
+
 # Per-fixture parsed-object-count goldens: pinned so a kernel change
 # that silently skips (or double-parses) objects while leaving
 # text/pages/spans identical is still caught. ex08's driver oracle

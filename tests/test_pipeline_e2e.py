@@ -4,6 +4,7 @@ and assert 100% per-turn text equality; then prove idempotent resume
 (partial run -> rerun -> complete output, no duplicates)."""
 
 import os
+import re
 import shutil
 
 import pytest
@@ -78,13 +79,13 @@ def test_job_resume_idempotent(spark, tmp_path):
     # partial run: only conversations hashing into half the buckets
     half = turns.withColumn(
         "b", F.pmod(F.xxhash64("conv_id"), F.lit(16))).filter("b < 8").drop("b")
-    m1 = job.run(half, run_id="r1")
+    m1 = job.run(half)
     assert m1["turns"] > 0
     done_after_1 = {r.bucket for r in job.completed_buckets().collect()}
     assert 0 < len(done_after_1) <= 8
 
     # resume with the FULL input: only missing buckets are processed
-    m2 = job.run(turns, run_id="r2")
+    m2 = job.run(turns)
     assert m1["turns"] + m2["turns"] == total
 
     final = job.read_output()
@@ -94,7 +95,7 @@ def test_job_resume_idempotent(spark, tmp_path):
     assert dupes.count() == 0
 
     # a third run is a no-op (all buckets committed)
-    m3 = job.run(turns, run_id="r3")
+    m3 = job.run(turns)
     assert m3["turns"] == 0
     assert job.read_output().count() == total
     assert m1["failures"] == 0 and m2["failures"] == 0
@@ -113,13 +114,13 @@ def test_lineage_readback_prunes_to_run(spark, tmp_path):
                         partitions=8)
     half = turns.withColumn(
         "b", F.pmod(F.xxhash64("conv_id"), F.lit(16))).filter("b < 8").drop("b")
-    job.run(half, run_id="r1")
-    job.run(turns, run_id="r2")
+    r1 = job.run(half)["run_id"]
+    r2 = job.run(turns)["run_id"]
 
     # on-disk layout: one subdirectory per run, no bucket= below it,
     # at most one parquet file per write task
     subdirs = {d for d in os.listdir(out_dir) if d.startswith("run_id=")}
-    assert subdirs == {"run_id=r1", "run_id=r2"}
+    assert subdirs == {f"run_id={r1}", f"run_id={r2}"}
     for d in subdirs:
         entries = os.listdir(os.path.join(out_dir, d))
         assert not [e for e in entries if e.startswith("bucket=")], d
@@ -140,7 +141,7 @@ def test_lineage_readback_prunes_to_run(spark, tmp_path):
     # the exact read-back frame job.run builds: filter must appear as a
     # PartitionFilter (file pruning), never a post-scan data filter
     written = (spark.read.parquet(out_dir)
-               .filter(F.col("run_id") == "r1"))
+               .filter(F.col("run_id") == r1))
     plan = written._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     start = plan.index("PartitionFilters")
@@ -159,20 +160,49 @@ def test_killed_attempt_rows_stay_invisible(spark, tmp_path):
                         partitions=8)
     half = turns.withColumn(
         "b", F.pmod(F.xxhash64("conv_id"), F.lit(16))).filter("b < 8").drop("b")
-    assert job.run(half, run_id="dead")["turns"] > 0
+    dead = job.run(half)
+    assert dead["turns"] > 0
     shutil.rmtree(lin_dir)      # the lineage commit never happened
     assert job.completed_buckets().count() == 0
 
-    job.run(turns, run_id="live")
+    job.run(turns)
     final = job.read_output()
-    assert final.filter(F.col("run_id") == "dead").count() == 0
+    assert final.filter(F.col("run_id") == dead["run_id"]).count() == 0
     keys = final.groupBy("conv_id", "turn_idx").count()
     assert keys.filter("count != 1").count() == 0
     assert keys.count() == turns.count()
     assert (turns.select("conv_id", "turn_idx")
             .exceptAll(final.select("conv_id", "turn_idx")).count() == 0)
     # the orphans are still on disk: invisibility comes from lineage
-    assert os.path.isdir(os.path.join(out_dir, "run_id=dead"))
+    assert os.path.isdir(os.path.join(out_dir, f"run_id={dead['run_id']}"))
+    turns.unpersist()
+
+
+def test_attempt_ids_are_minted_per_run(spark, tmp_path):
+    """The attempt id is the job's, not the caller's: run() takes no
+    run_id, and two attempts over the same buckets, the first killed
+    before its commit, get different ids, so the killed attempt's rows
+    never surface and every key is committed exactly once."""
+    out_dir = str(tmp_path / "out")
+    lin_dir = str(tmp_path / "lineage")
+    turns = synthetic_turns(spark, N_CONVS).cache()
+    job = ExtractionJob(spark, out_dir, lin_dir, n_buckets=16, salt=2,
+                        partitions=8)
+    with pytest.raises(TypeError):
+        job.run(turns, run_id="x")
+
+    first = job.run(_half(turns))
+    assert first["turns"] > 0
+    shutil.rmtree(lin_dir)      # killed before the lineage commit
+    second = job.run(turns)
+    assert second["turns"] == turns.count()
+    assert first["run_id"] != second["run_id"]
+    for m in (first, second):
+        assert re.fullmatch("[0-9a-f]{32}", m["run_id"]), m["run_id"]
+
+    keys = job.read_output().groupBy("conv_id", "turn_idx").count()
+    assert keys.filter("count != 1").count() == 0
+    assert keys.count() == turns.count()
     turns.unpersist()
 
 
@@ -206,11 +236,9 @@ def test_run_spark_job_count(spark, tmp_path):
     job = ExtractionJob(spark, str(tmp_path / "out"),
                         str(tmp_path / "lineage"), n_buckets=16, salt=2,
                         partitions=8)
-    fresh = _spark_jobs(spark, "fresh",
-                        lambda: job.run(_half(turns), run_id="r1"))
-    resume = _spark_jobs(spark, "resume",
-                         lambda: job.run(turns, run_id="r2"))
-    noop = _spark_jobs(spark, "noop", lambda: job.run(turns, run_id="r3"))
+    fresh = _spark_jobs(spark, "fresh", lambda: job.run(_half(turns)))
+    resume = _spark_jobs(spark, "resume", lambda: job.run(turns))
+    noop = _spark_jobs(spark, "noop", lambda: job.run(turns))
     assert fresh <= 4 and resume <= 6 and noop <= 4, (fresh, resume, noop)
     assert job.read_output().count() == turns.count()
     turns.unpersist()
@@ -231,18 +259,20 @@ def test_kill_before_lineage_rename_stays_invisible(spark, tmp_path):
     turns = synthetic_turns(spark, N_CONVS).cache()
     job = ExtractionJob(spark, out_dir, lin_dir, n_buckets=16, salt=2,
                         partitions=8)
-    assert job.run(_half(turns), run_id="dead")["turns"] > 0
+    dead = job.run(_half(turns))
+    assert dead["turns"] > 0
     [committed] = _lineage_files(lin_dir)
+    assert committed == f"lineage-{dead['run_id']}.parquet"
     os.replace(os.path.join(lin_dir, committed),
                os.path.join(lin_dir, "." + committed))
 
     assert job.completed_buckets().count() == 0
     assert job.read_output().count() == 0
-    assert os.path.isdir(os.path.join(out_dir, "run_id=dead"))
+    assert os.path.isdir(os.path.join(out_dir, f"run_id={dead['run_id']}"))
 
-    job.run(turns, run_id="live")
+    job.run(turns)
     final = job.read_output()
-    assert final.filter(F.col("run_id") == "dead").count() == 0
+    assert final.filter(F.col("run_id") == dead["run_id"]).count() == 0
     keys = final.groupBy("conv_id", "turn_idx").count()
     assert keys.filter("count != 1").count() == 0
     assert keys.count() == turns.count()
@@ -263,7 +293,7 @@ def test_spark_and_pyarrow_lineage_files_read_together(spark, tmp_path):
     turns = synthetic_turns(spark, N_CONVS).cache()
     job = ExtractionJob(spark, out_dir, lin_dir, n_buckets=16, salt=2,
                         partitions=8)
-    job.run(_half(turns), run_id="r1")
+    r1 = job.run(_half(turns))["run_id"]
 
     # rewrite the first commit as the Spark writer stores it
     [first] = _lineage_files(lin_dir)
@@ -276,7 +306,7 @@ def test_spark_and_pyarrow_lineage_files_read_together(spark, tmp_path):
     assert meta.column(LINEAGE_SCHEMA.fieldNames().index(
         "completed_at")).physical_type == "INT96"
 
-    job.run(turns, run_id="r2")
+    r2 = job.run(turns)["run_id"]
     assert len(_lineage_files(lin_dir)) == 2
 
     def bucket_type(df):
@@ -298,7 +328,7 @@ def test_spark_and_pyarrow_lineage_files_read_together(spark, tmp_path):
     assert lineage.count() == len(want)
     assert lineage.filter(F.col("completed_at").isNull()).count() == 0
     assert {r.run_id for r in lineage.select("run_id").collect()} == \
-        {"r1", "r2"}
+        {r1, r2}
     turns.unpersist()
 
 

@@ -1,8 +1,8 @@
 """The literal north_rule launch shape, end-to-end: ``spark-submit
 --py-files dist/pdf_parser_spark.zip scripts/submit_job.py`` with an
 emptied PYTHONPATH (imports must resolve from the zip), then the same
-``--run-id`` again to prove idempotent resume through the packaged
-entry point — not just through the pytest-imported library."""
+command again to prove idempotent resume through the packaged entry
+point — not just through the pytest-imported library."""
 
 from __future__ import annotations
 
@@ -41,8 +41,7 @@ def test_spark_submit_pyfiles_launch_and_resume(spark, tmp_path):
            "--input", in_dir,
            "--output", str(tmp_path / "out"),
            "--lineage", str(tmp_path / "lineage"),
-           "--n-buckets", "2", "--salt", "1", "--partitions", "2",
-           "--run-id", "smoke"]
+           "--n-buckets", "2", "--salt", "1", "--partitions", "2"]
 
     def run_once() -> dict:
         p = subprocess.run(cmd, env=env, cwd=str(tmp_path),
@@ -54,6 +53,18 @@ def test_spark_submit_pyfiles_launch_and_resume(spark, tmp_path):
         return json.loads(metrics[-1])
 
     first = run_once()
-    assert first["turns"] > 0 and first["run_id"] == "smoke"
+    assert first["turns"] > 0
     resumed = run_once()
     assert resumed["turns"] == 0  # every bucket already committed
+    assert resumed["run_id"] != first["run_id"]  # each launch mints one
+
+
+def test_submit_rejects_run_id():
+    """The attempt id is minted by the job: the launcher takes no
+    ``--run-id`` and argparse refuses it before any Spark work."""
+    p = subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "submit_job.py"),
+         "--input", "i", "--output", "o", "--lineage", "l",
+         "--run-id", "x"], capture_output=True, text=True, timeout=60)
+    assert p.returncode == 2
+    assert "unrecognized arguments: --run-id x" in p.stderr

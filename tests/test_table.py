@@ -52,7 +52,7 @@ def test_snapshot_lineage_protocol(spark, tmp_path):
     job = ExtractionJob(spark, str(tmp_path / "out"),
                         str(tmp_path / "lineage"), n_buckets=4, salt=2,
                         partitions=4)
-    m = job.run(load_table(spark, d), run_id="r1", snapshot_id=s1)
+    m = job.run(load_table(spark, d), snapshot_id=s1)
     assert m["turns"] > 0
 
     lineage = spark.read.parquet(str(tmp_path / "lineage"))
