@@ -162,6 +162,20 @@ _HEX_DIGITS = frozenset(b"0123456789abcdefABCDEF")
 _WS_ALL = frozenset({0, 9, 10, 12, 13, 32})  # §7.2.2 white-space chars
 
 
+def find_ei(buf: bytes, i: int) -> int:
+    """Offset of the ``EI`` that ends inline image data starting at
+    ``i`` (§8.9.7): the first ``EI`` with an irregular byte (or the
+    buffer edge) on both sides; -1 when there is none."""
+    n = len(buf)
+    k = buf.find(b"EI", i)
+    while k != -1:
+        if (k == 0 or buf[k - 1] in _IRREGULAR) and \
+                (k + 2 >= n or buf[k + 2] in _IRREGULAR):
+            return k
+        k = buf.find(b"EI", k + 1)
+    return -1
+
+
 def _inline_span(buf: bytes, after_id: int, ei: int) -> tuple[int, int]:
     """Data span of a BI..ID..EI inline image (§8.9.7): one framing
     whitespace byte after ``ID`` and one before ``EI`` are excluded
@@ -569,13 +583,7 @@ class Lexer:
                 if op == "ID":
                     # inline image data follows until 'EI' delimiter;
                     # emit the data span (PDF 32000-1 §8.9.7)
-                    k = buf.find(b"EI", i)
-                    while k != -1:
-                        before_ws = k == 0 or buf[k - 1] in _IRREGULAR
-                        after_ws = (k + 2 >= n) or (buf[k + 2] in _IRREGULAR)
-                        if before_ws and after_ws:
-                            break
-                        k = buf.find(b"EI", k + 1)
+                    k = find_ei(buf, i)
                     if k == -1:
                         raise err("UnterminatedInlineImage")
                     d0, d1 = _inline_span(buf, i, k)

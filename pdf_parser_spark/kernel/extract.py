@@ -26,7 +26,8 @@ def extract_text(pdf_bytes: bytes, with_images: bool = False,
 
     Returns a dict with keys:
       text        str   reading-ordered extracted text ('' on failure)
-      spans       list  of (page:int, x:float, y:float, font:str, s:str)
+      spans       list  of TextSpan (page:int, x:float, y:float, font:str,
+                        text:str) named tuples
       n_pages     int
       n_objects   int   number of indirect objects parsed
       bytes       int   input size
@@ -67,9 +68,11 @@ def extract_text(pdf_bytes: bytes, with_images: bool = False,
             all_spans.extend(interp.run(content))
             if with_images:
                 page_imgs = extract_page_images(doc, page)
-                # [EXTENSION] inline BI..ID..EI images, same D1-D6
-                # assembly, appended after the XObject images
-                page_imgs.extend(extract_inline_images(doc, page))
+                # [EXTENSION] inline BI..ID..EI images recorded by the
+                # interpreter's scan, same D1-D6 assembly, appended
+                # after the XObject images
+                page_imgs.extend(extract_inline_images(
+                    page.page_number, interp.inline_images))
                 for img in page_imgs:
                     result["images"].append({
                         "page": img.page, "name": img.name,
@@ -77,8 +80,7 @@ def extract_text(pdf_bytes: bytes, with_images: bool = False,
                         "colorspace": img.colorspace, "format": img.format,
                         "data": img.data,
                     })
-        result["spans"] = [(s.page, s.x, s.y, s.font, s.text)
-                           for s in all_spans]
+        result["spans"] = all_spans
         result["text"] = spans_to_text(all_spans)
         result["n_objects"] = doc.n_objects_parsed
     except PdfEncryptedError:

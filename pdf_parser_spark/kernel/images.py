@@ -28,11 +28,9 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from .cos import (
-    TK_ARR_END, TK_ARR_START, TK_BOOL, TK_INLINE_DATA, TK_INT, TK_NAME,
-    TK_OP, TK_REAL, PdfDict, PdfIndirectRef, PdfInteger, PdfName,
-    PdfStreamObj, tokenize,
+    TK_ARR_END, TK_ARR_START, TK_BOOL, TK_INT, TK_NAME, TK_REAL,
+    PdfIndirectRef, PdfInteger, PdfName, PdfStreamObj,
 )
-from .fileparse import PdfStructureError
 from .jpegdec import JpegError, decode_baseline_jpeg
 
 
@@ -99,48 +97,62 @@ def extract_page_images(doc, page) -> list[ExtractedImage]:
             continue  # anti-join (ref src/page.rs:66-71)
         w, h, cs, fname = _image_params(doc, obj)
         if fname == "FlateDecode":
-            raw = doc.stream_data(obj)  # full chain incl. predictors
-            ncomp = 3 if cs == "DeviceRGB" else 1
-            expected = w * h * ncomp
-            if len(raw) < expected:
+            # full chain incl. predictors
+            fmt, px = "raw-rgb", _raster(doc.stream_data(obj), w, h, cs)
+            if px is None:
                 raise ImageError("image raster truncated")
-            raw = raw[:expected]
-            if cs == "DeviceGray":
-                # Gray -> RGB expansion (ref src/image.rs:146-160
-                # into_rgb8 semantics)
-                raw = bytes(b for px in raw for b in (px, px, px))
-            images.append(ExtractedImage(page.page_number, name, w, h, cs,
-                                         "raw-rgb", raw))
-        else:  # DCTDecode: baseline JPEG raster decode (ref
-            # src/image.rs:140-143 jpeg_decoder::Decoder), then the
-            # same Gray->RGB expansion as into_rgb8()
+        else:  # DCTDecode (ref src/image.rs:140-143 jpeg_decoder::Decoder)
             data = doc.stream_raw(obj)
             try:
-                jw, jh, ncomp, px = decode_baseline_jpeg(data)
-                if (jw, jh) != (w, h):
-                    # dict lies about dimensions (stale /Width from a
-                    # generator that scales via cm): treat like any
-                    # other undecodable-for-us JPEG
-                    raise JpegError("dims disagree with /Width /Height")
+                fmt, px = "raw-rgb", _dct_raster(data, w, h)
             except JpegError:
                 # arithmetic-coded / corrupt / dim-mismatched JPEG:
                 # keep the bytes so the sink can persist them — the
                 # reference panics here (unwrap), we degrade gracefully
                 # and NEVER abort the document's text extraction
-                images.append(ExtractedImage(page.page_number, name, w,
-                                             h, cs, "jpeg", data))
-                continue
-            if ncomp == 1:
-                px = bytes(b for p in px for b in (p, p, p))
-            images.append(ExtractedImage(page.page_number, name, w, h, cs,
-                                         "raw-rgb", px))
+                fmt, px = "jpeg", data
+        images.append(ExtractedImage(page.page_number, name, w, h, cs,
+                                     fmt, px))
     return images
+
+
+# ------------------------------------------------------------ raster (D5)
+# Shared by XObject and inline images; each caller keeps its own policy
+# for a short raster or an undecodable JPEG.
+
+def _gray_to_rgb(px) -> bytes:
+    """Gray -> RGB expansion (ref src/image.rs:146-160 ``into_rgb8``)."""
+    return bytes(b for p in px for b in (p, p, p))
+
+
+def _raster(data, w: int, h: int, cs: str):
+    """The first ``w*h`` pixels of decoded ``cs`` samples as RGB, or
+    None when ``data`` holds fewer."""
+    ncomp = 3 if cs == "DeviceRGB" else 1
+    expected = w * h * ncomp
+    if len(data) < expected:
+        return None
+    raw = data[:expected]
+    return raw if ncomp == 3 else _gray_to_rgb(raw)
+
+
+def _dct_raster(data: bytes, w: int, h: int):
+    """JPEG -> RGB pixels; JpegError when the codec cannot decode it or
+    its frame disagrees with /Width /Height (a stale dict from a
+    generator that scales via cm)."""
+    jw, jh, ncomp, px = decode_baseline_jpeg(data)
+    if (jw, jh) != (w, h):
+        raise JpegError("dims disagree with /Width /Height")
+    return _gray_to_rgb(px) if ncomp == 1 else px
 
 
 # ------------------------------------------------ inline images (BI/ID/EI)
 # [EXTENSION] the reference ignores inline images entirely (its content
 # handling never reaches §8.9.7); real-world PDFs carry masks/logos
-# inline, so they flow through the same D1-D6 assembly here.
+# inline, so they flow through the same D1-D6 assembly here. The content
+# interpreter records each image at its ``ID`` (dict operands + data
+# bytes, ``ContentInterpreter.inline_images``) during the text scan, so
+# the page is neither decoded nor scanned a second time for them.
 
 # §8.9.7 abbreviated dict keys / values
 _INLINE_KEY = {"W": "Width", "H": "Height", "CS": "ColorSpace",
@@ -155,31 +167,33 @@ _INLINE_FILTER = {"AHx": "ASCIIHexDecode", "A85": "ASCII85Decode",
                   "DCT": "DCTDecode"}
 
 
-def _parse_inline_value(toks, i):
-    """One inline-dict value starting at token i: scalar or flat array.
-    Returns (value, next_i); value is a python scalar or list.
-
-    Never raises and never consumes the TK_INLINE_DATA token: a
-    truncated dict (``... BI /W`` at end of stream) returns with
-    ``i == len(toks)``, and a key with no value right before ID
-    (``/W ID ...``) returns WITHOUT advancing so the caller's loop
-    still sees the data token and attributes it to this BI — not the
-    next image's."""
-    if i >= len(toks):
-        return None, i
-    t = toks[i]
-    if t.kind == TK_INLINE_DATA:
-        return None, i
-    if t.kind == TK_ARR_START:
-        arr = []
+def _inline_params(ops: list) -> dict:
+    """The inline dict from the ``(kind, value)`` operands before ID.
+    Each name is a key and the operand after it is its value — a name
+    too, since names are values. An array value is the list of its
+    items' values, a number/name/boolean is itself, any other operand
+    is None, and a key with no value before ID maps to None."""
+    params: dict = {}
+    i, n = 0, len(ops)
+    while i < n:
+        kind, key = ops[i]
         i += 1
-        while i < len(toks) and toks[i].kind != TK_ARR_END:
-            arr.append(toks[i].value)
+        if kind != TK_NAME:
+            continue
+        val = None
+        if i < n:
+            kind, val = ops[i]
             i += 1
-        return arr, i + 1
-    if t.kind in (TK_INT, TK_REAL, TK_NAME, TK_BOOL):
-        return t.value, i + 1
-    return None, i + 1
+            if kind == TK_ARR_START:
+                val = []
+                while i < n and ops[i][0] != TK_ARR_END:
+                    val.append(ops[i][1])
+                    i += 1
+                i += 1
+            elif kind not in (TK_INT, TK_REAL, TK_NAME, TK_BOOL):
+                val = None
+        params[_INLINE_KEY.get(key, key)] = val
+    return params
 
 
 def _assemble_inline(params: dict, data: bytes, page_number: int,
@@ -215,64 +229,31 @@ def _assemble_inline(params: dict, data: bytes, page_number: int,
             data = flate_decode(data, None)
             filters = []
         if filters == ["DCTDecode"]:
-            jw, jh, ncomp, px = decode_baseline_jpeg(data)
-            if (jw, jh) != (w, h):
-                return None
-            if ncomp == 1:
-                px = bytes(b for p in px for b in (p, p, p))
-            return ExtractedImage(page_number, name, w, h, cs,
-                                  "raw-rgb", px)
-        if filters:
+            px = _dct_raster(data, w, h)
+        elif filters:
             return None
+        else:
+            px = _raster(data, w, h, cs)
     except (JpegError, ValueError, OSError):
         return None
-
-    ncomp = 3 if cs == "DeviceRGB" else 1
-    expected = w * h * ncomp
-    if len(data) < expected:
+    if px is None:
         return None
-    raw = data[:expected]
-    if cs == "DeviceGray":
-        raw = bytes(b for px_ in raw for b in (px_, px_, px_))
-    return ExtractedImage(page_number, name, w, h, cs, "raw-rgb", raw)
+    return ExtractedImage(page_number, name, w, h, cs, "raw-rgb", px)
 
 
-def extract_inline_images(doc, page) -> list[ExtractedImage]:
-    """BI..ID..EI images from a page's content streams, through the
-    same param/colorspace/filter/raster path as XObjects. Names are
-    ``BI1``, ``BI2``, ... in content order (XObject names never start
-    with an operator prefix in the fixture corpus; a real collision
-    would only affect display names, not parity)."""
-    content = doc.page_content_bytes(page)
-    if b"BI" not in content:
-        return []
-    try:
-        toks = tokenize(content, 0, content_mode=True)
-    except Exception:
-        return []  # malformed content already surfaces via text path
+def extract_inline_images(page_number: int,
+                          inline: list[tuple[list, bytes]]
+                          ) -> list[ExtractedImage]:
+    """Images from one page's ``ContentInterpreter.inline_images``,
+    through the same raster path as XObjects. Names are ``BI1``,
+    ``BI2``, ... in content order, one per ``ID``, skipped images
+    included (XObject names never start with an operator prefix in the
+    fixture corpus; a real collision would only affect display names,
+    not parity)."""
     images: list[ExtractedImage] = []
-    n_inline = 0
-    i = 0
-    n = len(toks)
-    while i < n:
-        t = toks[i]
-        if t.kind == TK_OP and t.value == "BI":
-            params: dict = {}
-            i += 1
-            while i < n and toks[i].kind != TK_INLINE_DATA:
-                if toks[i].kind == TK_NAME:
-                    key = toks[i].value
-                    val, i = _parse_inline_value(toks, i + 1)
-                    params[_INLINE_KEY.get(key, key)] = val
-                else:
-                    i += 1
-            if i >= n:
-                break
-            d0, d1 = toks[i].value
-            n_inline += 1
-            img = _assemble_inline(params, content[d0:d1],
-                                   page.page_number, f"BI{n_inline}")
-            if img is not None:
-                images.append(img)
-        i += 1
+    for k, (ops, data) in enumerate(inline, 1):
+        img = _assemble_inline(_inline_params(ops), data, page_number,
+                               f"BI{k}")
+        if img is not None:
+            images.append(img)
     return images

@@ -18,20 +18,26 @@ that drives the operator dispatch straight from the content-mode master
 regex, without materialising tokens; its string/hex/number/name semantics
 and error kinds/offsets are those of ``cos.Lexer`` in ``content_mode``
 (ref src/lexer.rs:215-688), where bare keywords become operators.
+Runs of ``tx ty Td`` and ``(string) Tj`` are consumed by one peephole
+regex match each; every other operator goes through one dispatch ladder.
+The same scan records each inline image (§8.9.7) at its ``ID``: the
+dict operands and the data bytes, which ``images.extract_inline_images``
+assembles, so a page's content is decoded and scanned once for text and
+images alike.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import NamedTuple
 
 from .cos import (
-    _CM_RE, _FallbackErr, _IRREGULAR, TK_ARR_END,
-    TK_ARR_START, TK_BOOL, TK_DICT_END, TK_DICT_START, TK_HEXSTR, TK_INT,
-    TK_NAME, TK_NULL, TK_OP, TK_REAL, TK_STR, LexerError, Token,
-    _fallback_error_kind, _scan_literal_string, parse_hex_string,
-    parse_name, parse_string, tokenize,
+    _CM_RE, _FallbackErr, TK_ARR_END, TK_ARR_START, TK_BOOL, TK_DICT_END,
+    TK_DICT_START, TK_HEXSTR, TK_INLINE_DATA, TK_INT, TK_NAME, TK_NULL,
+    TK_OP, TK_REAL, TK_STR, LexerError, _fallback_error_kind,
+    _inline_span, _scan_literal_string, find_ei, parse_hex_string,
+    parse_name, tokenize,
 )
 
 _MEMO_MISS = object()
@@ -302,7 +308,7 @@ TJ_SPACE_THRESHOLD = -180.0
 
 # Operators the text interpreter acts on; everything else (paths,
 # colours, XObjects, marked content) is a no-op for extraction.
-_TEXT_OPS = frozenset({"q", "Q", "cm", "BT", "ET", "Tf", "Td", "TD",
+_TEXT_OPS = frozenset({"q", "Q", "cm", "BT", "Tf", "Td", "TD",
                        "Tm", "T*", "TL", "Tj", "'", '"', "TJ"})
 _EMPTY_FONT = FontInfo(name="")
 
@@ -345,6 +351,8 @@ class ContentInterpreter:
         self.fonts = fonts
         self.page = page_number
         self.spans: list[TextSpan] = []
+        # one (dict operands, data bytes) pair per ``ID``, content order
+        self.inline_images: list[tuple[list, bytes]] = []
 
     def run(self, content: bytes) -> list[TextSpan]:
         """Fused scan-and-interpret: the content-mode master regex
@@ -353,7 +361,8 @@ class ContentInterpreter:
         irrelevant operators. Token-stream semantics are identical to
         ``cos.tokenize(content_mode=True)`` + the old token loop
         (asserted by test_property.py's fused-vs-tokenized check);
-        error kinds/offsets match the lexer's.
+        error kinds/offsets match the lexer's. Inline images land in
+        ``self.inline_images``.
         """
         if not content.strip():
             return self.spans
@@ -362,25 +371,24 @@ class ContentInterpreter:
         tm: Matrix = IDENTITY
         tlm: Matrix = IDENTITY
         leading = 0.0
-        font: FontInfo | None = None
+        font = _EMPTY_FONT
         font_size = 0.0
         # operands are (kind, value) pairs
         operands: list[tuple[str, object]] = []
+        spans_append = self.spans.append
+        page = self.page
 
         def opnum(t: tuple[str, object]) -> float:
             return float(t[1])
 
-        def emit(raw: bytes) -> None:
-            nonlocal tm
-            f = font if font is not None else _EMPTY_FONT
-            text = f.decode(raw)
-            if text == "":
-                return
-            # only the translation row of tm x ctm is needed
-            e1, f1 = tm[4], tm[5]
-            x = e1 * ctm[0] + f1 * ctm[2] + ctm[4]
-            y = e1 * ctm[1] + f1 * ctm[3] + ctm[5]
-            self.spans.append(TextSpan(self.page, x, y, f.name, text))
+        def emit(text: str) -> None:
+            if text:
+                # only the translation row of tm x ctm is needed
+                e1, f1 = tm[4], tm[5]
+                spans_append(TextSpan(page,
+                                      e1 * ctm[0] + f1 * ctm[2] + ctm[4],
+                                      e1 * ctm[1] + f1 * ctm[3] + ctm[5],
+                                      font.name, text))
 
         buf = content
         n = len(buf)
@@ -389,7 +397,6 @@ class ContentInterpreter:
         peep = _PEEP_RE.match
         operands_append = operands.append
         operands_clear = operands.clear
-        spans_append = self.spans.append
         relevant = _TEXT_OPS
         # op-run memo: bytes -> decoded op if relevant, False if
         # irrelevant (one dict probe then clear), None if it needs the
@@ -409,15 +416,14 @@ class ContentInterpreter:
                 if pm is not None:
                     i = pm.end()
                     if pm.lastindex == 3:      # (string) Tj
-                        f = font if font is not None else _EMPTY_FONT
-                        text = f.decode(pm.group(3))
+                        text = font.decode(pm.group(3))
                         if text:
                             e1, f1 = tm[4], tm[5]
                             spans_append(TextSpan(
-                                self.page,
+                                page,
                                 e1 * ctm[0] + f1 * ctm[2] + ctm[4],
                                 e1 * ctm[1] + f1 * ctm[3] + ctm[5],
-                                f.name, text))
+                                font.name, text))
                     else:                      # tx ty Td
                         tx = float(pm.group(1))
                         ty = float(pm.group(2))
@@ -513,108 +519,61 @@ class ContentInterpreter:
                     boundary = False
                     continue
                 if dec == "ID":        # inline image data until 'EI'
-                    k = buf.find(b"EI", i)
-                    while k != -1:
-                        before_ws = k == 0 or buf[k - 1] in _IRREGULAR
-                        after_ws = (k + 2 >= n) or \
-                            (buf[k + 2] in _IRREGULAR)
-                        if before_ws and after_ws:
-                            break
-                        k = buf.find(b"EI", k + 1)
+                    k = find_ei(buf, i)
                     if k == -1:
                         raise LexerError("UnterminatedInlineImage", m.start(9))
+                    d0, d1 = _inline_span(buf, i, k)
+                    # the operands since BI are the image's dict
+                    self.inline_images.append((operands[:], buf[d0:d1]))
+                    operands_append((TK_INLINE_DATA, (d0, d1)))
                     i = k + 2
-                    boundary = True
+                    boundary = False
                     continue
                 # keyword (true/false/null) followed by regular bytes
                 raise LexerError("UndefinedKeyword", m.start(9))
 
-            # ladder ordered by measured op frequency: text-heavy
-            # content is ~98% Tj/Td (fixture corpus count 498/510 vs
-            # <=20 for every other op), so those two branches come
-            # first with their float conversions / translation math
-            # inlined (no opnum()/translate_mul()/emit() call).
             boundary = True
             try:
-                if op == "Tj":
-                    if operands:
-                        last = operands[-1]
-                        if last[0] in (TK_STR, TK_HEXSTR):
-                            f = font if font is not None else _EMPTY_FONT
-                            text = f.decode(last[1])
-                            if text:
-                                e1, f1 = tm[4], tm[5]
-                                self.spans.append(TextSpan(
-                                    self.page,
-                                    e1 * ctm[0] + f1 * ctm[2] + ctm[4],
-                                    e1 * ctm[1] + f1 * ctm[3] + ctm[5],
-                                    f.name, text))
-                elif op == "Td" and len(operands) >= 2:
-                    tx = float(operands[-2][1])
-                    ty = float(operands[-1][1])
-                    a2, b2, c2, d2, e2, f2 = tlm
-                    tm = tlm = (a2, b2, c2, d2,
-                                tx * a2 + ty * c2 + e2,
-                                tx * b2 + ty * d2 + f2)
-                elif op == "q":
+                if op == "q":
                     gstack.append(ctm)
                 elif op == "Q":
                     ctm = gstack.pop() if gstack else IDENTITY
                 elif op == "cm" and len(operands) >= 6:
-                    m = tuple(opnum(x) for x in operands[-6:])
-                    ctm = mat_mul(m, ctm)
+                    ctm = mat_mul(tuple(opnum(x) for x in operands[-6:]), ctm)
                 elif op == "BT":
-                    tm = IDENTITY
-                    tlm = IDENTITY
-                elif op == "ET":
-                    pass
+                    tm = tlm = IDENTITY
                 elif op == "Tf" and len(operands) >= 2:
                     fname = operands[-2][1]
                     font_size = opnum(operands[-1])
                     font = self.fonts.get(fname, FontInfo(name=str(fname)))
-                elif op == "TD" and len(operands) >= 2:
-                    leading = -opnum(operands[-1])
-                    tlm = translate_mul(opnum(operands[-2]),
-                                        opnum(operands[-1]), tlm)
-                    tm = tlm
+                elif op in ("Td", "TD") and len(operands) >= 2:
+                    if op == "TD":
+                        leading = -opnum(operands[-1])
+                    tm = tlm = translate_mul(opnum(operands[-2]),
+                                             opnum(operands[-1]), tlm)
                 elif op == "Tm" and len(operands) >= 6:
-                    tlm = tuple(opnum(x) for x in operands[-6:])
-                    tm = tlm
+                    tm = tlm = tuple(opnum(x) for x in operands[-6:])
                 elif op == "T*":
-                    tlm = translate_mul(0.0, -leading, tlm)
-                    tm = tlm
-                elif op == "TL" and len(operands) >= 1:
+                    tm = tlm = translate_mul(0.0, -leading, tlm)
+                elif op == "TL" and operands:
                     leading = opnum(operands[-1])
-                elif op == "'" and operands:
-                    tlm = translate_mul(0.0, -leading, tlm)
-                    tm = tlm
+                elif op in ("Tj", "'", '"') and \
+                        len(operands) >= (3 if op == '"' else 1):
+                    if op != "Tj":     # ' and " move to the next line
+                        tm = tlm = translate_mul(0.0, -leading, tlm)
                     last = operands[-1]
                     if last[0] in (TK_STR, TK_HEXSTR):
-                        emit(last[1])
-                elif op == '"' and len(operands) >= 3:
-                    tlm = translate_mul(0.0, -leading, tlm)
-                    tm = tlm
-                    last = operands[-1]
-                    if last[0] in (TK_STR, TK_HEXSTR):
-                        emit(last[1])
+                        emit(font.decode(last[1]))
                 elif op == "TJ":
                     # operands hold the array tokens: arr_start items arr_end
                     parts: list[str] = []
-                    f = font if font is not None else _EMPTY_FONT
                     for ot in operands:
                         if ot[0] in (TK_STR, TK_HEXSTR):
-                            parts.append(f.decode(ot[1]))
+                            parts.append(font.decode(ot[1]))
                         elif ot[0] in (TK_INT, TK_REAL):
                             if float(ot[1]) <= TJ_SPACE_THRESHOLD:
                                 parts.append(" ")
-                    text = "".join(parts)
-                    if text:
-                        e1, f1 = tm[4], tm[5]
-                        self.spans.append(TextSpan(
-                            self.page,
-                            e1 * ctm[0] + f1 * ctm[2] + ctm[4],
-                            e1 * ctm[1] + f1 * ctm[3] + ctm[5],
-                            f.name, text))
+                    emit("".join(parts))
             finally:
                 operands_clear()
         return self.spans

@@ -25,7 +25,9 @@ Usage:
   python scripts/scale_rehearsal.py --smoke        # ~30s sanity run
   (child mode is internal: --child-extract <out> <lineage> <corpus>)
 
-Writes scripts/rehearsal_result.json; prose summary goes to SCALE.md.
+A full run writes scripts/rehearsal_result.json, the tracked record
+(prose summary in SCALE.md); a --smoke run writes
+<workdir>/rehearsal_result.json and leaves that record alone.
 """
 
 from __future__ import annotations
@@ -364,7 +366,8 @@ def main() -> None:
     results["rss"] = sampler.stop()
     print("RSS:", results["rss"], flush=True)
 
-    path = os.path.join(REPO, "scripts", "rehearsal_result.json")
+    path = os.path.join(wd if args.smoke else os.path.join(REPO, "scripts"),
+                        "rehearsal_result.json")
     with open(path, "w") as f:
         json.dump(results, f, indent=1)
     print("WROTE", path, flush=True)

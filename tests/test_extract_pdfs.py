@@ -99,6 +99,27 @@ def test_inline_images_through_d1_d6():
             assert got[k] == want[k], (want["name"], k)
 
 
+def test_inline_images_decode_page_content_once(monkeypatch):
+    """The image path reuses the text scan: the interpreter records
+    each inline image at ID, so ``pdf-image-inline``'s one content
+    stream is defiltered once, not again to look for images."""
+    from pdf_parser_spark.kernel.doc import PdfDocument
+
+    calls = []
+    stream_data = PdfDocument.stream_data
+
+    def counted(self, stm):
+        calls.append(stm.obj_num)
+        return stream_data(self, stm)
+
+    monkeypatch.setattr(PdfDocument, "stream_data", counted)
+    pdf, golden = get_fixture("pdf-image-inline")
+    res = extract_text(pdf, with_images=True)
+    assert res["parse_error"] is None
+    assert [img["name"] for img in res["images"]] == ["BI1", "BI2"]
+    assert len(calls) == 1, calls
+
+
 def test_inline_image_unsupported_shapes_skipped():
     """Out-of-envelope inline images (1-bit mask, CMYK, unknown
     filter) are skipped without aborting text or sibling images."""

@@ -278,6 +278,8 @@ def assert_same_result(got, want):
 @example(b"(.)%Tj")
 @example(b"%1 2 Td\n[(a)] TJ")
 @example(b"BT\n% (old) Tj\n/F1 9 Tf ET")
+# the inline image's data is an operand: Tj after EI shows nothing
+@example(b"BI (s) ID x EI Tj")
 def test_fused_interpreter_matches_token_loop_on_random_bytes(data):
     """The fused interpreter scans content bytes itself, so on ANY bytes
     it must produce the reference's spans, or raise the lexer error
@@ -310,15 +312,28 @@ def test_fused_interpreter_matches_token_loop_on_random_bytes(data):
      b"10 20 Tda", b".5 -.25 Td", b"(s) Tjx", b"% c\n10 20 Td",
      b"10 % k\n20 Td", b"+3 -0. Td", b"(q\\n) Tj", b"() Tj",
      # commented-out operators: the comment runs to the end of line
-     b"% (old) Tj\n", b"1 2 %Td\n", b"(c)%Tj\nET"]),
+     b"% (old) Tj\n", b"1 2 %Td\n", b"(c)%Tj\nET",
+     # inline image: its dict and data stay operands until the next op
+     b"BI /W 1 /H 1 ID x EI"]),
     min_size=0, max_size=30))
 def test_fused_interpreter_matches_token_loop(parts):
     """Differential oracle: ContentInterpreter.run (fused master-regex
-    scan) vs ``reference_interpret`` over random operator sequences."""
+    scan) vs ``reference_interpret`` over random operator sequences.
+    An operator that reads an inline image's name or data operand as a
+    number (``... EI 5 TD``) must fail with the same error on both
+    sides."""
     content = b" ".join(parts)
     if not content.strip():
         return
-    assert_same_result(fused_interpret(content), reference_interpret(content))
+
+    def outcome(interpret):
+        try:
+            return interpret(content)
+        except (TypeError, ValueError) as e:
+            return ("raise", type(e).__name__)
+
+    assert_same_result(outcome(fused_interpret),
+                       outcome(reference_interpret))
 
 
 @given(objects)
