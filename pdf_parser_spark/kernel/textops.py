@@ -372,7 +372,6 @@ class ContentInterpreter:
         tlm: Matrix = IDENTITY
         leading = 0.0
         font = _EMPTY_FONT
-        font_size = 0.0
         # operands are (kind, value) pairs
         operands: list[tuple[str, object]] = []
         spans_append = self.spans.append
@@ -544,7 +543,6 @@ class ContentInterpreter:
                     tm = tlm = IDENTITY
                 elif op == "Tf" and len(operands) >= 2:
                     fname = operands[-2][1]
-                    font_size = opnum(operands[-1])
                     font = self.fonts.get(fname, FontInfo(name=str(fname)))
                 elif op in ("Td", "TD") and len(operands) >= 2:
                     if op == "TD":

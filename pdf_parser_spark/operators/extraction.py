@@ -23,10 +23,17 @@ Scale design (100 TB / 10^12 turns):
   boundary; everything else stays JVM-side and is re-joined by the
   caller if needed
 - Arrow batch size is capped in session.py because rows are PDF-fat
+- a Python task's fixed setup cost was mostly zip import finders
+  re-reading ``pyspark.zip`` (78-154 ms a task, paid once per wave of
+  ``ExtractionJob.run``'s kernel tasks); every kernel here drops them
+  when it has drained its batches (``drop_zip_finders``), so the next
+  task's setup pays ~0.1 ms
 """
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -59,6 +66,24 @@ _SPAN_ARROW = pa.list_(pa.struct([
     ("font", pa.string()), ("s", pa.string())]))
 
 
+def drop_zip_finders() -> None:
+    """Forget the cached zip import finders of this process.
+
+    A reused pyspark worker calls ``importlib.invalidate_caches()``
+    before every task, and on CPython 3.11 each cached
+    ``zipimporter`` re-reads its archive's whole central directory
+    there. Workers import pyspark from ``pyspark.zip`` (and the package
+    from a ``--py-files`` zip), so one task's setup paid ~16 such reads,
+    78-154 ms, before the kernel ran. The finder cache is only a cache:
+    the next import through a zip path builds a new finder from
+    ``zipimport``'s cached directory. Every Arrow kernel calls this
+    once it has drained its batches."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del cache[path]
+
+
 def _payloads(batch: pa.RecordBatch) -> Iterator[bytes]:
     """Each row's PDF bytes. The ``text`` column carries them as a
     latin-1 string; NULL or non-latin-1 text yields ``b""``."""
@@ -76,47 +101,50 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]
     output assembled from flat arrays + offsets (no pandas objects)."""
     from pdf_parser_spark.kernel.extract import extract_text
 
-    for batch in batches:
-        texts, n_pages, n_objects, nbytes, errors = [], [], [], [], []
-        sp_page, sp_x, sp_y, sp_font, sp_s = [], [], [], [], []
-        offsets = [0]
-        for data in _payloads(batch):
-            if not data:
-                res = {"text": "", "spans": [], "n_pages": 0,
-                       "n_objects": 0, "bytes": 0,
-                       "parse_error": "EmptyOrNonLatin1Payload"}
-            else:
-                res = extract_text(data)
-            texts.append(res["text"])
-            n_pages.append(res["n_pages"])
-            n_objects.append(res["n_objects"])
-            nbytes.append(res["bytes"])
-            errors.append(res["parse_error"])
-            for page, x, y, font, s in res["spans"]:
-                sp_page.append(page)
-                sp_x.append(x)
-                sp_y.append(y)
-                sp_font.append(font)
-                sp_s.append(s)
-            offsets.append(len(sp_page))
-        struct = pa.StructArray.from_arrays(
-            [pa.array(sp_page, pa.int32()), pa.array(sp_x, pa.float64()),
-             pa.array(sp_y, pa.float64()), pa.array(sp_font, pa.string()),
-             pa.array(sp_s, pa.string())],
-            ["page", "x", "y", "font", "s"])
-        spans = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
-                                         struct)
-        yield pa.RecordBatch.from_arrays(
-            [batch.column("conv_id"),
-             batch.column("turn_idx").cast(pa.int32()),
-             pa.array(texts, pa.string()),
-             spans.cast(_SPAN_ARROW),
-             pa.array(n_pages, pa.int32()),
-             pa.array(n_objects, pa.int32()),
-             pa.array(nbytes, pa.int64()),
-             pa.array(errors, pa.string())],
-            names=["conv_id", "turn_idx", "text", "spans", "n_pages",
-                   "n_objects", "bytes", "parse_error"])
+    try:
+        for batch in batches:
+            texts, n_pages, n_objects, nbytes, errors = [], [], [], [], []
+            sp_page, sp_x, sp_y, sp_font, sp_s = [], [], [], [], []
+            offsets = [0]
+            for data in _payloads(batch):
+                if not data:
+                    res = {"text": "", "spans": [], "n_pages": 0,
+                           "n_objects": 0, "bytes": 0,
+                           "parse_error": "EmptyOrNonLatin1Payload"}
+                else:
+                    res = extract_text(data)
+                texts.append(res["text"])
+                n_pages.append(res["n_pages"])
+                n_objects.append(res["n_objects"])
+                nbytes.append(res["bytes"])
+                errors.append(res["parse_error"])
+                for page, x, y, font, s in res["spans"]:
+                    sp_page.append(page)
+                    sp_x.append(x)
+                    sp_y.append(y)
+                    sp_font.append(font)
+                    sp_s.append(s)
+                offsets.append(len(sp_page))
+            struct = pa.StructArray.from_arrays(
+                [pa.array(sp_page, pa.int32()), pa.array(sp_x, pa.float64()),
+                 pa.array(sp_y, pa.float64()), pa.array(sp_font, pa.string()),
+                 pa.array(sp_s, pa.string())],
+                ["page", "x", "y", "font", "s"])
+            spans = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
+                                             struct)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("conv_id"),
+                 batch.column("turn_idx").cast(pa.int32()),
+                 pa.array(texts, pa.string()),
+                 spans.cast(_SPAN_ARROW),
+                 pa.array(n_pages, pa.int32()),
+                 pa.array(n_objects, pa.int32()),
+                 pa.array(nbytes, pa.int64()),
+                 pa.array(errors, pa.string())],
+                names=["conv_id", "turn_idx", "text", "spans", "n_pages",
+                       "n_objects", "bytes", "parse_error"])
+    finally:
+        drop_zip_finders()
 
 
 IMAGE_SCHEMA = T.StructType([
@@ -139,37 +167,40 @@ def _extract_image_batches(batches: Iterator[pa.RecordBatch]
     made deterministic by object number, SURVEY §2.7.4)."""
     from pdf_parser_spark.kernel.extract import extract_text
 
-    for batch in batches:
-        conv, tix = [], []
-        pages, names, widths, heights, spaces, fmts, datas = \
-            [], [], [], [], [], [], []
-        for cid, t, data in zip(batch.column("conv_id").to_pylist(),
-                                batch.column("turn_idx").to_pylist(),
-                                _payloads(batch)):
-            res = extract_text(data, with_images=True) if data else \
-                {"images": []}
-            for img in res.get("images", []):
-                conv.append(cid)
-                tix.append(t)
-                pages.append(img["page"])
-                names.append(img["name"])
-                widths.append(img["width"])
-                heights.append(img["height"])
-                spaces.append(img["colorspace"])
-                fmts.append(img["format"])
-                datas.append(img["data"])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(conv, pa.string()),
-             pa.array(tix, pa.int32()),
-             pa.array(pages, pa.int32()),
-             pa.array(names, pa.string()),
-             pa.array(widths, pa.int32()),
-             pa.array(heights, pa.int32()),
-             pa.array(spaces, pa.string()),
-             pa.array(fmts, pa.string()),
-             pa.array(datas, pa.binary())],
-            names=["conv_id", "turn_idx", "page", "name", "width",
-                   "height", "colorspace", "format", "data"])
+    try:
+        for batch in batches:
+            conv, tix = [], []
+            pages, names, widths, heights, spaces, fmts, datas = \
+                [], [], [], [], [], [], []
+            for cid, t, data in zip(batch.column("conv_id").to_pylist(),
+                                    batch.column("turn_idx").to_pylist(),
+                                    _payloads(batch)):
+                res = extract_text(data, with_images=True) if data else \
+                    {"images": []}
+                for img in res.get("images", []):
+                    conv.append(cid)
+                    tix.append(t)
+                    pages.append(img["page"])
+                    names.append(img["name"])
+                    widths.append(img["width"])
+                    heights.append(img["height"])
+                    spaces.append(img["colorspace"])
+                    fmts.append(img["format"])
+                    datas.append(img["data"])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(conv, pa.string()),
+                 pa.array(tix, pa.int32()),
+                 pa.array(pages, pa.int32()),
+                 pa.array(names, pa.string()),
+                 pa.array(widths, pa.int32()),
+                 pa.array(heights, pa.int32()),
+                 pa.array(spaces, pa.string()),
+                 pa.array(fmts, pa.string()),
+                 pa.array(datas, pa.binary())],
+                names=["conv_id", "turn_idx", "page", "name", "width",
+                       "height", "colorspace", "format", "data"])
+    finally:
+        drop_zip_finders()
 
 
 def extract_images(turns: DataFrame) -> DataFrame:
@@ -192,38 +223,41 @@ def _encode_jpeg_batches(batches: Iterator[pa.RecordBatch]
                          ) -> Iterator[pa.RecordBatch]:
     from pdf_parser_spark.kernel.jpegdec import JpegError, encode_baseline_jpeg
 
-    for batch in batches:
-        cols = {n: batch.column(n).to_pylist()
-                for n in batch.schema.names}
-        out_fmt, out_data = [], []
-        for fmt, w, h, data in zip(cols["format"], cols["width"],
-                                   cols["height"], cols["data"]):
-            if fmt == "raw-rgb":
-                # never-abort contract: a raster whose byte length
-                # disagrees with width*height*3 (malformed upstream
-                # stream) must not kill the Spark task — forward the
-                # row unchanged instead
-                try:
-                    out_data.append(encode_baseline_jpeg(data, w, h, 3))
-                    out_fmt.append("jpeg")
-                except (JpegError, ValueError):
+    try:
+        for batch in batches:
+            cols = {n: batch.column(n).to_pylist()
+                    for n in batch.schema.names}
+            out_fmt, out_data = [], []
+            for fmt, w, h, data in zip(cols["format"], cols["width"],
+                                       cols["height"], cols["data"]):
+                if fmt == "raw-rgb":
+                    # never-abort contract: a raster whose byte length
+                    # disagrees with width*height*3 (malformed upstream
+                    # stream) must not kill the Spark task — forward the
+                    # row unchanged instead
+                    try:
+                        out_data.append(encode_baseline_jpeg(data, w, h, 3))
+                        out_fmt.append("jpeg")
+                    except (JpegError, ValueError):
+                        out_fmt.append(fmt)
+                        out_data.append(data)
+                else:  # already JPEG (non-baseline passthrough)
                     out_fmt.append(fmt)
                     out_data.append(data)
-            else:  # already JPEG (non-baseline passthrough)
-                out_fmt.append(fmt)
-                out_data.append(data)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols["conv_id"], pa.string()),
-             pa.array(cols["turn_idx"], pa.int32()),
-             pa.array(cols["page"], pa.int32()),
-             pa.array(cols["name"], pa.string()),
-             pa.array(cols["width"], pa.int32()),
-             pa.array(cols["height"], pa.int32()),
-             pa.array(cols["colorspace"], pa.string()),
-             pa.array(out_fmt, pa.string()),
-             pa.array(out_data, pa.binary())],
-            names=["conv_id", "turn_idx", "page", "name", "width",
-                   "height", "colorspace", "format", "data"])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(cols["conv_id"], pa.string()),
+                 pa.array(cols["turn_idx"], pa.int32()),
+                 pa.array(cols["page"], pa.int32()),
+                 pa.array(cols["name"], pa.string()),
+                 pa.array(cols["width"], pa.int32()),
+                 pa.array(cols["height"], pa.int32()),
+                 pa.array(cols["colorspace"], pa.string()),
+                 pa.array(out_fmt, pa.string()),
+                 pa.array(out_data, pa.binary())],
+                names=["conv_id", "turn_idx", "page", "name", "width",
+                       "height", "colorspace", "format", "data"])
+    finally:
+        drop_zip_finders()
 
 
 def encode_images_jpeg(images: DataFrame) -> DataFrame:

@@ -369,3 +369,35 @@ def test_extract_dedup_keeps_null_text_turns(spark):
     assert dedup.count() == 3
     assert direct.exceptAll(dedup).count() == 0
     assert dedup.exceptAll(direct).count() == 0
+
+
+def test_worker_task_leaves_no_zip_finders(spark):
+    """In a real Python worker, which imports pyspark from
+    ``pyspark.zip``, the drained kernel leaves no zip import finder for
+    the next task's ``importlib.invalidate_caches()`` to re-read."""
+    import pyarrow as pa
+
+    from pdf_parser_spark.fixtures import get_fixture
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        from pdf_parser_spark.operators.extraction import _extract_batches
+
+        def zip_finders():
+            return sum(isinstance(f, zipimport.zipimporter)
+                       for f in sys.path_importer_cache.values())
+
+        before = zip_finders()
+        for _ in _extract_batches(batches):
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"before": [before], "after": [zip_finders()]})
+
+    pdf, _golden = get_fixture("pdf-min-text")
+    one = spark.createDataFrame([("c", 0, pdf.decode("latin-1"))],
+                                "conv_id string, turn_idx int, text string")
+    [row] = one.coalesce(1).mapInArrow(probe, "before long, after long") \
+        .collect()
+    assert row.after == 0, f"{row.before} zip finders before the kernel"

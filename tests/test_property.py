@@ -280,6 +280,8 @@ def assert_same_result(got, want):
 @example(b"BT\n% (old) Tj\n/F1 9 Tf ET")
 # the inline image's data is an operand: Tj after EI shows nothing
 @example(b"BI (s) ID x EI Tj")
+# the font size is never read, so a name there does not fail the page
+@example(b"BT /F1 /x Tf 72 720 Td (hi) Tj ET")
 def test_fused_interpreter_matches_token_loop_on_random_bytes(data):
     """The fused interpreter scans content bytes itself, so on ANY bytes
     it must produce the reference's spans, or raise the lexer error
