@@ -18,16 +18,24 @@ import hashlib
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
+from pdf_parser_spark.operators.extraction import drop_zip_finders
+
 
 @pandas_udf("string")
 def sha256_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(
-        lambda t: hashlib.sha256((t or "").encode("utf-8")).hexdigest())
+    try:
+        return texts.map(
+            lambda t: hashlib.sha256((t or "").encode("utf-8")).hexdigest())
+    finally:
+        drop_zip_finders()
 
 
 @pandas_udf("double")
 def weighted_quality_udaf(milli: pd.Series, weight: pd.Series) -> float:
-    w = int(weight.sum())
-    if w == 0:
-        return 0.0
-    return round(float(int((milli * weight).sum()) / w / 1000.0), 6)
+    try:
+        w = int(weight.sum())
+        if w == 0:
+            return 0.0
+        return round(float(int((milli * weight).sum()) / w / 1000.0), 6)
+    finally:
+        drop_zip_finders()

@@ -158,7 +158,6 @@ _NUMBER_CHARS = frozenset(b"0123456789+-.")
 # delimiter ()<>[]{}/%.  The reference excludes 0x12 instead of 0x0C
 # (src/lexer.rs:292-311, SURVEY.md §2.7.2); we implement the spec.
 _IRREGULAR = frozenset({0, 9, 10, 12, 13, 32}) | frozenset(b"()<>[]{}/%")
-_HEX_DIGITS = frozenset(b"0123456789abcdefABCDEF")
 _WS_ALL = frozenset({0, 9, 10, 12, 13, 32})  # §7.2.2 white-space chars
 
 

@@ -8,16 +8,21 @@ ITU-T T.81 from the public spec:
 
 - decoder: baseline SOF0, extended sequential SOF1, and PROGRESSIVE
   SOF2 (spectral selection + successive approximation per Annex G,
-  incl. EOB runs and AC refinement correction bits); DQT/DHT/SOS/DRI
-  parsing, canonical Huffman decode, dequantize + dezigzag, separable
-  float IDCT, nearest-neighbour chroma upsampling, JFIF YCbCr->RGB
-  with round-half-away clamp. Arithmetic-coded modes are rejected
-  with a structured JpegError.
+  incl. EOB runs and AC refinement correction bits). One path serves
+  all three: every SOF allocates a coefficient store, one scan
+  decoder fills it from each SOS — a sequential scan, interleaved or
+  one per component, codes each block's whole band 0..63 — and one
+  render turns it into pixels at EOI or the end of the data
+  (dequantize + dezigzag, separable float IDCT, nearest-neighbour
+  chroma upsampling, JFIF YCbCr->RGB with round-half-away clamp).
+  Arithmetic-coded modes are rejected with a structured JpegError.
 - encoders: 4:4:4 (or gray) baseline writer plus a spectral-selection
   progressive writer, both with self-defined canonical Huffman tables
   (fixed code lengths — every table emitted is declared in DHT, so
-  any spec decoder reads it back). They exist to build test fixtures
-  and for the JPEG sink.
+  any spec decoder reads it back). They share their halves: one
+  coefficient front half, one header, SOS and DC-difference writer,
+  and one AC run-length coder. They exist to build test fixtures and
+  for the JPEG sink.
 
 Parity strategy (documented in FIXTURES.md): IDCT rounding is
 implementation-defined within spec tolerance, so cross-decoder
@@ -42,9 +47,6 @@ ZIGZAG = np.array([
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ], dtype=np.int64)
-
-_UNZIG = np.argsort(ZIGZAG)
-
 
 def _idct_matrix() -> np.ndarray:
     a = np.zeros((8, 8))
@@ -73,12 +75,14 @@ class JpegError(ValueError):
 
 
 # Allocation sanity bound, in SAMPLES (width x height x components):
-# the progressive coefficient store and the render planes each cost
-# ~8 B/sample (int64/float64), so 2^25 samples caps worst-case decoder
-# memory at ~0.5-0.8 GB per image INCLUDING the RGB output — far above
-# any real PDF XObject (8192x4096 gray, 3300x3300 RGB), far below an
-# executor-OOM 65535x65535x3 declared by a corrupt SOF. Checked before
-# any store/plane allocation.
+# the coefficient store (every mode) and the render planes each cost
+# ~8 B/sample (int64/float64); the render frees each component's
+# coefficients once its plane is built, so the two never add up in
+# full, and 2^25 samples caps worst-case decoder memory at ~0.5-0.8 GB
+# per image INCLUDING the RGB output — far above any real PDF XObject
+# (8192x4096 gray, 3300x3300 RGB), far below an executor-OOM
+# 65535x65535x3 declared by a corrupt SOF. Checked before the store is
+# allocated.
 MAX_SAMPLES = 1 << 25
 
 
@@ -176,7 +180,8 @@ class _Component:
 
 
 def decode_baseline_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
-    """Decode a baseline (SOF0) JPEG.
+    """Decode a Huffman-coded JPEG: baseline SOF0, extended sequential
+    SOF1 or progressive SOF2.
 
     Returns (width, height, n_components, pixel bytes) — pixels are
     interleaved RGB for 3-component images (JFIF YCbCr->RGB) and
@@ -192,7 +197,9 @@ def decode_baseline_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     except JpegError:
         raise
     except (struct.error, StopIteration, KeyError, IndexError,
-            ValueError, ZeroDivisionError) as e:
+            ValueError, ZeroDivisionError, OverflowError) as e:
+        # OverflowError: a DHT-declared DC magnitude category far above
+        # 16 yields a predictor too large for the int64 store
         raise JpegError(f"corrupt JPEG: {type(e).__name__}") from e
     except _MarkerHit as e:
         # marker (EOI/RST/next segment) encountered where entropy data
@@ -212,7 +219,8 @@ def _decode_baseline_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     width = height = 0
     restart_interval = 0
     progressive = False
-    store: list[np.ndarray] | None = None
+    store: list[np.ndarray] = []
+    dc_seen: set[int] = set()       # components a first DC scan covered
 
     while pos < len(data):
         if data[pos] != 0xFF:
@@ -262,7 +270,7 @@ def _decode_baseline_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
                 raise JpegError(f"unsupported component count {ncomp}")
             if width * height * ncomp > MAX_SAMPLES:
                 # corrupt/adversarial SOF (up to 65535x65535x3) would
-                # otherwise allocate multi-GB stores/planes before any
+                # otherwise allocate a multi-GB store before any
                 # entropy data is validated — fail structured instead
                 raise JpegError(
                     f"image {width}x{height}x{ncomp} exceeds decoder "
@@ -271,13 +279,13 @@ def _decode_baseline_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
             for c in range(ncomp):
                 cid, hv, tq = seg[6 + 3 * c:9 + 3 * c]
                 comps.append(_Component(cid, hv >> 4, hv & 0xF, tq))
-            if progressive:
-                hmax = max(c.h for c in comps)
-                vmax = max(c.v for c in comps)
-                mcus_x = _ceil(width, 8 * hmax)
-                mcus_y = _ceil(height, 8 * vmax)
-                store = [np.zeros((mcus_y * c.v, mcus_x * c.h, 64),
-                                  dtype=np.int64) for c in comps]
+            hmax = max(c.h for c in comps)
+            vmax = max(c.v for c in comps)
+            mcus_x = _ceil(width, 8 * hmax)
+            mcus_y = _ceil(height, 8 * vmax)
+            store = [np.zeros((mcus_y * c.v, mcus_x * c.h, 64),
+                              dtype=np.int64) for c in comps]
+            dc_seen = set()
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7,
                         0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise JpegError(f"unsupported SOF marker 0xFF{marker:02X} "
@@ -289,38 +297,28 @@ def _decode_baseline_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
             order = []
             for c in range(ns):
                 cs, tdta = seg[1 + 2 * c:3 + 2 * c]
-                comp = next(x for x in comps if x.cid == cs)
-                comp.td, comp.ta = tdta >> 4, tdta & 0xF
-                order.append(comp)
-            if not progressive:
-                if len(order) != len(comps):
-                    # legal baseline non-interleaved multi-scan file
-                    # (one SOS per component): this decoder only
-                    # handles the single interleaved scan — returning
-                    # here would hand back a raster built from the
-                    # FIRST scan's components labeled as all of them
-                    # (corrupt output downstream). Fail structured so
-                    # callers take the byte-passthrough fallback.
-                    raise JpegError(
-                        "non-interleaved sequential scan "
-                        f"({len(order)} of {len(comps)} components) "
-                        "not supported")
-                pixels = _decode_scan(data, pos + seglen, order, qt,
-                                      huff_dc, huff_ac, width, height,
-                                      restart_interval)
-                return width, height, len(comps), pixels
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ahal = seg[3 + 2 * ns]
-            pos = _decode_prog_scan(
-                data, pos + seglen, order, comps, huff_dc, huff_ac,
-                width, height, restart_interval, store,
-                ss, se, ahal >> 4, ahal & 0xF)
+                ci = next(i for i, x in enumerate(comps) if x.cid == cs)
+                comps[ci].td, comps[ci].ta = tdta >> 4, tdta & 0xF
+                order.append(ci)
+            if progressive:
+                ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
+                ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 0xF
+                if ss == 0 and se != 0:
+                    raise JpegError("progressive DC scan must have Se=0")
+            else:
+                ss, se, ah, al = 0, 63, 0, 0
+            if ss == 0 and ah == 0:
+                dc_seen.update(order)
+            pos = _decode_scan(data, pos + seglen, order, comps, huff_dc,
+                               huff_ac, width, height, restart_interval,
+                               store, ss, se, ah, al)
             continue
         pos += seglen
-    if progressive and store is not None:
-        pixels = _render_progressive(comps, store, qt, width, height)
-        return width, height, len(comps), pixels
-    raise JpegError("no SOS marker")
+    if not comps or len(dc_seen) < len(comps):
+        # a component no scan gave its DC would render flat grey
+        raise JpegError("no SOF, or a component without a DC scan")
+    return width, height, len(comps), _render(comps, store, qt, width,
+                                              height)
 
 
 def _ceil(a: int, b: int) -> int:
@@ -337,83 +335,68 @@ def _comp_grid(comp: _Component, comps: list[_Component],
             _ceil(_ceil(height * comp.v, vmax), 8))
 
 
-def _decode_prog_scan(data: bytes, pos: int, order: list[_Component],
-                      comps: list[_Component], huff_dc: dict,
-                      huff_ac: dict, width: int, height: int,
-                      restart_interval: int, store: list[np.ndarray],
-                      ss: int, se: int, ah: int, al: int) -> int:
-    """Decode one progressive scan (T.81 Annex G) into the coefficient
-    store; returns the buffer position of the next marker."""
-    hmax = max(c.h for c in comps)
-    vmax = max(c.v for c in comps)
-    mcus_x = _ceil(width, 8 * hmax)
-    mcus_y = _ceil(height, 8 * vmax)
+def _decode_scan(data: bytes, pos: int, order: list[int],
+                 comps: list[_Component], huff_dc: dict, huff_ac: dict,
+                 width: int, height: int, restart_interval: int,
+                 store: list[np.ndarray], ss: int, se: int, ah: int,
+                 al: int) -> int:
+    """Decode one scan into the coefficient store; returns the buffer
+    position of the next marker, or the end of the data.
+
+    A progressive scan (T.81 Annex G) codes one band of every block it
+    covers: the DC (Ss=0) or AC Ss..Se of one component, as a first
+    pass (Ah=0) or a refinement. A sequential scan comes in as Ss=0,
+    Se=63, Ah=Al=0 and codes each block's DC and then its AC 1..63,
+    with no end-of-band run across blocks. A single-component scan
+    walks that component's own block grid (A.2.2), an interleaved one
+    walks MCUs (A.2.3)."""
+    if ss and len(order) != 1:
+        raise JpegError("progressive AC scan must be single-component")
+    if len(order) == 1:
+        ci = order[0]
+        nbw, nbh = _comp_grid(comps[ci], comps, width, height)
+        units = ([(ci, by, bx)] for by in range(nbh) for bx in range(nbw))
+    else:
+        hmax = max(c.h for c in comps)
+        vmax = max(c.v for c in comps)
+        mcu = [(ci, by, bx) for ci in order
+               for by in range(comps[ci].v) for bx in range(comps[ci].h)]
+        units = ([(ci, my * comps[ci].v + by, mx * comps[ci].h + bx)
+                  for ci, by, bx in mcu]
+                 for my in range(_ceil(height, 8 * vmax))
+                 for mx in range(_ceil(width, 8 * hmax)))
     reader = _BitReader(data, pos)
     pred = [0] * len(comps)
-    state = {"eobrun": 0, "units": 0}
-
-    def maybe_restart() -> None:
-        if restart_interval and state["units"] and \
-                state["units"] % restart_interval == 0:
+    eobrun = 0
+    for n, unit in enumerate(units):
+        if restart_interval and n and n % restart_interval == 0:
             reader.byte_align()
             while data[reader.pos] == 0xFF and \
                     0xD0 <= data[reader.pos + 1] <= 0xD7:
                 reader.pos += 2
-            for i in range(len(pred)):
-                pred[i] = 0
-            state["eobrun"] = 0
+            pred = [0] * len(comps)
+            eobrun = 0
+        for ci, by, bx in unit:
+            comp = comps[ci]
+            zz = store[ci][by, bx]
+            if ss == 0:
+                _dc_prog(reader, huff_dc, comp, ci, pred, zz, ah, al)
+                if se:
+                    _ac_first(reader, huff_ac[comp.ta], zz, 1, se, 0, 0)
+            elif ah == 0:
+                eobrun = _ac_first(reader, huff_ac[comp.ta], zz, ss, se,
+                                   al, eobrun)
+            else:
+                eobrun = _ac_refine(reader, huff_ac[comp.ta], zz, ss, se,
+                                    al, eobrun)
 
-    if ss == 0:
-        if se != 0:
-            raise JpegError("progressive DC scan must have Se=0")
-        if len(order) == 1:
-            comp = order[0]
-            ci = comps.index(comp)
-            nbw, nbh = _comp_grid(comp, comps, width, height)
-            for by in range(nbh):
-                for bx in range(nbw):
-                    maybe_restart()
-                    _dc_prog(reader, huff_dc, comp, ci, pred,
-                             store[ci][by, bx], ah, al)
-                    state["units"] += 1
-        else:
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    maybe_restart()
-                    for comp in order:
-                        ci = comps.index(comp)
-                        for by in range(comp.v):
-                            for bx in range(comp.h):
-                                _dc_prog(
-                                    reader, huff_dc, comp, ci, pred,
-                                    store[ci][my * comp.v + by,
-                                              mx * comp.h + bx], ah, al)
-                    state["units"] += 1
-    else:
-        if len(order) != 1:
-            raise JpegError("progressive AC scan must be single-component")
-        comp = order[0]
-        ci = comps.index(comp)
-        tbl = huff_ac[comp.ta]
-        nbw, nbh = _comp_grid(comp, comps, width, height)
-        for by in range(nbh):
-            for bx in range(nbw):
-                maybe_restart()
-                zz = store[ci][by, bx]
-                if ah == 0:
-                    state["eobrun"] = _ac_first(
-                        reader, tbl, zz, ss, se, al, state["eobrun"])
-                else:
-                    state["eobrun"] = _ac_refine(
-                        reader, tbl, zz, ss, se, al, state["eobrun"])
-                state["units"] += 1
-
-    # advance to the next marker (skip pad bytes / stuffing)
+    # advance to the next marker (skip pad bytes / stuffing); with no
+    # marker left the image ends here, as it does at EOI
     p = reader.pos
     n = len(data)
     while p < n - 1 and not (data[p] == 0xFF and data[p + 1] != 0x00):
         p += 1
-    return p
+    return p if p < n - 1 else n
 
 
 def _dc_prog(reader: _BitReader, huff_dc: dict, comp: _Component,
@@ -501,81 +484,32 @@ def _ac_refine(reader: _BitReader, tbl: dict, zz: np.ndarray,
     return 0
 
 
-def _render_progressive(comps: list[_Component], store: list[np.ndarray],
-                        qt: dict, width: int, height: int) -> bytes:
+def _render(comps: list[_Component], store: list[np.ndarray],
+            qt: dict, width: int, height: int) -> bytes:
+    """Dequantise and IDCT each component's coefficients into a plane,
+    upsample it to full resolution, crop, and colour-convert. Each
+    component's coefficients are dropped from the store once its plane
+    is built, so the store and all the planes are never held at
+    once."""
     hmax = max(c.h for c in comps)
     vmax = max(c.v for c in comps)
-    planes = []
+    full = []
     for ci, comp in enumerate(comps):
-        bh, bw = store[ci].shape[:2]
+        coeffs, store[ci] = store[ci], None
+        bh, bw = coeffs.shape[:2]
         q = qt[comp.tq]
         plane = np.empty((bh * 8, bw * 8))
         for by in range(bh):
             for bx in range(bw):
                 block = np.zeros(64)
-                block[ZIGZAG] = store[ci][by, bx] * q
+                block[ZIGZAG] = coeffs[by, bx] * q
                 plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = \
                     _idct2(block.reshape(8, 8)) + 128.0
-        planes.append(plane)
-    return _planes_to_pixels(comps, planes, hmax, vmax, width, height)
-
-
-def _decode_scan(data: bytes, pos: int, comps: list[_Component],
-                 qt: dict, huff_dc: dict, huff_ac: dict,
-                 width: int, height: int, restart_interval: int) -> bytes:
-    hmax = max(c.h for c in comps)
-    vmax = max(c.v for c in comps)
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcus_x = (width + mcu_w - 1) // mcu_w
-    mcus_y = (height + mcu_h - 1) // mcu_h
-
-    planes = [np.zeros((mcus_y * c.v * 8, mcus_x * c.h * 8))
-              for c in comps]
-    pred = [0] * len(comps)
-    reader = _BitReader(data, pos)
-    mcu_count = 0
-
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and \
-                    mcu_count % restart_interval == 0:
-                reader.byte_align()
-                # skip the RST marker
-                while data[reader.pos] == 0xFF and \
-                        0xD0 <= data[reader.pos + 1] <= 0xD7:
-                    reader.pos += 2
-                pred = [0] * len(comps)
-            for ci, comp in enumerate(comps):
-                q = qt[comp.tq]
-                for by in range(comp.v):
-                    for bx in range(comp.h):
-                        coeff = _decode_block(
-                            reader, huff_dc[comp.td], huff_ac[comp.ta],
-                            pred, ci)
-                        deq = coeff * q
-                        block = np.zeros(64)
-                        block[ZIGZAG] = deq
-                        spatial = _idct2(block.reshape(8, 8)) + 128.0
-                        y0 = (my * comp.v + by) * 8
-                        x0 = (mx * comp.h + bx) * 8
-                        planes[ci][y0:y0 + 8, x0:x0 + 8] = spatial
-            mcu_count += 1
-
-    return _planes_to_pixels(comps, planes, hmax, vmax, width, height)
-
-
-def _planes_to_pixels(comps: list[_Component], planes: list[np.ndarray],
-                      hmax: int, vmax: int, width: int, height: int
-                      ) -> bytes:
-    """Upsample to full resolution, crop, and colour-convert (shared
-    by the sequential and progressive paths)."""
-    full = []
-    for ci, comp in enumerate(comps):
-        p = planes[ci]
+        del coeffs
         if comp.h != hmax or comp.v != vmax:
-            p = np.repeat(np.repeat(p, vmax // comp.v, axis=0),
-                          hmax // comp.h, axis=1)
-        full.append(p[:height, :width])
+            plane = np.repeat(np.repeat(plane, vmax // comp.v, axis=0),
+                              hmax // comp.h, axis=1)
+        full.append(plane[:height, :width])
 
     if len(comps) == 1:
         out = np.clip(np.round(full[0]), 0, 255).astype(np.uint8)
@@ -586,30 +520,6 @@ def _planes_to_pixels(comps: list[_Component], planes: list[np.ndarray],
     b = y + 1.772 * cb
     rgb = np.stack([r, g, b], axis=-1)
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8).tobytes()
-
-
-def _decode_block(reader: _BitReader, dc_tbl: dict, ac_tbl: dict,
-                  pred: list[int], ci: int) -> np.ndarray:
-    coeff = np.zeros(64, dtype=np.int64)
-    t = reader.decode_symbol(dc_tbl)
-    diff = _extend(reader.read_bits(t), t)
-    pred[ci] += diff
-    coeff[0] = pred[ci]
-    k = 1
-    while k < 64:
-        rs = reader.decode_symbol(ac_tbl)
-        r, s = rs >> 4, rs & 0xF
-        if s == 0:
-            if r == 15:  # ZRL
-                k += 16
-                continue
-            break  # EOB
-        k += r
-        if k > 63:
-            raise JpegError("AC run overflow")
-        coeff[k] = _extend(reader.read_bits(s), s)
-        k += 1
-    return coeff
 
 
 # ------------------------------------------------------------- encoder
@@ -667,106 +577,52 @@ def _magnitude(v: int) -> tuple[int, int]:
     return size, code
 
 
-def encode_baseline_jpeg(pixels: bytes, width: int, height: int,
-                         ncomp: int) -> bytes:
-    """Minimal baseline encoder: unit quantization, 4:4:4, fixed-length
-    canonical Huffman tables (declared in DHT). ``pixels`` is
-    interleaved RGB (ncomp=3, converted to YCbCr) or luminance
-    (ncomp=1). Per-8x8-flat gray images round-trip exactly."""
-    arr = np.frombuffer(pixels, dtype=np.uint8).astype(np.float64)
-    arr = arr.reshape(height, width, ncomp)
-    if ncomp == 3:
-        r, g, b = arr[..., 0], arr[..., 1], arr[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        planes = [y, cb, cr]
-    elif ncomp == 1:
-        planes = [arr[..., 0]]
-    else:
-        raise JpegError("ncomp must be 1 or 3")
-
-    ph = (height + 7) // 8 * 8
-    pw = (width + 7) // 8 * 8
-    padded = []
-    for p in planes:
-        pp = np.empty((ph, pw))
-        pp[:height, :width] = p
-        pp[height:, :width] = p[-1:, :]
-        pp[:, width:] = pp[:, width - 1:width]
-        padded.append(pp)
-
-    w = _BitWriter()
-    pred = [0] * ncomp
-    for by in range(ph // 8):
-        for bx in range(pw // 8):
-            for ci in range(ncomp):
-                block = padded[ci][by * 8:by * 8 + 8,
-                                   bx * 8:bx * 8 + 8] - 128.0
-                coeff = np.round(_fdct2(block)).astype(np.int64)
-                zz = coeff.reshape(64)[ZIGZAG]
-                diff = int(zz[0]) - pred[ci]
-                pred[ci] = int(zz[0])
-                size, code = _magnitude(diff)
-                ln, c = _DC_ENC[size]
-                w.write(c, ln)
-                if size:
-                    w.write(code, size)
-                run = 0
-                last_nz = int(np.max(np.nonzero(zz)[0])) if \
-                    np.any(zz[1:]) else 0
-                for k in range(1, last_nz + 1):
-                    v = int(zz[k])
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        ln, c = _AC_ENC[0xF0]
-                        w.write(c, ln)
-                        run -= 16
-                    size, code = _magnitude(v)
-                    ln, c = _AC_ENC[(run << 4) | size]
-                    w.write(c, ln)
-                    w.write(code, size)
-                    run = 0
-                if last_nz < 63:
-                    ln, c = _AC_ENC[0x00]
-                    w.write(c, ln)
-    w.flush()
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    # DQT: unit quantization (table 0, 8-bit) — encode divides by 1,
-    # so coefficients survive exactly; flat blocks round-trip exactly
+def _header(sof: int, width: int, height: int, ncomp: int) -> bytearray:
+    """SOI, DQT, SOF and DHT shared by both encoders: unit quantization
+    (table 0, 8-bit — encode divides by 1, so coefficients survive
+    exactly and flat blocks round-trip exactly), 1x1 sampling for every
+    component, and Huffman tables 0 of both classes, which every
+    component references."""
+    out = bytearray(b"\xff\xd8")
     out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes([1] * 64)
-    # SOF0
-    sof = bytearray(struct.pack(">BHHB", 8, height, width, ncomp))
+    frame = bytearray(struct.pack(">BHHB", 8, height, width, ncomp))
     for ci in range(ncomp):
-        sof += bytes([ci + 1, 0x11, 0])
-    out += b"\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
-    # DHT (tables 0 for both classes; all components reference them)
+        frame += bytes([ci + 1, 0x11, 0])
+    out += bytes([0xFF, sof]) + struct.pack(">H", 2 + len(frame)) + frame
     for tc, bits, vals in ((0, _DC_BITS, _DC_VALS),
                            (1, _AC_BITS, _AC_VALS)):
         payload = bytes([tc << 4]) + bytes(bits) + vals
         out += b"\xff\xc4" + struct.pack(">H", 2 + len(payload)) + payload
-    # SOS
-    sos = bytearray([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0x00])
-    sos += b"\x00\x3f\x00"
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-    out += w.out
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+    return out
+
+
+def _sos(cids: range, ss: int, se: int) -> bytes:
+    """SOS over components ``cids`` (tables 0), band Ss..Se, Ah=Al=0."""
+    seg = bytes([len(cids)]) + b"".join(bytes([c, 0]) for c in cids)
+    seg += bytes([ss, se, 0])
+    return b"\xff\xda" + struct.pack(">H", 2 + len(seg)) + seg
+
+
+def _emit_dc(w: _BitWriter, dc: int, pred: list[int], ci: int) -> None:
+    """Huffman-code one block's DC as its difference from the
+    component's predictor (F.1.2.1)."""
+    size, code = _magnitude(dc - pred[ci])
+    pred[ci] = dc
+    ln, c = _DC_ENC[size]
+    w.write(c, ln)
+    if size:
+        w.write(code, size)
 
 
 def _component_coeffs(pixels: bytes, width: int, height: int,
                       ncomp: int) -> list[np.ndarray]:
     """Per-component quantised (unit table) zigzag coefficient grids —
-    shared front half of the baseline and progressive encoders."""
-    arr = np.frombuffer(pixels, dtype=np.uint8).astype(np.float64)
-    arr = arr.reshape(height, width, ncomp)
+    the front half of both encoders. int16 holds them: an 8-bit FDCT
+    under unit quantization stays within +-2048. A gray raster stays
+    uint8 until the padded plane's assignment casts it."""
+    arr = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width, ncomp)
     if ncomp == 3:
-        r, g, b = arr[..., 0], arr[..., 1], arr[..., 2]
+        r, g, b = (arr[..., i].astype(np.float64) for i in range(3))
         planes = [0.299 * r + 0.587 * g + 0.114 * b,
                   -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
                   0.5 * r - 0.418688 * g - 0.081312 * b + 128.0]
@@ -782,7 +638,7 @@ def _component_coeffs(pixels: bytes, width: int, height: int,
         pp[:height, :width] = p
         pp[height:, :width] = p[-1:, :]
         pp[:, width:] = pp[:, width - 1:width]
-        zzs = np.zeros((ph // 8, pw // 8, 64), dtype=np.int64)
+        zzs = np.zeros((ph // 8, pw // 8, 64), dtype=np.int16)
         for by in range(ph // 8):
             for bx in range(pw // 8):
                 block = pp[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] - 128.0
@@ -792,10 +648,11 @@ def _component_coeffs(pixels: bytes, width: int, height: int,
     return out
 
 
-def _emit_ac_band(w: "_BitWriter", zz: np.ndarray, lo: int, hi: int
+def _emit_ac_band(w: _BitWriter, zz: np.ndarray, lo: int, hi: int
                   ) -> None:
-    """Baseline-style run-length coding of zz[lo..hi] with per-block
-    EOB (valid first-AC-scan progressive coding with eobrun=1)."""
+    """Run-length coding of zz[lo..hi] with a per-block EOB: a
+    sequential block's AC, or a first-AC-scan progressive band with
+    eobrun=1."""
     band = zz[lo:hi + 1]
     nz = np.nonzero(band)[0]
     last = int(nz[-1]) if len(nz) else -1
@@ -819,6 +676,28 @@ def _emit_ac_band(w: "_BitWriter", zz: np.ndarray, lo: int, hi: int
         w.write(c, ln)
 
 
+def encode_baseline_jpeg(pixels: bytes, width: int, height: int,
+                         ncomp: int) -> bytes:
+    """Minimal baseline encoder: unit quantization, 4:4:4, fixed-length
+    canonical Huffman tables (declared in DHT). ``pixels`` is
+    interleaved RGB (ncomp=3, converted to YCbCr) or luminance
+    (ncomp=1). Per-8x8-flat gray images round-trip exactly."""
+    comps_zz = _component_coeffs(pixels, width, height, ncomp)
+    bh, bw = comps_zz[0].shape[:2]
+    w = _BitWriter()
+    pred = [0] * ncomp
+    for by in range(bh):
+        for bx in range(bw):
+            for ci in range(ncomp):
+                zz = comps_zz[ci][by, bx]
+                _emit_dc(w, int(zz[0]), pred, ci)
+                _emit_ac_band(w, zz, 1, 63)
+    w.flush()
+    out = _header(0xC0, width, height, ncomp)
+    out += _sos(range(1, ncomp + 1), 0, 63) + w.out + b"\xff\xd9"
+    return bytes(out)
+
+
 def encode_progressive_jpeg(pixels: bytes, width: int, height: int,
                             ncomp: int) -> bytes:
     """Minimal PROGRESSIVE (SOF2) encoder: spectral selection only —
@@ -828,44 +707,20 @@ def encode_progressive_jpeg(pixels: bytes, width: int, height: int,
     decode bit-for-bit (round-trip asserted in tests)."""
     comps_zz = _component_coeffs(pixels, width, height, ncomp)
     bh, bw = comps_zz[0].shape[:2]
+    out = _header(0xC2, width, height, ncomp)
 
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes([1] * 64)
-    sof = bytearray(struct.pack(">BHHB", 8, height, width, ncomp))
-    for ci in range(ncomp):
-        sof += bytes([ci + 1, 0x11, 0])
-    out += b"\xff\xc2" + struct.pack(">H", 2 + len(sof)) + sof
-    for tc, bits, vals in ((0, _DC_BITS, _DC_VALS),
-                           (1, _AC_BITS, _AC_VALS)):
-        payload = bytes([tc << 4]) + bytes(bits) + vals
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(payload)) + payload
-
-    # scan 1: interleaved DC (Ss=0 Se=0 Ah=0 Al=0)
-    sos = bytearray([ncomp])
-    for ci in range(ncomp):
-        sos += bytes([ci + 1, 0x00])
-    sos += b"\x00\x00\x00"
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
+    out += _sos(range(1, ncomp + 1), 0, 0)
     w = _BitWriter()
     pred = [0] * ncomp
     for by in range(bh):
         for bx in range(bw):
             for ci in range(ncomp):
-                dc = int(comps_zz[ci][by, bx, 0])
-                diff = dc - pred[ci]
-                pred[ci] = dc
-                size, code = _magnitude(diff)
-                ln, c = _DC_ENC[size]
-                w.write(c, ln)
-                if size:
-                    w.write(code, size)
+                _emit_dc(w, int(comps_zz[ci][by, bx, 0]), pred, ci)
     w.flush()
     out += w.out
 
-    # scans 2..: per-component AC band 1..63
     for ci in range(ncomp):
-        sos = bytes([1, ci + 1, 0x00]) + b"\x01\x3f\x00"
-        out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
+        out += _sos(range(ci + 1, ci + 2), 1, 63)
         w = _BitWriter()
         for by in range(bh):
             for bx in range(bw):

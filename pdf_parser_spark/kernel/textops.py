@@ -61,12 +61,8 @@ def mat_mul(m: Matrix, n: Matrix) -> Matrix:
     )
 
 
-def translate(tx: float, ty: float) -> Matrix:
-    return (1.0, 0.0, 0.0, 1.0, tx, ty)
-
-
 def translate_mul(tx: float, ty: float, n: Matrix) -> Matrix:
-    """``mat_mul(translate(tx, ty), n)`` specialized: Td/TD/T*/'/\" all
+    """``mat_mul((1, 0, 0, 1, tx, ty), n)`` specialized: Td/TD/T*/'/\" all
     premultiply a pure translation, whose product leaves n's linear
     part untouched — half the multiplies and no intermediate tuple
     (this is the hottest matrix op in the interpreter)."""

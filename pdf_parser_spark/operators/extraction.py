@@ -76,8 +76,9 @@ def drop_zip_finders() -> None:
     from a ``--py-files`` zip), so one task's setup paid ~16 such reads,
     78-154 ms, before the kernel ran. The finder cache is only a cache:
     the next import through a zip path builds a new finder from
-    ``zipimport``'s cached directory. Every Arrow kernel calls this
-    once it has drained its batches."""
+    ``zipimport``'s cached directory. Every Python kernel of the
+    package (Arrow and pandas alike) calls this once it has drained its
+    batches."""
     cache = sys.path_importer_cache
     for path, finder in list(cache.items()):
         if isinstance(finder, zipimport.zipimporter):

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pdf_parser_spark.operators.extraction import drop_zip_finders
+
 DECODE_META_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("modality", T.StringType()),
@@ -160,20 +162,23 @@ def decode_meta(media: DataFrame) -> DataFrame:
     typed metadata row per payload (UDTF-shaped like the PDF kernel)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = []
-            for payload in pdf["payload"]:
-                data = bytes(payload) if payload is not None else b""
-                metas.append(_try_jpegdec(data)
-                             or _try_real_decode(data)
-                             or _fake_decode(data))
-            out = pd.DataFrame(metas)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            out.insert(1, "modality", pdf["modality"].values)
-            out["width"] = out["width"].astype("int32")
-            out["height"] = out["height"].astype("int32")
-            out["channels"] = out["channels"].astype("int32")
-            yield out
+        try:
+            for pdf in batches:
+                metas = []
+                for payload in pdf["payload"]:
+                    data = bytes(payload) if payload is not None else b""
+                    metas.append(_try_jpegdec(data)
+                                 or _try_real_decode(data)
+                                 or _fake_decode(data))
+                out = pd.DataFrame(metas)
+                out.insert(0, "doc_id", pdf["doc_id"].values)
+                out.insert(1, "modality", pdf["modality"].values)
+                out["width"] = out["width"].astype("int32")
+                out["height"] = out["height"].astype("int32")
+                out["channels"] = out["channels"].astype("int32")
+                yield out
+        finally:
+            drop_zip_finders()
 
     return (media.select("doc_id", "modality", "payload")
             .mapInPandas(run, schema=DECODE_META_SCHEMA))

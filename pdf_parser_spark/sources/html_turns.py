@@ -12,6 +12,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from pdf_parser_spark.operators.extraction import drop_zip_finders
+
 _WORDS = ("spark arrow parquet shuffle partition kernel lexer parser "
           "stream batch window join filter project agg broadcast salt "
           "lineage resume golden fixture").split()
@@ -66,19 +68,22 @@ def html_turns(spark: SparkSession, n_convs: int,
                turns_per_conv: int = 2,
                partitions: int | None = None) -> DataFrame:
     def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            conv_ids, idxs, texts = [], [], []
-            for i in pdf["id"]:
-                i = int(i)
-                for t in range(turns_per_conv):
-                    conv_ids.append(f"hconv-{i:06d}")
-                    idxs.append(t)
-                    texts.append(build_page(i, t)[0])
-            yield pd.DataFrame({
-                "conv_id": conv_ids,
-                "turn_idx": pd.array(idxs, dtype="int32"),
-                "text": texts,
-            })
+        try:
+            for pdf in batches:
+                conv_ids, idxs, texts = [], [], []
+                for i in pdf["id"]:
+                    i = int(i)
+                    for t in range(turns_per_conv):
+                        conv_ids.append(f"hconv-{i:06d}")
+                        idxs.append(t)
+                        texts.append(build_page(i, t)[0])
+                yield pd.DataFrame({
+                    "conv_id": conv_ids,
+                    "turn_idx": pd.array(idxs, dtype="int32"),
+                    "text": texts,
+                })
+        finally:
+            drop_zip_finders()
 
     rng = spark.range(n_convs)
     if partitions:
@@ -90,22 +95,25 @@ def html_golden(spark: SparkSession, n_convs: int,
                 turns_per_conv: int = 2,
                 partitions: int | None = None) -> DataFrame:
     def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            conv_ids, idxs, texts, titles = [], [], [], []
-            for i in pdf["id"]:
-                i = int(i)
-                for t in range(turns_per_conv):
-                    _html, golden, title = build_page(i, t)
-                    conv_ids.append(f"hconv-{i:06d}")
-                    idxs.append(t)
-                    texts.append(golden)
-                    titles.append(title)
-            yield pd.DataFrame({
-                "conv_id": conv_ids,
-                "turn_idx": pd.array(idxs, dtype="int32"),
-                "text": texts,
-                "title": titles,
-            })
+        try:
+            for pdf in batches:
+                conv_ids, idxs, texts, titles = [], [], [], []
+                for i in pdf["id"]:
+                    i = int(i)
+                    for t in range(turns_per_conv):
+                        _html, golden, title = build_page(i, t)
+                        conv_ids.append(f"hconv-{i:06d}")
+                        idxs.append(t)
+                        texts.append(golden)
+                        titles.append(title)
+                yield pd.DataFrame({
+                    "conv_id": conv_ids,
+                    "turn_idx": pd.array(idxs, dtype="int32"),
+                    "text": texts,
+                    "title": titles,
+                })
+        finally:
+            drop_zip_finders()
 
     rng = spark.range(n_convs)
     if partitions:

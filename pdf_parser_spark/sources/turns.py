@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from pdf_parser_spark.operators.extraction import drop_zip_finders
+
 TURNS_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
     T.StructField("turn_idx", T.IntegerType(), False),
@@ -73,29 +75,32 @@ def synthetic_turns(spark: SparkSession, n_convs: int,
     """Distributed deterministic turns table."""
 
     def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_in in batches:
-            conv_ids, turn_idxs, roles, texts, tools, secs = \
-                [], [], [], [], [], []
-            for i in pdf_in["id"]:
-                i = int(i)
-                for conv_id, t, _fid, pdf, _g, _b in _conv_turns(
-                        i, broken_every):
-                    conv_ids.append(conv_id)
-                    turn_idxs.append(t)
-                    role = _ROLES[t % 3]
-                    roles.append(role)
-                    texts.append(pdf.decode("latin-1"))
-                    tools.append("pdf_extract" if role == "tool" else "")
-                    secs.append(i * 3600 + t * 60)
-            yield pd.DataFrame({
-                "conv_id": conv_ids,
-                "turn_idx": pd.array(turn_idxs, dtype="int32"),
-                "role": roles,
-                "text": texts,
-                "tool": tools,
-                "ts": _EPOCH + pd.to_timedelta(
-                    np.asarray(secs, dtype="int64"), unit="s"),
-            })
+        try:
+            for pdf_in in batches:
+                conv_ids, turn_idxs, roles, texts, tools, secs = \
+                    [], [], [], [], [], []
+                for i in pdf_in["id"]:
+                    i = int(i)
+                    for conv_id, t, _fid, pdf, _g, _b in _conv_turns(
+                            i, broken_every):
+                        conv_ids.append(conv_id)
+                        turn_idxs.append(t)
+                        role = _ROLES[t % 3]
+                        roles.append(role)
+                        texts.append(pdf.decode("latin-1"))
+                        tools.append("pdf_extract" if role == "tool" else "")
+                        secs.append(i * 3600 + t * 60)
+                yield pd.DataFrame({
+                    "conv_id": conv_ids,
+                    "turn_idx": pd.array(turn_idxs, dtype="int32"),
+                    "role": roles,
+                    "text": texts,
+                    "tool": tools,
+                    "ts": _EPOCH + pd.to_timedelta(
+                        np.asarray(secs, dtype="int64"), unit="s"),
+                })
+        finally:
+            drop_zip_finders()
 
     rng = spark.range(n_convs)
     if partitions:
@@ -110,24 +115,27 @@ def golden_turns(spark: SparkSession, n_convs: int,
     mapping (FIXTURES.md §1 golden table)."""
 
     def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_in in batches:
-            conv_ids, turn_idxs, texts, n_pages, n_spans = \
-                [], [], [], [], []
-            for i in pdf_in["id"]:
-                for conv_id, t, _fid, _pdf, golden, broken in _conv_turns(
-                        int(i), broken_every):
-                    conv_ids.append(conv_id)
-                    turn_idxs.append(t)
-                    texts.append("" if broken else golden["text"])
-                    n_pages.append(0 if broken else golden["n_pages"])
-                    n_spans.append(0 if broken else golden["n_spans"])
-            yield pd.DataFrame({
-                "conv_id": conv_ids,
-                "turn_idx": pd.array(turn_idxs, dtype="int32"),
-                "text": texts,
-                "n_pages": pd.array(n_pages, dtype="int32"),
-                "n_spans": pd.array(n_spans, dtype="int32"),
-            })
+        try:
+            for pdf_in in batches:
+                conv_ids, turn_idxs, texts, n_pages, n_spans = \
+                    [], [], [], [], []
+                for i in pdf_in["id"]:
+                    for conv_id, t, _fid, _pdf, golden, broken in _conv_turns(
+                            int(i), broken_every):
+                        conv_ids.append(conv_id)
+                        turn_idxs.append(t)
+                        texts.append("" if broken else golden["text"])
+                        n_pages.append(0 if broken else golden["n_pages"])
+                        n_spans.append(0 if broken else golden["n_spans"])
+                yield pd.DataFrame({
+                    "conv_id": conv_ids,
+                    "turn_idx": pd.array(turn_idxs, dtype="int32"),
+                    "text": texts,
+                    "n_pages": pd.array(n_pages, dtype="int32"),
+                    "n_spans": pd.array(n_spans, dtype="int32"),
+                })
+        finally:
+            drop_zip_finders()
 
     rng = spark.range(n_convs)
     if partitions:

@@ -1,5 +1,8 @@
+import importlib
 import os
 import sys
+import zipfile
+import zipimport
 
 import pytest
 
@@ -13,3 +16,34 @@ def spark():
                       shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def cached_zip_finder(tmp_path):
+    """A zip archive on ``sys.path`` with its import finder cached, as a
+    pyspark worker holds one for ``pyspark.zip``. Yields a check that a
+    kernel has since dropped every cached zip finder and that modules
+    still import from the archive."""
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipfinder_probe_a.py", "A = 1\n")
+        z.writestr("zipfinder_probe_b.py", "B = 2\n")
+    sys.path.insert(0, archive)
+    try:
+        importlib.import_module("zipfinder_probe_a")
+        assert isinstance(sys.path_importer_cache[archive],
+                          zipimport.zipimporter)
+
+        def check_dropped():
+            assert not [p for p, f in sys.path_importer_cache.items()
+                        if isinstance(f, zipimport.zipimporter)]
+            mod_b = importlib.import_module("zipfinder_probe_b")
+            assert mod_b.B == 2
+            assert mod_b.__file__.startswith(archive)
+
+        yield check_dropped
+    finally:
+        sys.path.remove(archive)
+        sys.path_importer_cache.pop(archive, None)
+        sys.modules.pop("zipfinder_probe_a", None)
+        sys.modules.pop("zipfinder_probe_b", None)

@@ -426,44 +426,21 @@ def test_font_size_operand_never_fails_page(size):
     assert res["text"] == "hi"
 
 
-def test_kernel_drops_zip_import_finders(tmp_path):
+def test_kernel_drops_zip_import_finders(cached_zip_finder):
     """A reused pyspark worker calls ``importlib.invalidate_caches()``
     before every task, and each cached zip finder re-reads its whole
     archive there. A drained extraction kernel leaves no zip finder
     cached, and modules still import from the zip afterwards."""
-    import importlib
-    import sys
-    import zipfile
-    import zipimport
-
     import pyarrow as pa
 
     from pdf_parser_spark.operators.extraction import _extract_batches
 
-    archive = str(tmp_path / "mods.zip")
-    with zipfile.ZipFile(archive, "w") as z:
-        z.writestr("zipfinder_probe_a.py", "A = 1\n")
-        z.writestr("zipfinder_probe_b.py", "B = 2\n")
     pdf, golden = get_fixture("pdf-min-text")
     batch = pa.RecordBatch.from_pydict({
         "conv_id": ["c"], "turn_idx": [0],
         "text": [pdf.decode("latin-1")]})
-    sys.path.insert(0, archive)
-    try:
-        importlib.import_module("zipfinder_probe_a")
-        assert isinstance(sys.path_importer_cache[archive],
-                          zipimport.zipimporter)
 
-        out = list(_extract_batches(iter([batch])))
+    out = list(_extract_batches(iter([batch])))
 
-        assert out[0].column("text").to_pylist() == [golden["text"]]
-        assert not [p for p, f in sys.path_importer_cache.items()
-                    if isinstance(f, zipimport.zipimporter)]
-        mod_b = importlib.import_module("zipfinder_probe_b")
-        assert mod_b.B == 2
-        assert mod_b.__file__.startswith(archive)
-    finally:
-        sys.path.remove(archive)
-        sys.path_importer_cache.pop(archive, None)
-        sys.modules.pop("zipfinder_probe_a", None)
-        sys.modules.pop("zipfinder_probe_b", None)
+    assert out[0].column("text").to_pylist() == [golden["text"]]
+    cached_zip_finder()

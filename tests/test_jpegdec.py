@@ -92,19 +92,25 @@ def test_decoder_never_hangs_on_fuzz():
     never hang or return garbage silently."""
     import random
 
+    from pdf_parser_spark.kernel.jpegdec import encode_progressive_jpeg
+
     rng = random.Random(99)
     flat = np.full((8, 8), 80, np.uint8)
-    seed = encode_baseline_jpeg(flat.tobytes(), 8, 8, 1)
-    for trial in range(60):
-        data = bytearray(seed)
-        for _ in range(rng.randrange(1, 6)):
-            data[rng.randrange(len(data))] = rng.randrange(256)
-        try:
-            w, h, n, px = decode_baseline_jpeg(bytes(data))
-            assert 0 < w <= 1 << 16 and 0 < h <= 1 << 16
-            assert len(px) in (w * h, w * h * 3)
-        except (JpegError, IndexError, ValueError):
-            pass  # clean structured failure
+    rgb = np.random.default_rng(9).integers(0, 256, (16, 16, 3), np.uint8)
+    seeds = [encode_baseline_jpeg(flat.tobytes(), 8, 8, 1),
+             encode_progressive_jpeg(flat.tobytes(), 8, 8, 1),
+             encode_progressive_jpeg(rgb.tobytes(), 16, 16, 3)]
+    for seed in seeds:
+        for trial in range(60):
+            data = bytearray(seed)
+            for _ in range(rng.randrange(1, 6)):
+                data[rng.randrange(len(data))] = rng.randrange(256)
+            try:
+                w, h, n, px = decode_baseline_jpeg(bytes(data))
+                assert 0 < w <= 1 << 16 and 0 < h <= 1 << 16
+                assert len(px) in (w * h, w * h * 3)
+            except (JpegError, IndexError, ValueError):
+                pass  # clean structured failure
 
 
 def test_progressive_equals_baseline_decode():
@@ -284,16 +290,106 @@ def _patch_sos_to_single_component(data: bytes) -> bytes:
 
 
 def test_non_interleaved_sequential_rejected():
-    """A sequential SOS covering fewer components than the SOF declares
-    must raise (not return a single-plane raster labeled 3-component —
-    that corrupted the sink downstream)."""
+    """A sequential file whose only SOS covers fewer components than the
+    SOF declares must raise (not return a single-plane raster labeled
+    3-component — that corrupted the sink downstream): the other
+    components never get a scan."""
     import numpy as np
 
     rgb = np.zeros((8, 8, 3), dtype=np.uint8)
     rgb[..., 0] = 200
     data = _patch_sos_to_single_component(
         encode_baseline_jpeg(rgb.tobytes(), 8, 8, 3))
-    with pytest.raises(JpegError, match="non-interleaved"):
+    with pytest.raises(JpegError, match="without a DC scan"):
+        decode_baseline_jpeg(data)
+
+
+def _sos_segment(cids, ss: int, se: int) -> bytes:
+    import struct
+
+    seg = bytes([len(cids)]) + b"".join(bytes([c, 0x00]) for c in cids)
+    seg += bytes([ss, se, 0x00])
+    return b"\xff\xda" + struct.pack(">H", 2 + len(seg)) + seg
+
+
+def _scan_data(coeffs, cis, with_ac: bool) -> bytes:
+    """Entropy-coded data of one Ah=Al=0 scan over the components
+    ``cis`` of 1x1-sampled coefficient grids: per block, each
+    component's DC difference and, ``with_ac``, its AC 1..63."""
+    from pdf_parser_spark.kernel.jpegdec import (
+        _DC_ENC, _BitWriter, _emit_ac_band, _magnitude,
+    )
+
+    w = _BitWriter()
+    pred = {ci: 0 for ci in cis}
+    bh, bw = coeffs[0].shape[:2]
+    for by in range(bh):
+        for bx in range(bw):
+            for ci in cis:
+                zz = coeffs[ci][by, bx]
+                size, code = _magnitude(int(zz[0]) - pred[ci])
+                pred[ci] = int(zz[0])
+                ln, c = _DC_ENC[size]
+                w.write(c, ln)
+                if size:
+                    w.write(code, size)
+                if with_ac:
+                    _emit_ac_band(w, zz, 1, 63)
+    w.flush()
+    return bytes(w.out)
+
+
+def test_non_interleaved_sequential_decodes():
+    """A legal baseline file with one SOS per component (T.81 A.2.2
+    non-interleaved order) decodes to the same pixels as the
+    interleaved encode of the same image."""
+    from pdf_parser_spark.kernel.jpegdec import _component_coeffs
+
+    rng = np.random.default_rng(21)
+    rgb = rng.integers(0, 256, size=(13, 20, 3), dtype=np.uint8)
+    interleaved = encode_baseline_jpeg(rgb.tobytes(), 20, 13, 3)
+    coeffs = _component_coeffs(rgb.tobytes(), 20, 13, 3)
+    data = interleaved[:interleaved.find(b"\xff\xda")]
+    for ci in range(3):
+        data += _sos_segment([ci + 1], 0, 63) + _scan_data(coeffs, [ci],
+                                                           True)
+    data += b"\xff\xd9"
+    assert decode_baseline_jpeg(data) == decode_baseline_jpeg(interleaved)
+
+
+def test_single_component_scan_ignores_sampling_factors():
+    """A one-component scan is non-interleaved whatever the SOF's
+    sampling factors (T.81 A.2.2): a gray image whose SOF declares 2x2
+    decodes to the same pixels as its 1x1 original, blocks in raster
+    order, not grouped 2x2 as MCUs."""
+    rng = np.random.default_rng(22)
+    img = rng.integers(0, 256, size=(16, 32), dtype=np.uint8)
+    data = bytearray(encode_baseline_jpeg(img.tobytes(), 32, 16, 1))
+    i = bytes(data).find(b"\xff\xc0")
+    # SOF payload: len(2) prec(1) h(2) w(2) ncomp(1) cid(1) hv(1)
+    assert data[i + 11] == 0x11
+    original = decode_baseline_jpeg(bytes(data))
+    data[i + 11] = 0x22
+    assert decode_baseline_jpeg(bytes(data)) == original
+
+
+def test_progressive_component_without_dc_scan_rejected():
+    """A progressive file whose DC scan omits a component (its AC scans
+    all present) raises instead of rendering that component with a
+    zero DC."""
+    from pdf_parser_spark.kernel.jpegdec import (
+        _component_coeffs, encode_progressive_jpeg,
+    )
+
+    rng = np.random.default_rng(23)
+    rgb = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
+    full = encode_progressive_jpeg(rgb.tobytes(), 16, 16, 3)
+    dc_at = full.find(b"\xff\xda")
+    ac_at = full.find(b"\xff\xda", dc_at + 2)
+    coeffs = _component_coeffs(rgb.tobytes(), 16, 16, 3)
+    data = (full[:dc_at] + _sos_segment([1, 2], 0, 0)
+            + _scan_data(coeffs, [0, 1], False) + full[ac_at:])
+    with pytest.raises(JpegError, match="without a DC scan"):
         decode_baseline_jpeg(data)
 
 

@@ -719,3 +719,57 @@ def test_registry_parity_gates_inside_any_prefix_cap():
                  "ex06_jpeg_sink", "ex08_per_turn_golden",
                  "ex09_html_per_turn_golden"):
         assert gate in first31, gate
+
+
+class _CaptureKernel:
+    """Stands in for the SparkSession and DataFrames a source or
+    operator is handed, and returns the function it passes to
+    ``mapInPandas`` so a test can drive that kernel in-process."""
+
+    def range(self, n):
+        return self
+
+    def repartition(self, n):
+        return self
+
+    def select(self, *cols):
+        return self
+
+    def mapInPandas(self, fn, schema):
+        return fn
+
+
+@pytest.mark.parametrize("kernel", [
+    "synthetic_turns", "golden_turns", "html_turns", "html_golden",
+    "decode_meta", "sha256_udf", "weighted_quality_udaf"])
+def test_pandas_kernels_drop_zip_import_finders(spark, kernel,
+                                                cached_zip_finder):
+    """Like the extraction kernels, every pandas kernel leaves no zip
+    import finder cached once it has run, so the next task on its
+    worker does not re-read ``pyspark.zip`` in its setup."""
+    import pandas as pd
+
+    from pdf_parser_spark.functions import udfs
+    from pdf_parser_spark.operators.multimodal import (
+        decode_meta, jpeg_fixture,
+    )
+    from pdf_parser_spark.sources import html_turns, turns
+
+    ids = iter([pd.DataFrame({"id": [0, 1]})])
+    if kernel in ("synthetic_turns", "golden_turns"):
+        out = list(getattr(turns, kernel)(_CaptureKernel(), 2)(ids))
+        assert len(out[0]) == turns.n_turns_for(0) + turns.n_turns_for(1)
+    elif kernel in ("html_turns", "html_golden"):
+        out = list(getattr(html_turns, kernel)(_CaptureKernel(), 2)(ids))
+        assert len(out[0]) == 4
+    elif kernel == "decode_meta":
+        media = iter([pd.DataFrame({"doc_id": [0], "modality": ["image"],
+                                    "payload": [jpeg_fixture(0)]})])
+        out = list(decode_meta(_CaptureKernel())(media))
+        assert out[0]["decoder"].tolist() == ["jpegdec"]
+    elif kernel == "sha256_udf":
+        assert len(udfs.sha256_udf.func(pd.Series(["a"]))[0]) == 64
+    else:
+        assert udfs.weighted_quality_udaf.func(
+            pd.Series([1000, 3000]), pd.Series([1, 1])) == 2.0
+    cached_zip_finder()

@@ -157,8 +157,10 @@ def reference_interpret(content: bytes):
     )
     from pdf_parser_spark.kernel.textops import (
         IDENTITY, TJ_SPACE_THRESHOLD, FontInfo, TextSpan, mat_mul,
-        translate,
     )
+
+    def translate(tx, ty):
+        return (1.0, 0.0, 0.0, 1.0, tx, ty)
 
     try:
         toks = tokenize(content, 0, content_mode=True)
