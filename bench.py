@@ -9,8 +9,9 @@ dedup-lever measurement are written to BENCH_DETAIL.json alongside.
 
 Query results are forced with a noop-format write (full plan executes,
 nothing is collected to the driver). The extraction benchmark runs the
-flagship mapInPandas kernel over a deterministic synthetic transcript
-corpus (SPARK_GRAFT_BENCH_CONVS conversations, default 20000).
+flagship kernel, ``extract_turns`` (``mapInArrow``), over a
+deterministic synthetic transcript corpus (SPARK_GRAFT_BENCH_CONVS
+conversations, default 20000).
 """
 
 from __future__ import annotations

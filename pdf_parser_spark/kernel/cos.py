@@ -18,7 +18,9 @@ parser with identical token/byte-offset semantics:
 Extension beyond the reference: ``content_mode=True`` reuses the same
 lexer over *content streams* (PDF 32000-1 §7.8.2) where bare keyword runs
 become ``Op`` tokens instead of errors, indirect-ref/obj/stream handling
-is disabled, and inline-image data (``BI..ID..EI``) is skipped.
+is disabled, and the data of an inline image (``BI..ID..EI``) becomes one
+``TK_INLINE_DATA`` token carrying its byte span, in place of the ``ID``
+and ``EI`` keywords.
 """
 
 from __future__ import annotations

@@ -85,6 +85,18 @@ class JpegError(ValueError):
 # allocated.
 MAX_SAMPLES = 1 << 25
 
+# Work sanity bound, in SOS segments per file. A scan visits every
+# block of its components in Python even when its entropy data is one
+# EOB run, so a 14-byte progressive AC scan of a 2048x1024 gray image
+# costs ~16 ms, and without a cap decode work per input byte has no
+# bound (100 such scans took 2.1 s). The scan scripts in this repo use
+# at most 4 scans (``encode_progressive_jpeg``: one DC scan plus one AC
+# scan per component; the pdf-image-dct-prog fixture has 2) and
+# libjpeg's default progression 10; 32 leaves room for richer scripts
+# (successive approximation of every band) and holds the worst file to
+# 32 passes over its blocks.
+MAX_SCANS = 32
+
 
 # ------------------------------------------------------------- huffman
 
@@ -221,6 +233,7 @@ def _decode_baseline_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     progressive = False
     store: list[np.ndarray] = []
     dc_seen: set[int] = set()       # components a first DC scan covered
+    n_scans = 0
 
     while pos < len(data):
         if data[pos] != 0xFF:
@@ -293,6 +306,9 @@ def _decode_baseline_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
         elif marker == 0xDD:  # DRI
             restart_interval = struct.unpack(">H", seg[:2])[0]
         elif marker == 0xDA:  # SOS
+            n_scans += 1
+            if n_scans > MAX_SCANS:
+                raise JpegError(f"more than {MAX_SCANS} scans")
             ns = seg[0]
             order = []
             for c in range(ns):

@@ -25,21 +25,23 @@ Scale design (100 TB / 10^12 turns):
 - Arrow batch size is capped in session.py because rows are PDF-fat
 - a Python task's fixed setup cost was mostly zip import finders
   re-reading ``pyspark.zip`` (78-154 ms a task, paid once per wave of
-  ``ExtractionJob.run``'s kernel tasks); every kernel here drops them
-  when it has drained its batches (``drop_zip_finders``), so the next
-  task's setup pays ~0.1 ms
+  ``ExtractionJob.run``'s kernel tasks); ``map_batches``, the
+  package's one batch boundary, drops them when a task has drained
+  its batches (``drop_zip_finders``), so the next task's setup pays
+  ~0.1 ms
 """
 
 from __future__ import annotations
 
 import sys
 import zipimport
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 SPAN_TYPE = T.ArrayType(T.StructType([
     T.StructField("page", T.IntegerType()),
@@ -61,10 +63,6 @@ EXTRACT_SCHEMA = T.StructType([
     T.StructField("parse_error", T.StringType()),
 ])
 
-_SPAN_ARROW = pa.list_(pa.struct([
-    ("page", pa.int32()), ("x", pa.float64()), ("y", pa.float64()),
-    ("font", pa.string()), ("s", pa.string())]))
-
 
 def drop_zip_finders() -> None:
     """Forget the cached zip import finders of this process.
@@ -76,13 +74,42 @@ def drop_zip_finders() -> None:
     from a ``--py-files`` zip), so one task's setup paid ~16 such reads,
     78-154 ms, before the kernel ran. The finder cache is only a cache:
     the next import through a zip path builds a new finder from
-    ``zipimport``'s cached directory. Every Python kernel of the
-    package (Arrow and pandas alike) calls this once it has drained its
-    batches."""
+    ``zipimport``'s cached directory. ``map_batches`` calls this once a
+    task has drained its batches, and so do the pandas UDFs in
+    ``functions/udfs.py``."""
     cache = sys.path_importer_cache
     for path, finder in list(cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             del cache[path]
+
+
+def map_batches(df: DataFrame,
+                fn: Callable[[pa.RecordBatch], Sequence],
+                schema: T.StructType) -> DataFrame:
+    """The package's one Python batch boundary: ``df.mapInArrow`` with
+    ``fn`` called once per input Arrow batch.
+
+    ``fn(batch)`` returns the output columns in ``schema`` order, each
+    a list or a pyarrow array. Each column is typed from
+    ``to_arrow_schema(schema)``: a list is built as that type, an array
+    is cast to it. A task drops its zip import finders once it has
+    drained its batches (``drop_zip_finders``)."""
+    arrow = to_arrow_schema(schema)
+
+    def kernel(batches: Iterator[pa.RecordBatch]
+               ) -> Iterator[pa.RecordBatch]:
+        try:
+            for batch in batches:
+                yield pa.RecordBatch.from_arrays(
+                    [col.cast(field.type) if isinstance(col, pa.Array)
+                     else pa.array(col, field.type)
+                     for col, field in zip(fn(batch), arrow, strict=True)],
+                    schema=arrow)
+        finally:
+            drop_zip_finders()
+
+    kernel.__name__ = fn.__name__  # names the plan's MapInArrow node
+    return df.mapInArrow(kernel, schema=schema)
 
 
 def _payloads(batch: pa.RecordBatch) -> Iterator[bytes]:
@@ -96,56 +123,40 @@ def _payloads(batch: pa.RecordBatch) -> Iterator[bytes]:
         yield data
 
 
-def _extract_batches(batches: Iterator[pa.RecordBatch]
-                     ) -> Iterator[pa.RecordBatch]:
-    """mapInArrow kernel: one Python call per Arrow batch; nested spans
-    output assembled from flat arrays + offsets (no pandas objects)."""
+def _extract_columns(batch: pa.RecordBatch) -> list:
+    """Text kernel: one ``extract_text`` result per row; the nested
+    spans column is assembled from flat arrays + offsets (no pandas
+    objects)."""
     from pdf_parser_spark.kernel.extract import extract_text
 
-    try:
-        for batch in batches:
-            texts, n_pages, n_objects, nbytes, errors = [], [], [], [], []
-            sp_page, sp_x, sp_y, sp_font, sp_s = [], [], [], [], []
-            offsets = [0]
-            for data in _payloads(batch):
-                if not data:
-                    res = {"text": "", "spans": [], "n_pages": 0,
-                           "n_objects": 0, "bytes": 0,
-                           "parse_error": "EmptyOrNonLatin1Payload"}
-                else:
-                    res = extract_text(data)
-                texts.append(res["text"])
-                n_pages.append(res["n_pages"])
-                n_objects.append(res["n_objects"])
-                nbytes.append(res["bytes"])
-                errors.append(res["parse_error"])
-                for page, x, y, font, s in res["spans"]:
-                    sp_page.append(page)
-                    sp_x.append(x)
-                    sp_y.append(y)
-                    sp_font.append(font)
-                    sp_s.append(s)
-                offsets.append(len(sp_page))
-            struct = pa.StructArray.from_arrays(
-                [pa.array(sp_page, pa.int32()), pa.array(sp_x, pa.float64()),
-                 pa.array(sp_y, pa.float64()), pa.array(sp_font, pa.string()),
-                 pa.array(sp_s, pa.string())],
-                ["page", "x", "y", "font", "s"])
-            spans = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
-                                             struct)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("conv_id"),
-                 batch.column("turn_idx").cast(pa.int32()),
-                 pa.array(texts, pa.string()),
-                 spans.cast(_SPAN_ARROW),
-                 pa.array(n_pages, pa.int32()),
-                 pa.array(n_objects, pa.int32()),
-                 pa.array(nbytes, pa.int64()),
-                 pa.array(errors, pa.string())],
-                names=["conv_id", "turn_idx", "text", "spans", "n_pages",
-                       "n_objects", "bytes", "parse_error"])
-    finally:
-        drop_zip_finders()
+    texts, n_pages, n_objects, nbytes, errors = [], [], [], [], []
+    sp_page, sp_x, sp_y, sp_font, sp_s = [], [], [], [], []
+    offsets = [0]
+    for data in _payloads(batch):
+        if not data:
+            res = {"text": "", "spans": [], "n_pages": 0,
+                   "n_objects": 0, "bytes": 0,
+                   "parse_error": "EmptyOrNonLatin1Payload"}
+        else:
+            res = extract_text(data)
+        texts.append(res["text"])
+        n_pages.append(res["n_pages"])
+        n_objects.append(res["n_objects"])
+        nbytes.append(res["bytes"])
+        errors.append(res["parse_error"])
+        for page, x, y, font, s in res["spans"]:
+            sp_page.append(page)
+            sp_x.append(x)
+            sp_y.append(y)
+            sp_font.append(font)
+            sp_s.append(s)
+        offsets.append(len(sp_page))
+    struct = pa.StructArray.from_arrays(
+        [pa.array(col) for col in (sp_page, sp_x, sp_y, sp_font, sp_s)],
+        SPAN_TYPE.elementType.names)
+    spans = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct)
+    return [batch.column("conv_id"), batch.column("turn_idx"), texts, spans,
+            n_pages, n_objects, nbytes, errors]
 
 
 IMAGE_SCHEMA = T.StructType([
@@ -161,54 +172,28 @@ IMAGE_SCHEMA = T.StructType([
 ])
 
 
-def _extract_image_batches(batches: Iterator[pa.RecordBatch]
-                           ) -> Iterator[pa.RecordBatch]:
+def _image_columns(batch: pa.RecordBatch) -> list:
     """UDTF-shaped kernel: one input turn row → 0..N image rows (the
     reference's PDF::extract_image surface, src/lib.rs:60-72; order
     made deterministic by object number, SURVEY §2.7.4)."""
     from pdf_parser_spark.kernel.extract import extract_text
 
-    try:
-        for batch in batches:
-            conv, tix = [], []
-            pages, names, widths, heights, spaces, fmts, datas = \
-                [], [], [], [], [], [], []
-            for cid, t, data in zip(batch.column("conv_id").to_pylist(),
-                                    batch.column("turn_idx").to_pylist(),
-                                    _payloads(batch)):
-                res = extract_text(data, with_images=True) if data else \
-                    {"images": []}
-                for img in res.get("images", []):
-                    conv.append(cid)
-                    tix.append(t)
-                    pages.append(img["page"])
-                    names.append(img["name"])
-                    widths.append(img["width"])
-                    heights.append(img["height"])
-                    spaces.append(img["colorspace"])
-                    fmts.append(img["format"])
-                    datas.append(img["data"])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(conv, pa.string()),
-                 pa.array(tix, pa.int32()),
-                 pa.array(pages, pa.int32()),
-                 pa.array(names, pa.string()),
-                 pa.array(widths, pa.int32()),
-                 pa.array(heights, pa.int32()),
-                 pa.array(spaces, pa.string()),
-                 pa.array(fmts, pa.string()),
-                 pa.array(datas, pa.binary())],
-                names=["conv_id", "turn_idx", "page", "name", "width",
-                       "height", "colorspace", "format", "data"])
-    finally:
-        drop_zip_finders()
+    rows = []
+    for cid, t, data in zip(batch.column("conv_id").to_pylist(),
+                            batch.column("turn_idx").to_pylist(),
+                            _payloads(batch)):
+        images = extract_text(data, with_images=True)["images"] if data \
+            else []
+        rows += [(cid, t, img) for img in images]
+    return [[cid for cid, _t, _img in rows], [t for _cid, t, _img in rows]] \
+        + [[img[k] for _cid, _t, img in rows] for k in IMAGE_SCHEMA.names[2:]]
 
 
 def extract_images(turns: DataFrame) -> DataFrame:
     """Image extraction (one row per image — explode semantics done in
     the kernel). Same scale properties as extract_turns."""
     slim = turns.select("conv_id", "turn_idx", "text")
-    return slim.mapInArrow(_extract_image_batches, schema=IMAGE_SCHEMA)
+    return map_batches(slim, _image_columns, IMAGE_SCHEMA)
 
 
 def extract_turns(turns: DataFrame) -> DataFrame:
@@ -217,48 +202,31 @@ def extract_turns(turns: DataFrame) -> DataFrame:
     turn_idx, text) happens FIRST so only those columns cross the
     Arrow boundary."""
     slim = turns.select("conv_id", "turn_idx", "text")
-    return slim.mapInArrow(_extract_batches, schema=EXTRACT_SCHEMA)
+    return map_batches(slim, _extract_columns, EXTRACT_SCHEMA)
 
 
-def _encode_jpeg_batches(batches: Iterator[pa.RecordBatch]
-                         ) -> Iterator[pa.RecordBatch]:
+def _encode_jpeg_columns(batch: pa.RecordBatch) -> list:
     from pdf_parser_spark.kernel.jpegdec import JpegError, encode_baseline_jpeg
 
-    try:
-        for batch in batches:
-            cols = {n: batch.column(n).to_pylist()
-                    for n in batch.schema.names}
-            out_fmt, out_data = [], []
-            for fmt, w, h, data in zip(cols["format"], cols["width"],
-                                       cols["height"], cols["data"]):
-                if fmt == "raw-rgb":
-                    # never-abort contract: a raster whose byte length
-                    # disagrees with width*height*3 (malformed upstream
-                    # stream) must not kill the Spark task — forward the
-                    # row unchanged instead
-                    try:
-                        out_data.append(encode_baseline_jpeg(data, w, h, 3))
-                        out_fmt.append("jpeg")
-                    except (JpegError, ValueError):
-                        out_fmt.append(fmt)
-                        out_data.append(data)
-                else:  # already JPEG (non-baseline passthrough)
-                    out_fmt.append(fmt)
-                    out_data.append(data)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols["conv_id"], pa.string()),
-                 pa.array(cols["turn_idx"], pa.int32()),
-                 pa.array(cols["page"], pa.int32()),
-                 pa.array(cols["name"], pa.string()),
-                 pa.array(cols["width"], pa.int32()),
-                 pa.array(cols["height"], pa.int32()),
-                 pa.array(cols["colorspace"], pa.string()),
-                 pa.array(out_fmt, pa.string()),
-                 pa.array(out_data, pa.binary())],
-                names=["conv_id", "turn_idx", "page", "name", "width",
-                       "height", "colorspace", "format", "data"])
-    finally:
-        drop_zip_finders()
+    out_fmt, out_data = [], []
+    for fmt, w, h, data in zip(*(batch.column(n).to_pylist() for n in
+                                 ("format", "width", "height", "data"))):
+        if fmt == "raw-rgb":
+            # never-abort contract: a raster whose byte length
+            # disagrees with width*height*3 (malformed upstream
+            # stream) must not kill the Spark task — forward the
+            # row unchanged instead
+            try:
+                out_data.append(encode_baseline_jpeg(data, w, h, 3))
+                out_fmt.append("jpeg")
+            except (JpegError, ValueError):
+                out_fmt.append(fmt)
+                out_data.append(data)
+        else:  # already JPEG (non-baseline passthrough)
+            out_fmt.append(fmt)
+            out_data.append(data)
+    return [batch.column(n) for n in IMAGE_SCHEMA.names[:-2]] \
+        + [out_fmt, out_data]
 
 
 def encode_images_jpeg(images: DataFrame) -> DataFrame:
@@ -268,7 +236,7 @@ def encode_images_jpeg(images: DataFrame) -> DataFrame:
     JPEG (non-baseline passthrough) are forwarded. Same schema, so
     a parquet write of this frame is the reference's image sink as a
     distributed table."""
-    return images.mapInArrow(_encode_jpeg_batches, schema=IMAGE_SCHEMA)
+    return map_batches(images, _encode_jpeg_columns, IMAGE_SCHEMA)
 
 
 def extract_turns_dedup(turns: DataFrame) -> DataFrame:

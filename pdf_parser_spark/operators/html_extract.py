@@ -5,13 +5,11 @@ embarrassingly parallel, only (id cols, html) cross the boundary."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from pdf_parser_spark.operators.extraction import drop_zip_finders
+from pdf_parser_spark.operators.extraction import map_batches
 
 HTML_EXTRACT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -24,34 +22,16 @@ HTML_EXTRACT_SCHEMA = T.StructType([
 ])
 
 
-def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _html_columns(batch: pa.RecordBatch) -> list:
     from pdf_parser_spark.kernel.htmlx import extract_main_text
 
-    try:
-        for batch in batches:
-            titles, texts, n_blocks, n_kept, n_chrome = [], [], [], [], []
-            for html in batch.column("text").to_pylist():
-                res = extract_main_text(html or "")
-                titles.append(res["title"])
-                texts.append(res["text"])
-                n_blocks.append(res["n_blocks"])
-                n_kept.append(res["n_kept"])
-                n_chrome.append(res["n_chrome_blocks"])
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("conv_id"),
-                 batch.column("turn_idx").cast(pa.int32()),
-                 pa.array(titles, pa.string()),
-                 pa.array(texts, pa.string()),
-                 pa.array(n_blocks, pa.int32()),
-                 pa.array(n_kept, pa.int32()),
-                 pa.array(n_chrome, pa.int32())],
-                names=["conv_id", "turn_idx", "title", "text", "n_blocks",
-                       "n_kept", "n_chrome_blocks"])
-    finally:
-        drop_zip_finders()
+    results = [extract_main_text(html or "")
+               for html in batch.column("text").to_pylist()]
+    return [batch.column("conv_id"), batch.column("turn_idx")] + [
+        [res[k] for res in results] for k in HTML_EXTRACT_SCHEMA.names[2:]]
 
 
 def extract_html_turns(turns: DataFrame) -> DataFrame:
     """Turns whose ``text`` column holds HTML → main-content rows."""
     slim = turns.select("conv_id", "turn_idx", "text")
-    return slim.mapInArrow(_extract, schema=HTML_EXTRACT_SCHEMA)
+    return map_batches(slim, _html_columns, HTML_EXTRACT_SCHEMA)

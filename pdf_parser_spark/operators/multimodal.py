@@ -2,8 +2,8 @@
 
 Images/audio/video ride through the engine as ``binary`` columns with a
 typed metadata struct, exactly like the PDF payloads do. The Spark-side
-plumbing — schema, partitioning, mapInPandas batch shape, frame
-sampling — is real and tested.
+plumbing — schema, partitioning, Arrow batch shape (``map_batches``),
+frame sampling — is real and tested.
 
 Decode is REAL for JPEG payloads since round 3: ``decode_meta`` runs
 the in-repo T.81 decoder (``kernel/jpegdec.py``) on any payload with a
@@ -25,15 +25,14 @@ Python — metadata joins back by id if other columns are needed.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from functools import lru_cache
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pdf_parser_spark.operators.extraction import drop_zip_finders
+from pdf_parser_spark.operators.extraction import map_batches
 
 DECODE_META_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -157,31 +156,22 @@ def _try_real_decode(payload: bytes) -> dict | None:
         return None
 
 
+def _decode_meta_columns(batch: pa.RecordBatch) -> list:
+    metas = []
+    for payload in batch.column("payload").to_pylist():
+        data = payload or b""
+        metas.append(_try_jpegdec(data) or _try_real_decode(data)
+                     or _fake_decode(data))
+    return [batch.column("doc_id"), batch.column("modality")] + [
+        [m[k] for m in metas] for k in DECODE_META_SCHEMA.names[2:]]
+
+
 def decode_meta(media: DataFrame) -> DataFrame:
-    """mapInPandas decode: one Python call per Arrow batch, emitting a
-    typed metadata row per payload (UDTF-shaped like the PDF kernel)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            for pdf in batches:
-                metas = []
-                for payload in pdf["payload"]:
-                    data = bytes(payload) if payload is not None else b""
-                    metas.append(_try_jpegdec(data)
-                                 or _try_real_decode(data)
-                                 or _fake_decode(data))
-                out = pd.DataFrame(metas)
-                out.insert(0, "doc_id", pdf["doc_id"].values)
-                out.insert(1, "modality", pdf["modality"].values)
-                out["width"] = out["width"].astype("int32")
-                out["height"] = out["height"].astype("int32")
-                out["channels"] = out["channels"].astype("int32")
-                yield out
-        finally:
-            drop_zip_finders()
-
-    return (media.select("doc_id", "modality", "payload")
-            .mapInPandas(run, schema=DECODE_META_SCHEMA))
+    """Arrow batch decode (``map_batches``): one Python call per batch,
+    emitting a typed metadata row per payload (UDTF-shaped like the
+    PDF kernel)."""
+    return map_batches(media.select("doc_id", "modality", "payload"),
+                       _decode_meta_columns, DECODE_META_SCHEMA)
 
 
 def frame_sample(media: DataFrame, stride: int = FRAME_STRIDE) -> DataFrame:

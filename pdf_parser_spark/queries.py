@@ -179,21 +179,6 @@ SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS INTEGER) AS rn FROM (
 """
 
 
-def q06_top10_orders(spark, sf_dir):
-    """Global sort + limit (TakeOrderedAndProject — no full sort at
-    scale; deterministic compound key)."""
-    return (_t(spark, sf_dir, "orders")
-            .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-            .limit(10)
-            .select("o_orderkey", "o_custkey", "o_totalprice"))
-
-
-ORACLE_Q06 = """
-SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
-"""
-
-
 def q07_supplier_only_nations(spark, sf_dir):
     """Set op: nations with suppliers EXCEPT nations with top-balance
     customers (threshold keeps the difference non-empty)."""
@@ -1354,7 +1339,8 @@ WHERE rank <= {ANN_K}
 # =====================================================================
 
 def mm01_decode_meta(spark, sf_dir):
-    """Binary payload plumbing + decode via mapInPandas. Every 5th doc
+    """Binary payload plumbing + Arrow batch decode (``decode_meta``
+    through ``map_batches``). Every 5th doc
     carries a REAL deterministic JPEG fixture payload and is decoded by
     the in-repo T.81 codec (width/height/channels from the actual SOF +
     scan — decoder='jpegdec'); the rest keep the document stand-in
@@ -1744,10 +1730,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q03_customers_without_orders": q03_customers_without_orders,
     "q04_building_customers_with_orders": q04_building_customers_with_orders,
     "q05_top_orders_per_customer": q05_top_orders_per_customer,
-    # q06 (global sort+limit) was deregistered in round 4: its
-    # TakeOrdered coverage duplicates q05/cp01, and the slot funds a
-    # driver-visible curation operator. The function stays (tests
-    # exercise it).
     "cu01_contamination": cu01_contamination,
     "q07_supplier_only_nations": q07_supplier_only_nations,
     "q08_part_brand_stats": q08_part_brand_stats,

@@ -6,13 +6,10 @@ parity is assert-able per turn."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from pdf_parser_spark.operators.extraction import drop_zip_finders
+from pdf_parser_spark.sources.turns import expand_rows
 
 _WORDS = ("spark arrow parquet shuffle partition kernel lexer parser "
           "stream batch window join filter project agg broadcast salt "
@@ -67,55 +64,19 @@ matter</p></div>
 def html_turns(spark: SparkSession, n_convs: int,
                turns_per_conv: int = 2,
                partitions: int | None = None) -> DataFrame:
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            for pdf in batches:
-                conv_ids, idxs, texts = [], [], []
-                for i in pdf["id"]:
-                    i = int(i)
-                    for t in range(turns_per_conv):
-                        conv_ids.append(f"hconv-{i:06d}")
-                        idxs.append(t)
-                        texts.append(build_page(i, t)[0])
-                yield pd.DataFrame({
-                    "conv_id": conv_ids,
-                    "turn_idx": pd.array(idxs, dtype="int32"),
-                    "text": texts,
-                })
-        finally:
-            drop_zip_finders()
+    def rows(i: int):
+        for t in range(turns_per_conv):
+            yield f"hconv-{i:06d}", t, build_page(i, t)[0]
 
-    rng = spark.range(n_convs)
-    if partitions:
-        rng = rng.repartition(partitions)
-    return rng.mapInPandas(expand, schema=HTML_TURNS_SCHEMA)
+    return expand_rows(spark, n_convs, rows, HTML_TURNS_SCHEMA, partitions)
 
 
 def html_golden(spark: SparkSession, n_convs: int,
                 turns_per_conv: int = 2,
                 partitions: int | None = None) -> DataFrame:
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            for pdf in batches:
-                conv_ids, idxs, texts, titles = [], [], [], []
-                for i in pdf["id"]:
-                    i = int(i)
-                    for t in range(turns_per_conv):
-                        _html, golden, title = build_page(i, t)
-                        conv_ids.append(f"hconv-{i:06d}")
-                        idxs.append(t)
-                        texts.append(golden)
-                        titles.append(title)
-                yield pd.DataFrame({
-                    "conv_id": conv_ids,
-                    "turn_idx": pd.array(idxs, dtype="int32"),
-                    "text": texts,
-                    "title": titles,
-                })
-        finally:
-            drop_zip_finders()
+    def rows(i: int):
+        for t in range(turns_per_conv):
+            _html, golden, title = build_page(i, t)
+            yield f"hconv-{i:06d}", t, golden, title
 
-    rng = spark.range(n_convs)
-    if partitions:
-        rng = rng.repartition(partitions)
-    return rng.mapInPandas(expand, schema=HTML_GOLDEN_SCHEMA)
+    return expand_rows(spark, n_convs, rows, HTML_GOLDEN_SCHEMA, partitions)

@@ -5,24 +5,24 @@ Schema exactly per BASELINE.json input_hint:
 tool string, ts timestamp)`` — ``text`` holds one fixture PDF's bytes
 latin-1-decoded (lossless byte<->str round trip).
 
-Generation is *distributed*: ``spark.range(n_convs)`` fans out and a
-``mapInPandas`` kernel expands each conversation into its turns, so the
-driver never materializes the corpus (scales to any n_convs). Columns
-are built column-wise (dict-of-lists) — list-of-dict row building
-measured ~2x slower at 50k turns. Skew knob: ~2% of conversations are
-long (FIXTURES.md §1) to exercise salting.
+Generation is *distributed*: ``spark.range(n_convs)`` fans out and
+``expand_rows`` turns each conversation id into its rows inside the
+package's one Arrow batch boundary (``map_batches``), so the driver
+never materializes the corpus (scales to any n_convs). A table
+supplies only ``rows(i)``, conversation i's rows as tuples in schema
+order; ``sources/html_turns.py`` reuses the same helper. Skew knob:
+~2% of conversations are long (FIXTURES.md §1) to exercise salting.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable
+from datetime import datetime, timedelta, timezone
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from pdf_parser_spark.operators.extraction import drop_zip_finders
+from pdf_parser_spark.operators.extraction import map_batches
 
 TURNS_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
@@ -42,7 +42,7 @@ GOLDEN_SCHEMA = T.StructType([
 ])
 
 _ROLES = ("user", "assistant", "tool")
-_EPOCH = pd.Timestamp("2026-01-01")
+_EPOCH = datetime(2026, 1, 1, tzinfo=timezone.utc)
 
 
 def n_turns_for(i: int) -> int:
@@ -69,43 +69,37 @@ def _conv_turns(i: int, broken_every: int):
         yield conv_id, t, fid, pdf, golden, is_broken
 
 
+def expand_rows(spark: SparkSession, n_convs: int,
+                rows: Callable[[int], Iterable[tuple]],
+                schema: T.StructType,
+                partitions: int | None = None) -> DataFrame:
+    """Distributed table of every ``rows(i)`` for i < n_convs: each
+    conversation id expands to its rows, tuples in ``schema`` order."""
+
+    def columns(batch) -> list:
+        out = [row for i in batch.column("id").to_pylist()
+               for row in rows(i)]
+        return list(zip(*out)) or [()] * len(schema.fields)
+
+    rng = spark.range(n_convs)
+    if partitions:
+        rng = rng.repartition(partitions)
+    return map_batches(rng, columns, schema)
+
+
 def synthetic_turns(spark: SparkSession, n_convs: int,
                     broken_every: int = 0,
                     partitions: int | None = None) -> DataFrame:
     """Distributed deterministic turns table."""
 
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            for pdf_in in batches:
-                conv_ids, turn_idxs, roles, texts, tools, secs = \
-                    [], [], [], [], [], []
-                for i in pdf_in["id"]:
-                    i = int(i)
-                    for conv_id, t, _fid, pdf, _g, _b in _conv_turns(
-                            i, broken_every):
-                        conv_ids.append(conv_id)
-                        turn_idxs.append(t)
-                        role = _ROLES[t % 3]
-                        roles.append(role)
-                        texts.append(pdf.decode("latin-1"))
-                        tools.append("pdf_extract" if role == "tool" else "")
-                        secs.append(i * 3600 + t * 60)
-                yield pd.DataFrame({
-                    "conv_id": conv_ids,
-                    "turn_idx": pd.array(turn_idxs, dtype="int32"),
-                    "role": roles,
-                    "text": texts,
-                    "tool": tools,
-                    "ts": _EPOCH + pd.to_timedelta(
-                        np.asarray(secs, dtype="int64"), unit="s"),
-                })
-        finally:
-            drop_zip_finders()
+    def rows(i: int):
+        for conv_id, t, _fid, pdf, _g, _b in _conv_turns(i, broken_every):
+            role = _ROLES[t % 3]
+            yield (conv_id, t, role, pdf.decode("latin-1"),
+                   "pdf_extract" if role == "tool" else "",
+                   _EPOCH + timedelta(seconds=i * 3600 + t * 60))
 
-    rng = spark.range(n_convs)
-    if partitions:
-        rng = rng.repartition(partitions)
-    return rng.mapInPandas(expand, schema=TURNS_SCHEMA)
+    return expand_rows(spark, n_convs, rows, TURNS_SCHEMA, partitions)
 
 
 def golden_turns(spark: SparkSession, n_convs: int,
@@ -114,30 +108,11 @@ def golden_turns(spark: SparkSession, n_convs: int,
     """Expected extraction per turn, from the same deterministic fixture
     mapping (FIXTURES.md §1 golden table)."""
 
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            for pdf_in in batches:
-                conv_ids, turn_idxs, texts, n_pages, n_spans = \
-                    [], [], [], [], []
-                for i in pdf_in["id"]:
-                    for conv_id, t, _fid, _pdf, golden, broken in _conv_turns(
-                            int(i), broken_every):
-                        conv_ids.append(conv_id)
-                        turn_idxs.append(t)
-                        texts.append("" if broken else golden["text"])
-                        n_pages.append(0 if broken else golden["n_pages"])
-                        n_spans.append(0 if broken else golden["n_spans"])
-                yield pd.DataFrame({
-                    "conv_id": conv_ids,
-                    "turn_idx": pd.array(turn_idxs, dtype="int32"),
-                    "text": texts,
-                    "n_pages": pd.array(n_pages, dtype="int32"),
-                    "n_spans": pd.array(n_spans, dtype="int32"),
-                })
-        finally:
-            drop_zip_finders()
+    def rows(i: int):
+        for conv_id, t, _fid, _pdf, golden, broken in _conv_turns(
+                i, broken_every):
+            yield (conv_id, t, "" if broken else golden["text"],
+                   0 if broken else golden["n_pages"],
+                   0 if broken else golden["n_spans"])
 
-    rng = spark.range(n_convs)
-    if partitions:
-        rng = rng.repartition(partitions)
-    return rng.mapInPandas(expand, schema=GOLDEN_SCHEMA)
+    return expand_rows(spark, n_convs, rows, GOLDEN_SCHEMA, partitions)

@@ -9,6 +9,30 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+class _CaptureKernel:
+    """Stands in for the SparkSession and DataFrames a source or
+    operator is handed, and returns the kernel function ``map_batches``
+    passes to ``mapInArrow`` so a test can drive that kernel
+    in-process."""
+
+    def range(self, n):
+        return self
+
+    def repartition(self, n):
+        return self
+
+    def select(self, *cols):
+        return self
+
+    def mapInArrow(self, fn, schema):
+        return fn
+
+
+@pytest.fixture
+def capture_kernel():
+    return _CaptureKernel()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pdf_parser_spark.session import get_spark

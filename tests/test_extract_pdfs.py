@@ -426,21 +426,21 @@ def test_font_size_operand_never_fails_page(size):
     assert res["text"] == "hi"
 
 
-def test_kernel_drops_zip_import_finders(cached_zip_finder):
+def test_kernel_drops_zip_import_finders(cached_zip_finder, capture_kernel):
     """A reused pyspark worker calls ``importlib.invalidate_caches()``
     before every task, and each cached zip finder re-reads its whole
     archive there. A drained extraction kernel leaves no zip finder
     cached, and modules still import from the zip afterwards."""
     import pyarrow as pa
 
-    from pdf_parser_spark.operators.extraction import _extract_batches
+    from pdf_parser_spark.operators.extraction import extract_turns
 
     pdf, golden = get_fixture("pdf-min-text")
     batch = pa.RecordBatch.from_pydict({
         "conv_id": ["c"], "turn_idx": [0],
         "text": [pdf.decode("latin-1")]})
 
-    out = list(_extract_batches(iter([batch])))
+    out = list(extract_turns(capture_kernel)(iter([batch])))
 
     assert out[0].column("text").to_pylist() == [golden["text"]]
     cached_zip_finder()

@@ -153,14 +153,14 @@ _HUGE = b"9" * 400   # int() parses it; float(int) overflows
     b"BT 0 -" + _HUGE + b" TD (a) Tj ET",
     b"BT 0 0 " + _HUGE + b" Td (a) Tj ET",
 ], ids=["TJ", "cm", "TL", "Tm", "TD", "Td"])
-def test_hostile_number_operand_yields_error_row(ops):
+def test_hostile_number_operand_yields_error_row(ops, capture_kernel):
     """A numeric operand too large for a float must not escape the
     kernel: the Arrow batch kernel still emits exactly one row, with
     the overflow recorded in parse_error."""
     import pyarrow as pa
 
     from pdf_parser_spark.fixtures import PdfBuilder, _scaffold
-    from pdf_parser_spark.operators.extraction import _extract_batches
+    from pdf_parser_spark.operators.extraction import extract_turns
 
     b = PdfBuilder()
     _scaffold(b)
@@ -170,7 +170,7 @@ def test_hostile_number_operand_yields_error_row(ops):
         [pa.array(["c"]), pa.array([0], pa.int64()),
          pa.array([pdf.decode("latin-1")])],
         names=["conv_id", "turn_idx", "text"])
-    out = list(_extract_batches(iter([batch])))
+    out = list(extract_turns(capture_kernel)(iter([batch])))
     rows = [r for ob in out for r in ob.to_pylist()]
     assert len(rows) == 1
     assert rows[0]["parse_error"] is not None

@@ -415,6 +415,47 @@ def test_oversized_sof_rejected_before_allocation():
         decode_baseline_jpeg(bytes(pdata))
 
 
+def test_scan_count_capped():
+    """A progressive scan visits every block of its component even when
+    its entropy data is one EOB run, so a file of many tiny scans would
+    cost unbounded decode work per input byte. Past MAX_SCANS SOS
+    segments the decoder raises instead."""
+    import struct
+
+    from pdf_parser_spark.kernel.jpegdec import (
+        _DC_BITS, _DC_ENC, _DC_VALS, MAX_SCANS, _BitWriter,
+    )
+
+    def segment(marker, payload):
+        return (bytes([0xFF, marker]) + struct.pack(">H", 2 + len(payload))
+                + payload)
+
+    def gray_progressive(n_ac_scans):
+        """64x64 gray, flat 128: one DC scan, then ``n_ac_scans``
+        first-AC scans whose data is one EOB run over all 64 blocks."""
+        out = b"\xff\xd8" + segment(0xDB, b"\x00" + bytes([1] * 64))
+        out += segment(0xC2, struct.pack(">BHHB", 8, 64, 64, 1)
+                       + bytes([1, 0x11, 0]))
+        out += segment(0xC4, b"\x00" + bytes(_DC_BITS) + _DC_VALS)
+        # AC table: the one symbol 0x60 (EOB run 64..127) at code '0'
+        out += segment(0xC4, b"\x10" + bytes([1] + [0] * 15) + b"\x60")
+        w = _BitWriter()
+        ln, code = _DC_ENC[0]
+        for _ in range(64):
+            w.write(code, ln)
+        w.flush()
+        out += segment(0xDA, bytes([1, 1, 0x00, 0, 0, 0])) + bytes(w.out)
+        # code '0' plus 6 zero run bits (run 64), padded with ones
+        ac = segment(0xDA, bytes([1, 1, 0x00, 1, 63, 0])) + b"\x01"
+        return out + ac * n_ac_scans + b"\xff\xd9"
+
+    w, h, n, px = decode_baseline_jpeg(gray_progressive(MAX_SCANS - 1))
+    assert (w, h, n) == (64, 64, 1)
+    assert set(px) == {128}
+    with pytest.raises(JpegError, match="scans"):
+        decode_baseline_jpeg(gray_progressive(MAX_SCANS + 1))
+
+
 def test_sink_forwards_malformed_raster(spark):
     """never-abort contract: a raw-rgb row whose data length disagrees
     with width*height*3 is forwarded unchanged, not a task abort."""

@@ -372,14 +372,12 @@ def test_registry_consistency():
 
 
 def test_cheap_queries_run_at_sf0001(spark):
-    from pdf_parser_spark.queries import QUERIES, q06_top10_orders
+    from pdf_parser_spark.queries import QUERIES
     sf = "/root/testdata/sf0.001"
     for name in ["q01_pricing_summary", "cu01_contamination",
                  "dd01_exact_dedup", "tx01_token_counts",
                  "mm02_frame_sample"]:
         assert QUERIES[name](spark, sf).count() > 0, name
-    # q06 left the registry in round 4 but stays a working query
-    assert q06_top10_orders(spark, sf).count() == 10
 
 
 def test_hll_sketch_within_error(spark):
@@ -721,33 +719,18 @@ def test_registry_parity_gates_inside_any_prefix_cap():
         assert gate in first31, gate
 
 
-class _CaptureKernel:
-    """Stands in for the SparkSession and DataFrames a source or
-    operator is handed, and returns the function it passes to
-    ``mapInPandas`` so a test can drive that kernel in-process."""
-
-    def range(self, n):
-        return self
-
-    def repartition(self, n):
-        return self
-
-    def select(self, *cols):
-        return self
-
-    def mapInPandas(self, fn, schema):
-        return fn
-
-
 @pytest.mark.parametrize("kernel", [
     "synthetic_turns", "golden_turns", "html_turns", "html_golden",
     "decode_meta", "sha256_udf", "weighted_quality_udaf"])
 def test_pandas_kernels_drop_zip_import_finders(spark, kernel,
-                                                cached_zip_finder):
-    """Like the extraction kernels, every pandas kernel leaves no zip
-    import finder cached once it has run, so the next task on its
-    worker does not re-read ``pyspark.zip`` in its setup."""
+                                                cached_zip_finder,
+                                                capture_kernel):
+    """Like the extraction kernels, every generator, the media decode
+    and the pandas UDFs leave no zip import finder cached once they
+    have run, so the next task on their worker does not re-read
+    ``pyspark.zip`` in its setup."""
     import pandas as pd
+    import pyarrow as pa
 
     from pdf_parser_spark.functions import udfs
     from pdf_parser_spark.operators.multimodal import (
@@ -755,18 +738,19 @@ def test_pandas_kernels_drop_zip_import_finders(spark, kernel,
     )
     from pdf_parser_spark.sources import html_turns, turns
 
-    ids = iter([pd.DataFrame({"id": [0, 1]})])
+    ids = iter([pa.RecordBatch.from_pydict({"id": [0, 1]})])
     if kernel in ("synthetic_turns", "golden_turns"):
-        out = list(getattr(turns, kernel)(_CaptureKernel(), 2)(ids))
-        assert len(out[0]) == turns.n_turns_for(0) + turns.n_turns_for(1)
+        out = list(getattr(turns, kernel)(capture_kernel, 2)(ids))
+        assert out[0].num_rows == turns.n_turns_for(0) + turns.n_turns_for(1)
     elif kernel in ("html_turns", "html_golden"):
-        out = list(getattr(html_turns, kernel)(_CaptureKernel(), 2)(ids))
-        assert len(out[0]) == 4
+        out = list(getattr(html_turns, kernel)(capture_kernel, 2)(ids))
+        assert out[0].num_rows == 4
     elif kernel == "decode_meta":
-        media = iter([pd.DataFrame({"doc_id": [0], "modality": ["image"],
-                                    "payload": [jpeg_fixture(0)]})])
-        out = list(decode_meta(_CaptureKernel())(media))
-        assert out[0]["decoder"].tolist() == ["jpegdec"]
+        media = iter([pa.RecordBatch.from_pydict({
+            "doc_id": [0], "modality": ["image"],
+            "payload": [jpeg_fixture(0)]})])
+        out = list(decode_meta(capture_kernel)(media))
+        assert out[0].column("decoder").to_pylist() == ["jpegdec"]
     elif kernel == "sha256_udf":
         assert len(udfs.sha256_udf.func(pd.Series(["a"]))[0]) == 64
     else:

@@ -67,3 +67,51 @@ def test_every_package_module_has_a_production_importer():
     orphans = [m for m in modules if not importers.get(m)]
     assert not orphans, (
         f"imported only by tests; move under tests/: {orphans}")
+
+
+def _package_calls(names: set[str]) -> list[tuple[str, str, str]]:
+    """(callee, module, outermost enclosing function) of every call in
+    the package whose callee is named in ``names``."""
+    found = []
+
+    def visit(node, module, outer):
+        if isinstance(node, ast.Call):
+            f = node.func
+            callee = f.attr if isinstance(f, ast.Attribute) else \
+                getattr(f, "id", None)
+            if callee in names:
+                found.append((callee, module, outer))
+        if outer == "" and isinstance(node, (ast.FunctionDef,
+                                             ast.AsyncFunctionDef)):
+            outer = node.name
+        for child in ast.iter_child_nodes(node):
+            visit(child, module, outer)
+
+    for dirpath, _dirs, files in os.walk(os.path.join(ROOT, PKG)):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                with open(path, encoding="utf-8") as fh:
+                    visit(ast.parse(fh.read(), path), _module_name(path),
+                          "")
+    return found
+
+
+def test_one_python_batch_boundary():
+    """Every batch kernel of the package crosses into Python through
+    ``map_batches``: it is the only ``mapInArrow`` call, nothing calls
+    ``mapInPandas``, and the zip-finder drop lives in ``map_batches``
+    and the two pandas UDFs, which are column expressions."""
+    calls = _package_calls({"mapInArrow", "mapInPandas",
+                            "drop_zip_finders"})
+    sites = {name: sorted((m, f) for c, m, f in calls if c == name)
+             for name in ("mapInArrow", "mapInPandas", "drop_zip_finders")}
+    extraction = f"{PKG}.operators.extraction"
+    udfs = f"{PKG}.functions.udfs"
+    assert sites == {
+        "mapInArrow": [(extraction, "map_batches")],
+        "mapInPandas": [],
+        "drop_zip_finders": [(udfs, "sha256_udf"),
+                             (udfs, "weighted_quality_udaf"),
+                             (extraction, "map_batches")],
+    }

@@ -1,5 +1,5 @@
 """Pipeline e2e (SURVEY.md §5.2.4): synthesize a turns table, run the
-salted mapInPandas extraction, join to goldens on (conv_id, turn_idx)
+salted mapInArrow extraction, join to goldens on (conv_id, turn_idx)
 and assert 100% per-turn text equality; then prove idempotent resume
 (partial run -> rerun -> complete output, no duplicates)."""
 
@@ -383,14 +383,21 @@ def test_worker_task_leaves_no_zip_finders(spark):
         import sys
         import zipimport
 
-        from pdf_parser_spark.operators.extraction import _extract_batches
+        from pdf_parser_spark.operators.extraction import extract_turns
+
+        class Capture:  # returns the kernel map_batches hands mapInArrow
+            def select(self, *cols):
+                return self
+
+            def mapInArrow(self, fn, schema):
+                return fn
 
         def zip_finders():
             return sum(isinstance(f, zipimport.zipimporter)
                        for f in sys.path_importer_cache.values())
 
         before = zip_finders()
-        for _ in _extract_batches(batches):
+        for _ in extract_turns(Capture())(batches):
             pass
         yield pa.RecordBatch.from_pydict(
             {"before": [before], "after": [zip_finders()]})

@@ -47,11 +47,19 @@ def test_q04_semi_join_with_pushed_predicates(spark, qreg):
     assert "EqualTo(c_mktsegment,BUILDING)" in plan.replace(" ", "")
 
 
-def test_extraction_projection_is_narrow(spark):
-    from pdf_parser_spark.operators.extraction import extract_turns
+def _materialized_turns(spark):
+    """A small turns table checkpointed out of its generator, so the
+    extraction kernel is the plan's only Python node (the generator
+    runs one too) and the pruning projection stays a plan node."""
     from pdf_parser_spark.sources.turns import synthetic_turns
 
-    df = extract_turns(synthetic_turns(spark, 3))
+    return synthetic_turns(spark, 3).localCheckpoint()
+
+
+def test_extraction_projection_is_narrow(spark):
+    from pdf_parser_spark.operators.extraction import extract_turns
+
+    df = extract_turns(_materialized_turns(spark))
     plan = _plan(df)
     # exactly one extraction boundary node, fed by a projection of
     # exactly (conv_id, turn_idx, text) — role/tool/ts never cross
@@ -70,9 +78,8 @@ def test_dedup_kernel_width_is_explicit(spark):
     distinct set — serializing the CPU-heavy stage. A user-specified
     count is exempt from AQE coalescing."""
     from pdf_parser_spark.operators.extraction import extract_turns_dedup
-    from pdf_parser_spark.sources.turns import synthetic_turns
 
-    df = extract_turns_dedup(synthetic_turns(spark, 3))
+    df = extract_turns_dedup(_materialized_turns(spark))
     plan = _plan(df)
     sc = spark.sparkContext
     n_kernel = max(sc.defaultParallelism * 2,
