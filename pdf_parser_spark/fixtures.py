@@ -687,9 +687,8 @@ def pdf_encrypted_aes(font_extra: bytes = b""):
     /AESV2, the post-Acrobat-7 default) with an EMPTY user password:
     stream and string payloads are IV || CBC ciphertext with PKCS#7
     padding, per-object keys carry the 'sAlT' marker (§7.6.2).
-    Forward-encrypted here with the module's own FIPS-197-pinned
-    primitive; deterministic per-object IVs keep the fixture bytes
-    stable. ``font_extra`` is appended to the font dict verbatim
+    Forward-encrypted here with kernel/crypt.py's AES-128-CBC writer;
+    deterministic per-object IVs keep the fixture bytes stable. ``font_extra`` is appended to the font dict verbatim
     (not encrypted)."""
     import hashlib
 

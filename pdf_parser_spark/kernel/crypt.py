@@ -18,9 +18,13 @@ without any secret. Everything here is the published spec:
   Algorithm 1  per-object key        MD5(key + num<3,LE> + gen<2,LE>)
 
 V4 crypt filters are supported for /StdCF with /CFM /V2 (RC4) AND
-/CFM /AESV2 (AES-128-CBC, the post-Acrobat-7 default; pure-Python
-FIPS-197 below, pinned to the published C.1 vector), with /StmF and
+/CFM /AESV2 (AES-128-CBC, the post-Acrobat-7 default), with /StmF and
 /StrF naming /StdCF or /Identity (per-class plaintext pass-through).
+The AES block cipher is the ``cryptography`` package's; the PKCS#7
+padding and the IV layout are checked here. RC4 stays in Python: the
+package's ARC4 refuses 48-, 72- and 88..120-bit keys, which /Length
+48..120 documents produce (file keys of 5..16 bytes, object keys of
+min(n + 5, 16) bytes).
 R4 key derivation is R3's plus the /EncryptMetadata false marker
 bytes (§7.6.3.3 step f); AESV2 object keys append the 'sAlT' marker
 (§7.6.2) and payloads are IV || CBC ciphertext with PKCS#7 padding.
@@ -39,6 +43,8 @@ re-encrypted individually, §7.5.7).
 from __future__ import annotations
 
 import hashlib
+
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
 from .cos import (
     PdfArray, PdfDict, PdfIndirectObj, PdfInteger, PdfName, PdfString,
@@ -73,136 +79,16 @@ def rc4(key: bytes, data: bytes) -> bytes:
 
 
 # ---------------------------------------------------------- AES-128
-# Pure-Python FIPS-197 (for AESV2 crypt filters, §7.6.2). Tables are
-# GENERATED from the GF(2^8) definition at import (no copied constant
-# blobs); the cipher is pinned to the published FIPS-197 C.1 vector in
-# tests/test_crypt.py. Throughput is ~100 KB/s/core — a recovery path
-# for a small corpus fraction, not a hot loop.
-
-def _gf_mul(a: int, b: int) -> int:
-    r = 0
-    while b:
-        if b & 1:
-            r ^= a
-        a <<= 1
-        if a & 0x100:
-            a ^= 0x11B
-        b >>= 1
-    return r
-
-
-def _make_sbox() -> tuple[bytes, bytes]:
-    inv = [0] * 256
-    for x in range(1, 256):
-        for y in range(1, 256):
-            if _gf_mul(x, y) == 1:
-                inv[x] = y
-                break
-    sbox = bytearray(256)
-    for x in range(256):
-        b = inv[x]
-        s = 0x63
-        for i in range(8):
-            bit = ((b >> i) ^ (b >> ((i + 4) % 8)) ^ (b >> ((i + 5) % 8))
-                   ^ (b >> ((i + 6) % 8)) ^ (b >> ((i + 7) % 8))) & 1
-            s ^= bit << i
-        sbox[x] = s
-    invbox = bytearray(256)
-    for x in range(256):
-        invbox[sbox[x]] = x
-    return bytes(sbox), bytes(invbox)
-
-
-_SBOX, _INV_SBOX = _make_sbox()
-assert _SBOX[0] == 0x63 and _SBOX[1] == 0x7C  # FIPS-197 figure 7
-
-# per-multiplier GF(2^8) lookup tables for MixColumns (the _gf_mul
-# bit loop per state byte measured 25x slower than a table read)
-_MUL = {m: bytes(_gf_mul(x, m) for x in range(256))
-        for m in (1, 2, 3, 9, 11, 13, 14)}
-
-
-def _expand_key128(key: bytes) -> list[bytes]:
-    """11 round keys of 16 bytes each."""
-    w = [key[i:i + 4] for i in range(0, 16, 4)]
-    rcon = 1
-    for i in range(4, 44):
-        t = w[i - 1]
-        if i % 4 == 0:
-            t = bytes(_SBOX[b] for b in t[1:] + t[:1])
-            t = bytes([t[0] ^ rcon, t[1], t[2], t[3]])
-            rcon = _gf_mul(rcon, 2)
-        w.append(bytes(a ^ b for a, b in zip(w[i - 4], t)))
-    return [b"".join(w[r * 4:r * 4 + 4]) for r in range(11)]
-
-
-def _shift_rows(s: bytearray, inverse: bool) -> bytearray:
-    out = bytearray(16)
-    for c in range(4):
-        for r in range(4):
-            src = (c + (-r if inverse else r)) % 4
-            out[c * 4 + r] = s[src * 4 + r]
-    return out
-
-
-def _mix_columns(s: bytearray, inverse: bool) -> bytearray:
-    m = ((14, 11, 13, 9) if inverse else (2, 3, 1, 1))
-    t0, t1, t2, t3 = (_MUL[m[0]], _MUL[m[1]], _MUL[m[2]], _MUL[m[3]])
-    out = bytearray(16)
-    for c in range(0, 16, 4):
-        a0, a1, a2, a3 = s[c], s[c + 1], s[c + 2], s[c + 3]
-        out[c] = t0[a0] ^ t1[a1] ^ t2[a2] ^ t3[a3]
-        out[c + 1] = t3[a0] ^ t0[a1] ^ t1[a2] ^ t2[a3]
-        out[c + 2] = t2[a0] ^ t3[a1] ^ t0[a2] ^ t1[a3]
-        out[c + 3] = t1[a0] ^ t2[a1] ^ t3[a2] ^ t0[a3]
-    return out
-
-
-def _encrypt_block(rk: list[bytes], block: bytes) -> bytes:
-    s = bytearray(a ^ b for a, b in zip(block, rk[0]))
-    for rnd in range(1, 10):
-        s = bytearray(_SBOX[b] for b in s)
-        s = _shift_rows(s, False)
-        s = _mix_columns(s, False)
-        s = bytearray(a ^ b for a, b in zip(s, rk[rnd]))
-    s = bytearray(_SBOX[b] for b in s)
-    s = _shift_rows(s, False)
-    return bytes(a ^ b for a, b in zip(s, rk[10]))
-
-
-def _decrypt_block(rk: list[bytes], block: bytes) -> bytes:
-    s = bytearray(a ^ b for a, b in zip(block, rk[10]))
-    for rnd in range(9, 0, -1):
-        s = _shift_rows(s, True)
-        s = bytearray(_INV_SBOX[b] for b in s)
-        s = bytearray(a ^ b for a, b in zip(s, rk[rnd]))
-        s = _mix_columns(s, True)
-    s = _shift_rows(s, True)
-    s = bytearray(_INV_SBOX[b] for b in s)
-    return bytes(a ^ b for a, b in zip(s, rk[0]))
-
-
-def aes128_encrypt_block(key: bytes, block: bytes) -> bytes:
-    return _encrypt_block(_expand_key128(key), block)
-
-
-def aes128_decrypt_block(key: bytes, block: bytes) -> bytes:
-    return _decrypt_block(_expand_key128(key), block)
-
+# AESV2 crypt filters (§7.6.2): AES-128-CBC from the ``cryptography``
+# package's native cipher. This module keeps the PDF side: the
+# iv || ciphertext layout and the PKCS#7 pad with its strict strip.
 
 def aes128_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     """PKCS#7-padded CBC; returns iv || ciphertext (the §7.6.2 AESV2
     on-disk layout). Fixture/writer side."""
-    rk = _expand_key128(key)  # expand ONCE, not per block
     pad_n = 16 - len(data) % 16
-    data += bytes([pad_n]) * pad_n
-    out = bytearray(iv)
-    prev = iv
-    for i in range(0, len(data), 16):
-        blk = bytes(a ^ b for a, b in zip(data[i:i + 16], prev))
-        prev = _encrypt_block(rk, blk)
-        out += prev
-    return bytes(out)
+    enc = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
+    return iv + enc.update(data + bytes([pad_n]) * pad_n) + enc.finalize()
 
 
 def aes128_cbc_decrypt(key: bytes, iv_ct: bytes) -> bytes:
@@ -211,18 +97,12 @@ def aes128_cbc_decrypt(key: bytes, iv_ct: bytes) -> bytes:
     (extract_text surfaces it as a parse_error row)."""
     if len(iv_ct) < 32 or len(iv_ct) % 16:
         raise ValueError("AESV2 payload not block-aligned")
-    rk = _expand_key128(key)  # expand ONCE, not per block
-    prev, ct = iv_ct[:16], iv_ct[16:]
-    out = bytearray()
-    for i in range(0, len(ct), 16):
-        blk = ct[i:i + 16]
-        out += bytes(a ^ b
-                     for a, b in zip(_decrypt_block(rk, blk), prev))
-        prev = blk
+    dec = Cipher(algorithms.AES(key), modes.CBC(iv_ct[:16])).decryptor()
+    out = dec.update(iv_ct[16:]) + dec.finalize()
     pad_n = out[-1]
     if not 1 <= pad_n <= 16 or out[-pad_n:] != bytes([pad_n]) * pad_n:
         raise ValueError("AESV2 bad padding")
-    return bytes(out[:-pad_n])
+    return out[:-pad_n]
 
 
 class UnsupportedEncryption(Exception):

@@ -35,12 +35,10 @@ from typing import NamedTuple
 from .cos import (
     _CM_RE, _FallbackErr, TK_ARR_END, TK_ARR_START, TK_BOOL, TK_DICT_END,
     TK_DICT_START, TK_HEXSTR, TK_INLINE_DATA, TK_INT, TK_NAME, TK_NULL,
-    TK_OP, TK_REAL, TK_STR, LexerError, _fallback_error_kind,
+    TK_OP, TK_REAL, TK_STR, Lexer, LexerError, _fallback_error_kind,
     _inline_span, _scan_literal_string, find_ei, parse_hex_string,
     parse_name, tokenize,
 )
-
-_MEMO_MISS = object()
 
 Matrix = tuple  # (a, b, c, d, e, f) — PDF §8.3.3 row-major 3x2
 
@@ -393,10 +391,6 @@ class ContentInterpreter:
         operands_append = operands.append
         operands_clear = operands.clear
         relevant = _TEXT_OPS
-        # op-run memo: bytes -> decoded op if relevant, False if
-        # irrelevant (one dict probe then clear), None if it needs the
-        # out-of-line keyword/ID handling
-        op_memo: dict[bytes, object] = {}
 
         # peephole attempts only at op boundaries (start of stream or
         # just after an operator was dispatched) — mid-operand-run
@@ -484,36 +478,21 @@ class ContentInterpreter:
                     operands_append((TK_ARR_END, None))
                 continue
 
-            raw = m.group(9)
-            op = op_memo.get(raw, _MEMO_MISS)
-            if op is _MEMO_MISS:
-                dec = raw.decode("latin-1")
-                if dec in ("true", "false", "null") or \
-                        dec.startswith(("true", "false", "null")) or \
-                        dec == "ID":
-                    op = None          # out-of-line every time
-                else:
-                    op = dec if dec in relevant else False
-                op_memo[raw] = op
-            if op is False:            # irrelevant operator
-                operands_clear()
-                boundary = True
-                continue
-            if op is None:             # keyword / inline image
-                dec = raw.decode("latin-1")
-                if dec == "true":
+            op = m.group(9).decode("latin-1")
+            if op not in relevant:
+                if op == "true":
                     operands_append((TK_BOOL, True))
                     boundary = False
                     continue
-                if dec == "false":
+                if op == "false":
                     operands_append((TK_BOOL, False))
                     boundary = False
                     continue
-                if dec == "null":
+                if op == "null":
                     operands_append((TK_NULL, None))
                     boundary = False
                     continue
-                if dec == "ID":        # inline image data until 'EI'
+                if op == "ID":         # inline image data until 'EI'
                     k = find_ei(buf, i)
                     if k == -1:
                         raise LexerError("UnterminatedInlineImage", m.start(9))
@@ -524,8 +503,12 @@ class ContentInterpreter:
                     i = k + 2
                     boundary = False
                     continue
-                # keyword (true/false/null) followed by regular bytes
-                raise LexerError("UndefinedKeyword", m.start(9))
+                if op.startswith(("true", "false", "null")):
+                    # keyword followed by regular bytes
+                    raise LexerError("UndefinedKeyword", m.start(9))
+                operands_clear()       # irrelevant operator
+                boundary = True
+                continue
 
             boundary = True
             try:
@@ -568,6 +551,13 @@ class ContentInterpreter:
                             if float(ot[1]) <= TJ_SPACE_THRESHOLD:
                                 parts.append(" ")
                     emit("".join(parts))
+            except (TypeError, ValueError, OverflowError):
+                # an operand that is not a number (a name, an inline
+                # image's data); the token loop lexes the whole stream
+                # first, so a lexer error later in it wins
+                if i < n:
+                    Lexer(buf, 0, content_mode=True, pos=i).tokenize()
+                raise
             finally:
                 operands_clear()
         return self.spans

@@ -10,12 +10,11 @@ the in-repo T.81 decoder (``kernel/jpegdec.py``) on any payload with a
 JPEG SOI marker, reporting decoded width/height/channels
 (decoder='jpegdec'); ``with_jpeg_payloads`` plants deterministic
 encoder-built JPEG fixtures on a doc_id-keyed subset so the path is
-exercised (and oracle-able) without external data. PIL is probed next
-for other container formats; everything else falls back to the
-clearly-marked deterministic fake (header arithmetic on payload
-length + byte sum) because this container ships no image/audio
-libraries — swap that last resort for libvips/ffmpeg on a real
-cluster; nothing else changes.
+exercised (and oracle-able) without external data. Everything else
+falls back to the clearly-marked deterministic fake (header
+arithmetic on payload length + byte sum), since the package ships no
+image/audio libraries — swap that last resort for libvips/ffmpeg on a
+real cluster; nothing else changes.
 
 Scale: decode is embarrassingly parallel (no shuffle); batches cross
 the Arrow boundary once per ~256 rows (session.py caps batch rows
@@ -112,56 +111,22 @@ def _try_jpegdec(payload: bytes) -> dict | None:
 def _fake_decode(payload: bytes) -> dict:
     """STUB codec — deterministic arithmetic standing in for a real
     image decode. Replace with PIL/libvips on a real cluster."""
-    import numpy as np
     n = len(payload)
     return {
         "n_bytes": n,
         "width": 1 + n % 640,
         "height": 1 + (n * 31) % 480,
         "channels": 3,
-        "byte_sum": int(np.frombuffer(payload, dtype=np.uint8)
-                        .sum(dtype=np.int64) % 65536),
+        "byte_sum": sum(payload) % 65536,
         "decoder": "fake",
     }
-
-
-_PIL_CHECKED: list = []  # [module] once probed (failed imports are not
-# cached by Python — a per-row try costs a full sys.path scan each time)
-
-
-def _pil():
-    if not _PIL_CHECKED:
-        try:
-            from PIL import Image
-            _PIL_CHECKED.append(Image)
-        except ImportError:
-            _PIL_CHECKED.append(None)
-    return _PIL_CHECKED[0]
-
-
-def _try_real_decode(payload: bytes) -> dict | None:
-    """Real decoder path, gated behind a one-time import probe."""
-    Image = _pil()
-    if Image is None:
-        return None
-    import io
-    try:
-        with Image.open(io.BytesIO(payload)) as im:
-            return {"n_bytes": len(payload), "width": im.width,
-                    "height": im.height,
-                    "channels": len(im.getbands()),
-                    "byte_sum": sum(payload) % 65536,
-                    "decoder": "pil"}
-    except Exception:
-        return None
 
 
 def _decode_meta_columns(batch: pa.RecordBatch) -> list:
     metas = []
     for payload in batch.column("payload").to_pylist():
         data = payload or b""
-        metas.append(_try_jpegdec(data) or _try_real_decode(data)
-                     or _fake_decode(data))
+        metas.append(_try_jpegdec(data) or _fake_decode(data))
     return [batch.column("doc_id"), batch.column("modality")] + [
         [m[k] for m in metas] for k in DECODE_META_SCHEMA.names[2:]]
 

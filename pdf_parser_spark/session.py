@@ -6,17 +6,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Turn rows carry whole PDFs (fat rows), so the default 10k-row Arrow
+# batches would balloon Python-worker memory (SURVEY.md §4.2 "Arrow
+# batch shaping").
+ARROW_BATCH_ROWS = 256
+
 
 def get_spark(app_name: str = "pdf_parser_spark", cpus: int | None = None,
-              shuffle_partitions: int | None = None,
-              arrow_batch_rows: int = 256) -> SparkSession:
+              shuffle_partitions: int | None = None) -> SparkSession:
     """Build a local SparkSession.
 
     - ``spark.sql.shuffle.partitions`` ~ cores (not the 200 default).
     - AQE on: runtime coalescing + skew-join splitting.
-    - Arrow batches capped at ``arrow_batch_rows``: turn rows carry whole
-      PDFs (fat rows), so the default 10k-row batches would balloon
-      Python-worker memory (SURVEY.md §4.2 "Arrow batch shaping").
+    - Arrow batches capped at ``ARROW_BATCH_ROWS``.
     - UTC session TZ so DuckDB oracle comparisons are stable.
     """
     if cpus is None:
@@ -34,7 +36,7 @@ def get_spark(app_name: str = "pdf_parser_spark", cpus: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(arrow_batch_rows))
+                str(ARROW_BATCH_ROWS))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         # iterative operators (duplicate_components) checkpoint every

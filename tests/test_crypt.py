@@ -168,17 +168,18 @@ def test_aesv2_empty_string_decrypts_to_empty():
 def test_aes128_fips197_vector():
     """FIPS-197 Appendix C.1 — the AES primitive is pinned to the
     published vector independently of the fixtures (which
-    forward-encrypt with the same primitive)."""
+    forward-encrypt with the same primitive). Under a zero IV the
+    first CBC block is the bare block cipher's output."""
     from pdf_parser_spark.kernel.crypt import (
         aes128_cbc_decrypt, aes128_cbc_encrypt,
-        aes128_decrypt_block, aes128_encrypt_block,
     )
 
     key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-    ct = aes128_encrypt_block(key, pt)
-    assert ct.hex() == "69c4e0d86a7b0430d8cdb78070b4c55a"
-    assert aes128_decrypt_block(key, ct) == pt
+    out = aes128_cbc_encrypt(key, bytes(16), pt)
+    assert out[:16] == bytes(16)
+    assert out[16:32].hex() == "69c4e0d86a7b0430d8cdb78070b4c55a"
+    assert aes128_cbc_decrypt(key, out) == pt
     iv = bytes(range(16))
     for n in (0, 1, 15, 16, 17, 100):
         data = bytes(range(200))[:n]
@@ -192,12 +193,12 @@ def test_aes128_fips197_vector():
 
 
 def test_aes128_cbc_matches_cryptography_library():
-    """Seeded differential of the from-scratch AES-128 against the
-    ``cryptography`` package: block encrypt/decrypt, PKCS#7-padded CBC
-    encryption (iv || ciphertext, the AESV2 layout) byte for byte,
-    and decryption of arbitrary block-aligned payloads, where a
-    bad-padding ValueError must coincide with the library's unpadder
-    rejecting the same plaintext."""
+    """Seeded differential of the module's AESV2 layer against the
+    ``cryptography`` package's own PKCS#7 padder: CBC encryption
+    (iv || ciphertext, the AESV2 layout) byte for byte, and decryption
+    of arbitrary block-aligned payloads, where a bad-padding
+    ValueError must coincide with the library's unpadder rejecting the
+    same plaintext."""
     import random
 
     from cryptography.hazmat.primitives import padding
@@ -207,19 +208,12 @@ def test_aes128_cbc_matches_cryptography_library():
 
     from pdf_parser_spark.kernel.crypt import (
         aes128_cbc_decrypt, aes128_cbc_encrypt,
-        aes128_decrypt_block, aes128_encrypt_block,
     )
 
     rng = random.Random(0xAE5)
     for trial in range(48):
         key = rng.randbytes(16)
         iv = rng.randbytes(16)
-        block = rng.randbytes(16)
-        ecb = Cipher(algorithms.AES(key), modes.ECB())
-        lib_block = ecb.encryptor().update(block)
-        assert aes128_encrypt_block(key, block) == lib_block, trial
-        assert aes128_decrypt_block(key, block) == \
-            ecb.decryptor().update(block), trial
 
         data = rng.randbytes(rng.choice([0, 1, 15, 16, 17, 31, 32,
                                          rng.randrange(200)]))
@@ -309,6 +303,56 @@ def test_v4_identity_classes_pass_plaintext_through():
     res = extract_text(pdf)
     assert res["parse_error"] is None
     assert res["text"] == "identity plaintext"
+
+
+def test_rc4_length_56_uses_12_byte_object_keys():
+    """V2/R3 with /Length 56: a 7-byte file key and 12-byte (96-bit)
+    object keys, a key size that native ARC4 implementations such as
+    the ``cryptography`` package's refuse. The Python RC4 decrypts
+    it."""
+    import hashlib
+
+    from pdf_parser_spark.kernel.cos import PdfIndirectRef, PdfString
+    from pdf_parser_spark.kernel.crypt import PAD, rc4
+    from pdf_parser_spark.kernel.doc import PdfDocument
+
+    o = bytes(range(32))
+    p = -44
+    id0 = bytes.fromhex("0f1e2d3c4b5a69788796a5b4c3d2e1f0")
+    key = hashlib.md5(PAD + o + (p & 0xFFFFFFFF).to_bytes(4, "little")
+                      + id0).digest()
+    for _ in range(50):
+        key = hashlib.md5(key[:7]).digest()
+    key = key[:7]
+    step = hashlib.md5(PAD + id0).digest()
+    for i in range(20):
+        step = rc4(bytes(bb ^ i for bb in key), step)
+    u = step + bytes(16)
+
+    def objkey(num: int) -> bytes:
+        return hashlib.md5(key + num.to_bytes(3, "little")
+                           + bytes(2)).digest()[:12]
+
+    b = PdfBuilder()
+    _scaffold(b)
+    content = b"BT /F1 12 Tf 72 720 Td " + lit("fifty-six bits") \
+        + b" Tj ET"
+    b.add_stream(4, b"", rc4(objkey(4), content))
+    b.add(8, b"<" + rc4(objkey(8), b"plain string").hex().encode() + b">")
+    b.add(9, b"<</Filter /Standard /V 2 /R 3 /Length 56"
+             b" /O <" + o.hex().encode() + b"> /U <" + u.hex().encode()
+             + b"> /P -44>>")
+    pdf = b.build(trailer_extra=b" /Encrypt 9 0 R /ID [<"
+                                + id0.hex().encode() + b"> <"
+                                + id0.hex().encode() + b">]")
+    res = extract_text(pdf)
+    assert res["parse_error"] is None
+    assert res["text"] == "fifty-six bits"
+    doc = PdfDocument(pdf)
+    assert len(doc._crypt.object_key(4, 0)) == 12
+    s = doc.get_object(PdfIndirectRef(8, 0))
+    assert isinstance(s, PdfString)
+    assert s.value == b"plain string"
 
 
 def test_tampered_u_entry_rejected():

@@ -371,6 +371,25 @@ def test_extract_dedup_keeps_null_text_turns(spark):
     assert dedup.exceptAll(direct).count() == 0
 
 
+def test_encrypted_turns_decrypt_in_workers(spark):
+    """The decryptor runs in real Python workers, AES dependency
+    included: the RC4 (R2, R3, R4) and AESV2 fixtures extract to their
+    golden text through ``extract_turns``."""
+    from pdf_parser_spark.fixtures import (
+        pdf_encrypted_aes, pdf_encrypted_rc4,
+    )
+
+    docs = [pdf_encrypted_rc4(r) for r in (2, 3, 4)] + [pdf_encrypted_aes()]
+    turns = spark.createDataFrame(
+        [("enc", i, pdf.decode("latin-1")) for i, (pdf, _) in
+         enumerate(docs)],
+        "conv_id string, turn_idx int, text string")
+    got = {r.turn_idx: (r.text, r.parse_error)
+           for r in extract_turns(turns).collect()}
+    assert got == {i: (golden["text"], None)
+                   for i, (_, golden) in enumerate(docs)}
+
+
 def test_worker_task_leaves_no_zip_finders(spark):
     """In a real Python worker, which imports pyspark from
     ``pyspark.zip``, the drained kernel leaves no zip import finder for

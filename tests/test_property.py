@@ -320,6 +320,8 @@ def test_fused_interpreter_matches_token_loop_on_random_bytes(data):
      # inline image: its dict and data stay operands until the next op
      b"BI /W 1 /H 1 ID x EI"]),
     min_size=0, max_size=30))
+# a non-number operand fails TD, but the later lexer error wins
+@example([b"BI /W 1 /H 1 ID x EI", b"5 TD", b"1.2.3 4 Td"])
 def test_fused_interpreter_matches_token_loop(parts):
     """Differential oracle: ContentInterpreter.run (fused master-regex
     scan) vs ``reference_interpret`` over random operator sequences.
