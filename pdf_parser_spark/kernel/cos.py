@@ -192,8 +192,12 @@ def _inline_span(buf: bytes, after_id: int, ei: int) -> tuple[int, int]:
 # Precompiled scanners for the hot paths (byte-identical to the
 # byte-at-a-time loops they replace):
 # whitespace {0,9,12,32} + EOLs (\r\n|\r|\n) + comments (% to EOL),
-# any interleaving, in one match
-_SKIP_RE = re.compile(rb"(?:[\x00\t\x0c ]|\r\n?|\n|%[^\r\n]*)+")
+# any interleaving, in one match. Every leading skip group is possessive
+# (`++`, `*+`): nothing after it can start with a skipped byte, so the
+# match is the same, and the engine keeps no backtracking state per
+# repetition (a backtracking group held ~120 bytes per byte of a long
+# whitespace run: a 10 MB run peaked at 1.2 GB)
+_SKIP_RE = re.compile(rb"(?:[\x00\t\x0c ]|\r\n?|\n|%[^\r\n]*)++")
 _NUM_RE = re.compile(rb"[0-9+\-.]+")
 _REGULAR_RUN_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
 _REGULAR_RUN1_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
@@ -209,7 +213,7 @@ _STR_SPECIAL_RE = re.compile(rb"[()\\]")
 # _scan_literal_string / _fallback_error_kind, which keep
 # Lexer.tokenize's semantics and error offsets.
 _CM_RE = re.compile(
-    rb"(?:[\x00\t\x0c ]|\r\n?|\n|%[^\r\n]*)*"         # leading skip
+    rb"(?:[\x00\t\x0c ]|\r\n?|\n|%[^\r\n]*)*+"        # leading skip
     rb"(?:([0-9+\-.]+)"                               # 1 number
     rb"|(/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"           # 2 name (incl /)
     rb"|(<<)"                                         # 3 dict start
@@ -228,7 +232,7 @@ _CM_RE = re.compile(
 # validation for endobj/null/true/false happens in the handler). No
 # operator-run alternative: anything else bails to Lexer+Parser.
 _OM_RE = re.compile(
-    rb"(?:[\x00\t\x0c ]|\r\n?|\n|%[^\r\n]*)*"         # leading skip
+    rb"(?:[\x00\t\x0c ]|\r\n?|\n|%[^\r\n]*)*+"        # leading skip
     rb"(?:([0-9+\-.]+)"                               # 1 number
     rb"|(/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"           # 2 name (incl /)
     rb"|(<<)"                                         # 3 dict start

@@ -319,21 +319,23 @@ _EMPTY_FONT = FontInfo(name="")
 # the end of its line: the master regex never backtracks into a
 # comment, but the peephole must still match Td/Tj after it, so a bare
 # `%[^\r\n]*` would let `% (old) Tj` match as `%` + `(old) Tj` and
-# run a commented-out operator. Anything else falls back to the
-# per-token path byte-identically — a peephole miss costs one failed
-# match only at op boundaries (`boundary` flag in run()); a peephole
-# hit cannot change semantics because it appends-then-consumes exactly
-# the operands the dispatch ladder would have used and clears the
-# operand buffer exactly like the ladder's finally-clause.
+# run a commented-out operator. Every skip group is possessive, as in
+# cos._SKIP_RE, so a long whitespace run costs no backtracking stack.
+# Anything else falls back to the per-token path byte-identically —
+# a peephole miss costs one failed match only at op boundaries
+# (`boundary` flag in run()); a peephole hit cannot change semantics
+# because it appends-then-consumes exactly the operands the dispatch
+# ladder would have used and clears the operand buffer exactly like
+# the ladder's finally-clause.
 # Differentially pinned by test_property.py's fused-vs-token-loop
 # oracle (peep-adversarial shapes included in the sampled alphabet).
 _PEEP_WS = rb"(?:[\x00\t\x0c ]|\r\n?|\n|%[^\r\n]*(?![^\r\n]))"
 _PEEP_NUM = rb"[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)"
 _PEEP_RE = re.compile(
-    _PEEP_WS + rb"*"
-    rb"(?:(" + _PEEP_NUM + rb")" + _PEEP_WS + rb"+"
-    rb"(" + _PEEP_NUM + rb")" + _PEEP_WS + rb"+Td"
-    rb"|\(([^()\\]*)\)" + _PEEP_WS + rb"*Tj"
+    _PEEP_WS + rb"*+"
+    rb"(?:(" + _PEEP_NUM + rb")" + _PEEP_WS + rb"++"
+    rb"(" + _PEEP_NUM + rb")" + _PEEP_WS + rb"++Td"
+    rb"|\(([^()\\]*)\)" + _PEEP_WS + rb"*+Tj"
     rb")(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"
 )
 

@@ -23,6 +23,12 @@ Scale design (100 TB / 10^12 turns):
   boundary; everything else stays JVM-side and is re-joined by the
   caller if needed
 - Arrow batch size is capped in session.py because rows are PDF-fat
+- duplicates within a batch: each batch runs the kernel once per
+  distinct payload (``_distinct_payloads``, exact string equality) and
+  hands that result to every row that carries it. It is always on and
+  keeps nothing past the batch, so it covers only payloads that repeat
+  within one batch; ``extract_turns_dedup`` covers duplicates spread
+  across the whole corpus, for the price of a digest shuffle and a join
 - a Python task's fixed setup cost was mostly zip import finders
   re-reading ``pyspark.zip`` (78-154 ms a task, paid once per wave of
   ``ExtractionJob.run``'s kernel tasks); ``map_batches``, the
@@ -114,33 +120,47 @@ def map_batches(df: DataFrame,
     return df.mapInArrow(kernel, schema=schema)
 
 
-def _payloads(batch: pa.RecordBatch) -> Iterator[bytes]:
-    """Each row's PDF bytes. The ``text`` column carries them as a
-    latin-1 string; NULL or non-latin-1 text yields ``b""``."""
-    for raw in batch.column("text").to_pylist():
-        try:
-            data = raw.encode("latin-1") if raw is not None else b""
-        except UnicodeEncodeError:
-            data = b""
-        yield data
+def _distinct_payloads(batch: pa.RecordBatch) -> tuple[list, list[int]]:
+    """The batch's distinct ``text`` values in first-seen order, and
+    for each row the index of its value in that list. Rows match by
+    exact string equality (a dict keyed by the ``str`` itself), so a
+    hash collision can never give a row another payload's result. The
+    list holds the ``str`` objects of ``to_pylist()``; nothing outlives
+    the batch."""
+    index: dict = {}
+    rows = [index.setdefault(raw, len(index))
+            for raw in batch.column("text").to_pylist()]
+    return list(index), rows
+
+
+def _payload_bytes(raw: str | None) -> bytes:
+    """A row's PDF bytes. The ``text`` column carries them as a latin-1
+    string; NULL or non-latin-1 text yields ``b""``."""
+    try:
+        return raw.encode("latin-1") if raw is not None else b""
+    except UnicodeEncodeError:
+        return b""
 
 
 def _extract_columns(batch: pa.RecordBatch) -> list:
-    """Text kernel: one ``extract_text`` result per row; each row's
+    """Text kernel: one ``extract_text`` result per distinct payload of
+    the batch, each handed to every row that carries it; a payload's
     span tuples become its ``spans`` list."""
     from pdf_parser_spark.kernel.extract import extract_text
 
+    texts, rows = _distinct_payloads(batch)
     results = []
-    for data in _payloads(batch):
+    for raw in texts:
+        data = _payload_bytes(raw)
         res = extract_text(data) if data else {
             "text": "", "spans": [], "n_pages": 0, "n_objects": 0,
             "bytes": 0, "parse_error": "EmptyOrNonLatin1Payload"}
-        # a one-row Arrow list at once, so the row's TextSpans are freed:
-        # the cyclic GC never untracks a tuple subclass, and a batch of
-        # them alive cost ~8% more kernel CPU on flate_distinct
+        # a one-row Arrow list at once, so the payload's TextSpans are
+        # freed: the cyclic GC never untracks a tuple subclass, and a
+        # batch of them alive cost ~8% more kernel CPU on flate_distinct
         res["spans"] = pa.array([res["spans"]], _SPANS_ARROW)
         results.append(res)
-    columns = {k: [res[k] for res in results]
+    columns = {k: [results[i][k] for i in rows]
                for k in EXTRACT_SCHEMA.names[2:]}
     columns["spans"] = pa.chunked_array(columns["spans"],
                                         _SPANS_ARROW).combine_chunks()
@@ -167,15 +187,15 @@ def _image_columns(batch: pa.RecordBatch) -> list:
     made deterministic by object number, SURVEY §2.7.4)."""
     from pdf_parser_spark.kernel.extract import extract_text
 
-    rows = []
-    for cid, t, data in zip(batch.column("conv_id").to_pylist(),
-                            batch.column("turn_idx").to_pylist(),
-                            _payloads(batch)):
-        images = extract_text(data, with_images=True)["images"] if data \
-            else []
-        rows += [(cid, t, img) for img in images]
-    return [[cid for cid, _t, _img in rows], [t for _cid, t, _img in rows]] \
-        + [[img[k] for _cid, _t, img in rows] for k in IMAGE_SCHEMA.names[2:]]
+    texts, rows = _distinct_payloads(batch)
+    images = [extract_text(data, with_images=True)["images"]
+              if (data := _payload_bytes(raw)) else [] for raw in texts]
+    out = []
+    for cid, t, i in zip(batch.column("conv_id").to_pylist(),
+                         batch.column("turn_idx").to_pylist(), rows):
+        out += [(cid, t, img) for img in images[i]]
+    return [[cid for cid, _t, _img in out], [t for _cid, t, _img in out]] \
+        + [[img[k] for _cid, _t, img in out] for k in IMAGE_SCHEMA.names[2:]]
 
 
 def extract_images(turns: DataFrame) -> DataFrame:
@@ -231,6 +251,11 @@ def encode_images_jpeg(images: DataFrame) -> DataFrame:
 def extract_turns_dedup(turns: DataFrame) -> DataFrame:
     """Distinct-document extraction: hash the payload, run the kernel
     once per DISTINCT document, then join results back to every turn.
+
+    Which duplicates it covers: ``extract_turns`` already runs the
+    kernel once per distinct payload of each Arrow batch, so this
+    lever saves kernel work only on duplicates that land in different
+    batches, i.e. spread across the corpus rather than clustered.
 
     At 10^12-turn scale duplicated payloads are the norm (retried
     tool calls, forwarded transcripts, boilerplate attachments); the

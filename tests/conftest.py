@@ -1,12 +1,14 @@
 import importlib
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 class _CaptureKernel:
@@ -31,6 +33,22 @@ class _CaptureKernel:
 @pytest.fixture
 def capture_kernel():
     return _CaptureKernel()
+
+
+@pytest.fixture
+def peak_rss_mb():
+    """``peak_rss_mb(code)`` runs ``code`` in a fresh ``sys.executable``
+    with the repository importable and returns that process's peak RSS
+    (``ru_maxrss``) in MB. The code must not raise."""
+    def measure(code: str) -> float:
+        probe = (code + "\nimport resource\n"
+                 "print(resource.getrusage(resource.RUSAGE_SELF).ru_maxrss)")
+        out = subprocess.run([sys.executable, "-c", probe], cwd=REPO,
+                             capture_output=True, text=True)
+        assert out.returncode == 0, out.stderr
+        return int(out.stdout.split()[-1]) / 1024   # Linux: KiB
+
+    return measure
 
 
 @pytest.fixture(scope="session")

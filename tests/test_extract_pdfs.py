@@ -444,3 +444,77 @@ def test_kernel_drops_zip_import_finders(cached_zip_finder, capture_kernel):
 
     assert out[0].column("text").to_pylist() == [golden["text"]]
     cached_zip_finder()
+
+
+def _turns_batch(texts):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_pydict({
+        "conv_id": [f"c{i}" for i in range(len(texts))],
+        "turn_idx": list(range(len(texts))), "text": texts})
+
+
+def test_batch_kernel_rows_equal_one_row_batches(capture_kernel):
+    """Rows that share a payload in one batch get the same rows as each
+    payload extracted in a batch of its own, NULL, empty and
+    non-latin-1 text included."""
+    from pdf_parser_spark.operators.extraction import extract_turns
+
+    a = get_fixture("pdf-flate-text")[0].decode("latin-1")
+    b = get_fixture("pdf-tj-array")[0].decode("latin-1")
+    broken = get_fixture("pdf-broken-truncated")[0].decode("latin-1")
+    texts = [a, b, a, None, "", "caf€", broken, b, a, None, broken]
+    kernel = extract_turns(capture_kernel)
+
+    [out] = kernel(iter([_turns_batch(texts)]))
+    single = [row for i in range(len(texts))
+              for ob in kernel(iter([_turns_batch(texts).slice(i, 1)]))
+              for row in ob.to_pylist()]
+
+    assert out.to_pylist() == single
+    assert [r["parse_error"] for r in single[3:6]] == \
+        ["EmptyOrNonLatin1Payload"] * 3
+    assert single[0]["spans"] and single[0]["text"] == single[8]["text"]
+
+
+def test_batch_kernel_runs_once_per_distinct_payload(capture_kernel,
+                                                     monkeypatch):
+    """Six rows over two distinct payloads call ``extract_text`` twice,
+    and every row still gets its payload's result."""
+    from pdf_parser_spark.kernel import extract
+    from pdf_parser_spark.operators.extraction import extract_turns
+
+    calls = []
+
+    def counting(data, **kw):
+        calls.append(data)
+        return extract_text(data, **kw)
+
+    monkeypatch.setattr(extract, "extract_text", counting)
+    pdfs = [get_fixture(f) for f in ("pdf-min-text", "pdf-multipage")]
+    texts = [pdfs[i][0].decode("latin-1") for i in (0, 1, 1, 0, 0, 1)]
+
+    [out] = extract_turns(capture_kernel)(iter([_turns_batch(texts)]))
+
+    assert sorted(calls) == sorted(pdf for pdf, _golden in pdfs)
+    assert out.column("text").to_pylist() == \
+        [pdfs[i][1]["text"] for i in (0, 1, 1, 0, 0, 1)]
+
+
+def test_image_kernel_gives_every_row_its_images(capture_kernel):
+    """A payload repeated in one batch yields its image rows once for
+    each turn that carries it, keyed by that turn."""
+    from pdf_parser_spark.operators.extraction import extract_images
+
+    pdf = get_fixture("pdf-image-flate")[0].decode("latin-1")
+    kernel = extract_images(capture_kernel)
+
+    [one] = kernel(iter([_turns_batch([pdf])]))
+    [out] = kernel(iter([_turns_batch([pdf, None, pdf, pdf])]))
+
+    images = [{k: v for k, v in r.items() if k not in ("conv_id", "turn_idx")}
+              for r in one.to_pylist()]
+    assert images
+    assert out.to_pylist() == [
+        {"conv_id": f"c{i}", "turn_idx": i, **img}
+        for i in (0, 2, 3) for img in images]

@@ -175,3 +175,25 @@ def test_hostile_number_operand_yields_error_row(ops, capture_kernel):
     assert len(rows) == 1
     assert rows[0]["parse_error"] is not None
     assert rows[0]["parse_error"].startswith("OverflowError")
+
+
+@pytest.mark.parametrize("shape", [
+    "(a) Tj{ws}(b) Tj", "(a) Tj (b){ws}Tj",
+    "(a) Tj 0{ws}0 Td (b) Tj", "(a) Tj 0 0{ws}Td (b) Tj",
+], ids=["before_operand", "before_Tj", "between_operands", "before_Td"])
+def test_whitespace_run_memory_is_bounded(shape, peak_rss_mb):
+    """A 10 MB whitespace run in a content stream extracts in bounded
+    memory. A backtracking skip group in the content scanners kept
+    state per repeated byte and peaked at about 1.2 GB here."""
+    code = f"""
+from pdf_parser_spark.fixtures import PdfBuilder, _scaffold
+from pdf_parser_spark.kernel.extract import extract_text
+b = PdfBuilder()
+_scaffold(b)
+ops = {shape!r}.format(ws=" " * 10_000_000).encode("latin-1")
+b.add_stream(4, b"", b"BT /F1 12 Tf 72 720 Td " + ops + b" ET")
+res = extract_text(b.build())
+assert res["text"] == "ab", res["text"]
+assert res["parse_error"] is None, res["parse_error"]
+"""
+    assert peak_rss_mb(code) < 300
